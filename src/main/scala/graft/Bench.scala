@@ -12,9 +12,21 @@ import org.apache.spark.sql.SparkSession
   * query.
   */
 object Bench {
+  /** A `SPARK_GRAFT_BENCH_TAG` value, if it is safe inside the file name
+    * `BENCH_full_<tag>.json`: letters, digits, '.', '_' and '-' only, so
+    * no tag can name a path outside the working directory.
+    */
+  def checkTag(tag: String): String = {
+    require(tag.matches("[A-Za-z0-9._-]+"),
+      s"SPARK_GRAFT_BENCH_TAG must match ^[A-Za-z0-9._-]+$$ (it names BENCH_full_<tag>.json), got '$tag'")
+    tag
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Checked before any work: the tag becomes part of a file name.
+    val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG").map(checkTag)
     // A/B'd in round 7 (BENCH_AB_r7.json): round 6 made ContextCleaner
     // removals synchronous session-wide, reasoning that async cleanup of
     // PRIOR queries' dead state (broadcast blocks, shuffle files) was
@@ -158,7 +170,7 @@ object Bench {
     // stable "previous" artifact — a tagged copy committed at end of
     // round preserves the full per-query map per round. The driver
     // never sets the tag, so its runs are byte-identical to before.
-    sys.env.get("SPARK_GRAFT_BENCH_TAG").foreach { tag =>
+    tag.foreach { tag =>
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"BENCH_full_$tag.json"), fullJson)
     }

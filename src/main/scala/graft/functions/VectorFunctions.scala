@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqEncode}
 
 /** Vector math over `array<float>` embedding columns — the compute core
   * of the embeddinghub surface (reference:
@@ -84,4 +87,28 @@ object VectorFunctions {
     val d = zip_with(asDouble(a), asDouble(b), (x, y) => x - y)
     aggregate(d, lit(0.0), (acc, x) => acc + x * x)
   }
+
+  // Nearest-centroid kernels (graft.plans.CentroidExpressions): each
+  // holds its driver-collected centroid or codebook matrix, so they are
+  // built from Scala, not registered as SQL functions.
+
+  /** Id of the centroid most cosine-similar to `vec`. */
+  def nearestCentroidId(vec: Column, cents: CentroidTable): Column =
+    column(NearestCentroid(expression(vec), cents))
+
+  /** Ids of the `n` centroids most cosine-similar to `vec`, best first. */
+  def nearestCentroidIds(vec: Column, cents: CentroidTable, n: Int): Column =
+    column(NearestCentroids(expression(vec), cents, n))
+
+  /** `vec - centroid(cell)` as array<double> (the IVF residual). */
+  def centroidResidual(vec: Column, cell: Column, cents: CentroidTable): Column =
+    column(CentroidResidual(expression(vec), expression(cell), cents))
+
+  /** PQ codes of `vec`: per subspace, the nearest sub-centroid's id. */
+  def pqEncode(vec: Column, codebook: PqCodebook, dsub: Int): Column =
+    column(PqEncode(expression(vec), codebook, dsub))
+
+  /** ADC lookup tables of `vec` (m x ksub squared L2), the input of [[adc]]. */
+  def adcTables(vec: Column, codebook: PqCodebook, dsub: Int): Column =
+    column(AdcTables(expression(vec), codebook, dsub))
 }

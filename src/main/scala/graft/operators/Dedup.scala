@@ -28,20 +28,6 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature from a *materialized* shingle-hash array: for
-    * seed s, min over shingles of xxhash64(s || shingleHash). Keeping
-    * the shingle array in its own projection matters: higher-order
-    * lambdas re-evaluate captured expression trees per element, so an
-    * inlined shingle expression would be recomputed numHashes times
-    * per row (measured 10x slowdown).
-    */
-  def minhashSignature(shingleHashes: Column, numHashes: Int): Column = {
-    val seeds = sequence(lit(0), lit(numHashes - 1))
-    transform(
-      seeds,
-      s => array_min(transform(shingleHashes, h => xxhash64(s, h))))
-  }
-
   /** MinHash + LSH banding: signature of `bands*rowsPerBand` hashes,
     * band hash = xxhash64 over its rows; docs sharing any band hash are
     * candidates. Returns distinct candidate pairs (a < b) with the
@@ -230,6 +216,7 @@ object Dedup {
       lanes: Int = 16
   ): DataFrame = {
     require(lanes % 2 == 0, s"lanes must be even (two lanes per md5), got $lanes")
+    require(lanes <= 200, s"lanes must be <= 200 (seed groups are two-digit), got $lanes")
     val sh = docs
       .select(
         col(groupCol).as("grp"),
@@ -522,8 +509,11 @@ object Dedup {
     * hamming distance, blocked on 16-bit bands (a pair within hamming
     * distance 3 shares at least one of 4 bands exactly).
     */
-  /** SimHash bit-counter step over a materialized token-hash array (see
-    * minhashSignature for why the array must be pre-projected).
+  /** SimHash bit-counter step over a materialized token-hash array.
+    * The array must come from its own projection: higher-order lambdas
+    * re-evaluate a captured expression tree per element, so an inlined
+    * tokenizer would be recomputed 64 times per row (a 10x slowdown
+    * measured on the MinHash signature of the same shape).
     */
   def simhashFromHashes(hashes: Column): Column = {
     // bit i of the simhash = 1 iff sum_t(bit_i(hash(t)) ? 1 : -1) > 0

@@ -532,8 +532,7 @@ object Graph {
     def cos(a: Column, b: Column) = graft.functions.VectorFunctions.cosine(a, b)
     (sub: DataFrame, candK: Int) => {
       graft.plans.GraftFunctions.register(sub.sparkSession)
-      // cell-keyed corpus via the carried-vector assignment (see
-      // Similarity.nearestCentroidWithVec) — no corpus re-join (r11)
+      // cell-keyed corpus: one narrow assignment projection
       val corpusCells = Similarity.nearestCentroidWithVec(sub, keyCol, vecCol, cents)
         .select(
           col("vec_id").as("neighbor_id"), col("v").as("n_vec"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.plans.{CentroidTable, PqCodebook}
 
 /** Product quantization (PQ) — the published compressed-index scale
   * path for billion-scale vector search (Jégou, Douze, Schmid:
@@ -25,11 +26,12 @@ import graft.functions.VectorFunctions
   *    sum_j table[j][code_j(x)] — table lookups instead of float
   *    kernels over the full vectors.
   *
-  * Every stage is a declarative DataFrame plan: codebooks are a
-  * (subspace, cell, dim) aggregation, encoding is a broadcast join +
-  * argmin, and the ADC scan is a narrow projection over the encoded
-  * corpus feeding the bounded-heap top-k aggregate — no shuffle
-  * carries more than (partitions x k) rows per query.
+  * Codebooks are a (subspace, cell, dim) aggregation; encoding and the
+  * per-query ADC tables are narrow projections through native kernels
+  * that hold the collected codebook (graft.plans.PqEncode / AdcTables);
+  * the ADC scan is a narrow projection over the encoded corpus feeding
+  * the bounded-heap top-k aggregate — no shuffle carries more than
+  * (partitions x k) rows per query.
   *
   * Determinism: seeds are the ksub smallest keys' subvectors,
   * assignment ties break toward the smaller centroid id, and the ADC
@@ -60,11 +62,12 @@ object Quantization {
   }
 
   /** Per-subspace Lloyd k-means codebooks: (subspace, centroid_id,
-    * centroid). All m subspaces iterate together — each iteration is
-    * ONE broadcast of the m*ksub sub-centroids + one scan + one
-    * (subspace, cell, dim) aggregation, regardless of m. Final ids are
-    * re-densified to 0..n-1 per subspace (Lloyd can empty a cell), so
-    * codes index positionally into ADC tables.
+    * centroid). All m subspaces iterate together — each iteration
+    * collects the m*ksub sub-centroids once, encodes every vector with
+    * the native PQ kernel (a narrow projection) and runs one (subspace,
+    * cell, dim) aggregation, regardless of m. Final ids are re-densified
+    * to 0..n-1 per subspace (Lloyd can empty a cell), so codes index
+    * positionally into ADC tables.
     */
   def pqCodebooks(
       space: DataFrame,
@@ -92,13 +95,20 @@ object Quantization {
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("subspace")).orderBy(col("vec_id"))) - 1).cast("int"))
       .select(col("subspace"), col("centroid_id"), col("centroid"))
+    val dsub = dims / m
     for (_ <- 0 until iterations) {
-      // E-step carries the subvector through the argmin group (see
-      // [[assignCellsWithVec]]) so the M-step reads it directly — the
-      // old sub ⋈ assigned re-join per iteration is gone (r11
-      // optimization; identical assignment and means).
-      cents = assignCellsWithVec(sub, cents)
-        .select(col("subspace"), col("cell"), posexplode(col("subvec")).as(Seq("pos", "x")))
+      // E-step: codes per vector, exploded with each code's subvector
+      // for the M-step mean.
+      val codebook = PqCodebook.collect(cents, m)
+      cents = space
+        .select(
+          posexplode(VectorFunctions.pqEncode(col(vecCol), codebook, dsub))
+            .as(Seq("subspace", "cell")),
+          col(vecCol).as("v"))
+        .select(
+          col("subspace"), col("cell"),
+          posexplode(transform(slice(col("v"), col("subspace") * dsub + 1, lit(dsub)),
+            x => x.cast("double"))).as(Seq("pos", "x")))
         .groupBy(col("subspace"), col("cell"), col("pos"))
         .agg(avg(col("x")).as("c"))
         .groupBy(col("subspace"), col("cell"))
@@ -117,41 +127,12 @@ object Quantization {
             .partitionBy(col("subspace")).orderBy(col("centroid_id"))) - 1).cast("int"))
   }
 
-  /** Nearest sub-centroid per (vec_id, subspace) by squared L2; ties
-    * break toward the smaller centroid id. Codebook is broadcast (it is
-    * m*ksub rows by construction); the subvector stream never shuffles.
-    */
-  private def assignCells(sub: DataFrame, cents: DataFrame): DataFrame =
-    sub
-      .join(broadcast(cents), "subspace")
-      .withColumn("d", VectorFunctions.l2Sq(col("subvec"), col("centroid")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(min_by(col("centroid_id"), struct(col("d"), col("centroid_id"))).as("cell"))
-
-  /** [[assignCells]] with the subvector CARRIED through the argmin
-    * group (first(subvec) is constant within a (vec_id, subspace)
-    * group — the group's rows are one sub row replicated per broadcast
-    * centroid), so the M-step needs no re-join with the subvector
-    * stream (r11 optimization, one exchange + join less per Lloyd
-    * iteration; the Similarity.nearestCentroidWithVec trade).
-    * PRECONDITION: (vec_id, subspace) must be unique in `sub` — with
-    * duplicates, first(subvec) silently collapses rows the old
-    * assign-then-rejoin shape would have weighted into the M-step mean
-    * (see the nearestCentroidWithVec scaladoc). pqEncode derives sub
-    * from a keyed corpus via posexplode, so the contract holds for
-    * every current caller.
-    */
-  private def assignCellsWithVec(sub: DataFrame, cents: DataFrame): DataFrame =
-    sub
-      .join(broadcast(cents), "subspace")
-      .withColumn("d", VectorFunctions.l2Sq(col("subvec"), col("centroid")))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(
-        min_by(col("centroid_id"), struct(col("d"), col("centroid_id"))).as("cell"),
-        first(col("subvec")).as("subvec"))
-
   /** PQ encoding: (vec_id, codes) with codes[j] = nearest sub-centroid
-    * of subspace j — the m-byte compressed representation of the corpus.
+    * of subspace j (squared L2, ties to the smaller id) — the m-byte
+    * compressed representation of the corpus. One narrow projection:
+    * the codebook is collected once and held by the native kernel
+    * ([[graft.plans.PqEncode]]). A duplicated key gets one code row per
+    * input row.
     */
   def pqEncode(
       space: DataFrame,
@@ -161,15 +142,21 @@ object Quantization {
       dims: Int,
       codebooks: DataFrame
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
-    assignCells(subVectors(space, keyCol, vecCol, m, dims), codebooks)
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("cell")))).as("sc"))
-      .select(col("vec_id"), transform(col("sc"), p => p.getField("cell")).as("codes"))
+    require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
+    encodeWith(space.select(col(keyCol).as("vec_id"), col(vecCol).as("v")), "v",
+      PqCodebook.collect(codebooks, m), dims / m)
+  }
+
+  /** `rows` with `vecCol` replaced by its PQ codes; no codebook, no rows. */
+  private def encodeWith(rows: DataFrame, vecCol: String, codebook: PqCodebook, dsub: Int): DataFrame = {
+    val out = rows
+      .withColumn(vecCol, VectorFunctions.pqEncode(col(vecCol), codebook, dsub))
+      .withColumnRenamed(vecCol, "codes")
+    if (codebook.isEmpty) out.limit(0) else out
   }
 
   /** ADC top-k: for each query, a (m x ksub) distance table against the
-    * codebooks (tiny: queries x m x ksub rows, broadcast), then one
+    * codebooks (one native projection per query row, broadcast), then one
     * narrow scan of the ENCODED corpus — per row the approximate
     * distance is m positional table lookups folded in subspace order —
     * into the bounded-heap top-k. The full-precision corpus is never
@@ -186,20 +173,12 @@ object Quantization {
       k: Int
   ): DataFrame = {
     graft.plans.GraftFunctions.register(queries.sparkSession)
-    val qsub = subVectors(queries, keyCol, vecCol, m, dims)
-      .withColumnRenamed("vec_id", "query_id")
-    // tables[j][c+1] = ||q_sub_j - centroid_c||^2, positionally indexed.
-    val qTables = qsub
-      .join(broadcast(codebooks), "subspace")
-      .withColumn("d", VectorFunctions.l2Sq(col("subvec"), col("centroid")))
-      .groupBy(col("query_id"), col("subspace"))
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("d")))).as("cd"))
-      .select(
-        col("query_id"), col("subspace"),
-        transform(col("cd"), p => p.getField("d")).as("dists"))
-      .groupBy(col("query_id"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("dists")))).as("sd"))
-      .select(col("query_id"), transform(col("sd"), p => p.getField("dists")).as("tables"))
+    require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
+    // tables[j][c] = ||q_sub_j - centroid_c||^2, positionally indexed.
+    val qTables = queries.select(
+      col(keyCol).as("query_id"),
+      VectorFunctions.adcTables(col(vecCol), PqCodebook.collect(codebooks, m), dims / m)
+        .as("tables"))
     val scored = encoded
       .select(col("vec_id").as("neighbor_id"), col("codes"))
       .crossJoin(broadcast(qTables))
@@ -220,11 +199,13 @@ object Quantization {
     * candidates by per-(query, cell) ADC tables over the residual
     * codes.
     *
-    * Corpus-side plan: one broadcast join (cell centroids) + narrow
-    * residual projection + PQ encode — the full-precision corpus is
-    * read once at build time and never at query time. Query-side: the
-    * ADC scan touches only the probed cells' code rows (~nProbe/nCells
-    * of the corpus), each row costing m table lookups.
+    * Corpus-side plan: cell assignment, residual and PQ encode are one
+    * narrow projection through native kernels holding the collected
+    * cell centroids and codebook — the full-precision corpus is read
+    * once at build time and never at query time. Query-side: the
+    * nProbe cells and their ADC tables are again a projection per
+    * query; the ADC scan touches only the probed cells' code rows
+    * (~nProbe/nCells of the corpus), each row costing m table lookups.
     *
     * The coarse quantizer is a learned k-means codebook (the same
     * build `knnIvfKmeans` uses, cosine assignment) — geometric cells
@@ -237,8 +218,25 @@ object Quantization {
     * (vec_id, codes, cell) corpus codes. The build-once handle that
     * [[probeIvfPq]] (and the nProbe tuner) answer queries from — on a
     * cluster these are the tables you persist alongside the corpus.
+    * `coarseCentroids` and `pqCodebook` are `coarse` and `codebooks`
+    * collected once for the native kernels, so probes and upserts never
+    * collect them again; they live as long as the caller holds the index.
     */
-  final case class IvfPqIndex(coarse: DataFrame, codebooks: DataFrame, encoded: DataFrame)
+  final case class IvfPqIndex(
+      coarse: DataFrame,
+      codebooks: DataFrame,
+      encoded: DataFrame,
+      coarseCentroids: CentroidTable,
+      pqCodebook: PqCodebook)
+
+  object IvfPqIndex {
+    /** An index over stored artifact tables (e.g. reloaded from a
+      * lakehouse): collects the coarse centroids and the codebook once.
+      */
+    def apply(coarse: DataFrame, codebooks: DataFrame, encoded: DataFrame): IvfPqIndex =
+      IvfPqIndex(coarse, codebooks, encoded,
+        CentroidTable.collect(coarse, "cell", "c_vec"), PqCodebook.collect(codebooks))
+  }
 
   /** Build the IVF-PQ index: coarse k-means cells, per-cell residuals,
     * residual PQ codebooks, encoded corpus. `pinEncoded` additionally
@@ -267,34 +265,40 @@ object Quantization {
       durable: Boolean = false
   ): IvfPqIndex = {
     graft.plans.GraftFunctions.register(corpus.sparkSession)
-    // Coarse codebook (nCells rows, broadcast) + corpus cell assignment.
     val coarse = Similarity
       .kmeansCodebook(corpus, keyCol, vecCol, nCells, coarseIterations)
       .select(col("centroid_id").as("cell"), col("centroid").as("c_vec"))
       .pinned()
-    // Residuals: vec - centroid[cell], computed once per corpus row —
-    // the carried-vector assignment (Similarity.nearestCentroidWithVec)
-    // makes the old corpus re-join on vec_id unnecessary (r11).
-    val resid = Similarity
-      .nearestCentroidWithVec(corpus, keyCol, vecCol,
-        coarse.select(col("cell").as("centroid_id"), col("c_vec").as("centroid")))
-      .withColumnRenamed("assigned", "cell")
-      .join(broadcast(coarse), "cell")
-      .select(
-        col("vec_id"), col("cell"),
-        zip_with(col("v"), col("c_vec"), (x, y) => x.cast("double") - y).as("r"))
+    val coarseCentroids = CentroidTable.collect(coarse, "cell", "c_vec")
+    val resid = residuals(corpus, keyCol, vecCol, coarseCentroids)
     val cb = pqCodebooks(resid, "vec_id", "r", m, dims, ksub, iterations)
       .pinned()
-    val enc = pqEncode(resid, "vec_id", "r", m, dims, cb)
-      .join(resid.select(col("vec_id"), col("cell")), "vec_id")
+    val pqCodebook = PqCodebook.collect(cb, m)
+    val enc = encodeWith(resid, "r", pqCodebook, dims / m)
     val pinned = if (!pinEncoded) enc else Pins.pin(enc, durable)
-    IvfPqIndex(coarse, cb, pinned)
+    IvfPqIndex(coarse, cb, pinned, coarseCentroids, pqCodebook)
   }
+
+  /** (vec_id, r, cell): each row's nearest coarse cell and its residual
+    * vec - centroid(cell) as doubles, in one projection.
+    */
+  private def residuals(
+      rows: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      coarse: CentroidTable
+  ): DataFrame =
+    Similarity.nearestCentroidWithVec(rows, keyCol, vecCol, coarse)
+      .select(
+        col("vec_id"),
+        VectorFunctions.centroidResidual(col("v"), col("assigned"), coarse).as("r"),
+        col("assigned").as("cell"))
 
   /** Encode rows with a FROZEN index's artifacts (coarse cells +
     * residual codebooks), no re-training: nearest coarse cell →
-    * residual → PQ codes. This is the delta path of incremental index
-    * maintenance — O(|rows|) work against broadcast-sized artifacts.
+    * residual → PQ codes, (vec_id, codes, cell). This is the delta path
+    * of incremental index maintenance — O(|rows|) narrow work against
+    * the index's collected matrices.
     */
   def encodeWithIndex(
       index: IvfPqIndex,
@@ -305,16 +309,15 @@ object Quantization {
       dims: Int
   ): DataFrame = {
     graft.plans.GraftFunctions.register(rows.sparkSession)
-    val resid = Similarity
-      .nearestCentroidWithVec(rows, keyCol, vecCol,
-        index.coarse.select(col("cell").as("centroid_id"), col("c_vec").as("centroid")))
-      .withColumnRenamed("assigned", "cell")
-      .join(broadcast(index.coarse), "cell")
-      .select(
-        col("vec_id"), col("cell"),
-        zip_with(col("v"), col("c_vec"), (x, y) => x.cast("double") - y).as("r"))
-    pqEncode(resid, "vec_id", "r", m, dims, index.codebooks)
-      .join(resid.select(col("vec_id"), col("cell")), "vec_id")
+    encodeWith(residuals(rows, keyCol, vecCol, index.coarseCentroids), "r",
+      checkedCodebook(index, m, dims), dims / m)
+  }
+
+  private def checkedCodebook(index: IvfPqIndex, m: Int, dims: Int): PqCodebook = {
+    require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
+    require(index.pqCodebook.isEmpty || index.pqCodebook.m == m,
+      s"index codebook has ${index.pqCodebook.m} subspaces, called with m=$m")
+    index.pqCodebook
   }
 
   /** Incremental IVF-PQ maintenance — the index-layer analog of the
@@ -391,9 +394,7 @@ object Quantization {
   ): IvfPqMaintenance = {
     graft.plans.GraftFunctions.register(corpus.sparkSession)
     val fresh = Similarity.centroids(
-      Similarity.nearestCentroidWithVec(
-        corpus, keyCol, vecCol,
-        index.coarse.select(col("cell").as("centroid_id"), col("c_vec").as("centroid"))),
+      Similarity.nearestCentroidWithVec(corpus, keyCol, vecCol, index.coarseCentroids),
       "assigned", "v")
     val shifts = fresh
       .join(
@@ -414,7 +415,10 @@ object Quantization {
   }
 
   /** Probe a built IVF-PQ index: nProbe nearest cells per query, ADC
-    * over the residual codes of just those cells.
+    * over the residual codes of just those cells. The query side is
+    * narrow projections through the index's collected matrices; the one
+    * join is the broadcast of the (query, cell) tables against the
+    * probed cells' code rows.
     */
   def probeIvfPq(
       index: IvfPqIndex,
@@ -427,46 +431,17 @@ object Quantization {
       k: Int
   ): DataFrame = {
     graft.plans.GraftFunctions.register(queries.sparkSession)
-    val coarse = index.coarse
-    val cb = index.codebooks
-    val enc = index.encoded
-    // Query side: nProbe nearest cells (cosine, same ranking as the
-    // corpus assignment), then a per-(query, cell) ADC table over the
-    // QUERY residual for that cell.
-    val q = queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qCells = q
-      .crossJoin(broadcast(coarse))
-      .withColumn("sim", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id")).orderBy(col("sim").desc, col("cell"))))
-      .where(col("rk") <= nProbe)
+    val cells = index.coarseCentroids
+    // Query side, one projection per query row: its nProbe nearest
+    // cells (cosine, same ranking as the corpus assignment), then a
+    // per-(query, cell) ADC table over the query residual for that cell.
+    val qTables = Similarity.probeCells(queries, keyCol, vecCol, cells, nProbe)
       .select(
         col("query_id"), col("cell"),
-        zip_with(col("q_vec"), col("c_vec"), (x, y) => x.cast("double") - y).as("qr"))
-    val qsub = qCells.select(
-      col("query_id"), col("cell"),
-      posexplode(
-        transform(
-          sequence(lit(0), lit(m - 1)),
-          j => slice(col("qr"), j * (dims / m) + 1, lit(dims / m))))
-        .as(Seq("subspace", "subvec")))
-    val qTables = qsub
-      .join(broadcast(cb), "subspace")
-      .withColumn("d", VectorFunctions.l2Sq(col("subvec"), col("centroid")))
-      .groupBy(col("query_id"), col("cell"), col("subspace"))
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("d")))).as("cd"))
-      .select(
-        col("query_id"), col("cell"), col("subspace"),
-        transform(col("cd"), p => p.getField("d")).as("dists"))
-      .groupBy(col("query_id"), col("cell"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("dists")))).as("sd"))
-      .select(
-        col("query_id"), col("cell"),
-        transform(col("sd"), p => p.getField("dists")).as("tables"))
-    val scored = enc
+        VectorFunctions.adcTables(
+          VectorFunctions.centroidResidual(col("q_vec"), col("cell"), cells),
+          checkedCodebook(index, m, dims), dims / m).as("tables"))
+    val scored = index.encoded
       .join(broadcast(qTables), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       // Native codegen'd ADC over the probed cells' code rows.

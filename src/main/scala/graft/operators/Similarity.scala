@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.plans.CentroidTable
 
 /** Embedding-space operators — the embeddinghub query surface
   * (reference: embeddinghub/embeddingstore/embedding_store.proto:
@@ -421,59 +422,85 @@ object Similarity {
       .select(col("centroid_id"), transform(col("pc"), p => p.getField("c")).as("centroid"))
 
   /** Assign every vector to its nearest centroid by cosine (IVF assign /
-    * k-means E-step). Centroids are broadcast; corpus streams through.
+    * k-means E-step): (vec_id, assigned), one row per input row. The
+    * centroids are collected once and held by the native kernel
+    * ([[graft.plans.NearestCentroid]]; ties go to the smaller id), so the
+    * corpus streams through a narrow projection: no vec x centroid rows,
+    * no shuffle. A duplicated key gets one assignment per row.
     */
   def nearestCentroid(
       space: DataFrame,
       keyCol: String,
       vecCol: String,
       cents: DataFrame
-  ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
-    val scored = space
-      .select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", cosine(col("v"), col("centroid")))
-    scored
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("centroid_id"), struct(col("sim"), -col("centroid_id"))).as("assigned"))
-  }
+  ): DataFrame =
+    nearestCentroidWithVec(space, keyCol, vecCol, cents).select(col("vec_id"), col("assigned"))
 
-  /** [[nearestCentroid]] with the vector CARRIED through the argmax
-    * group — (vec_id, assigned, v). Consumers that need the assigned
-    * rows WITH their vectors (k-means M-step, residual computation,
-    * cell-keyed corpus frames) previously re-joined the corpus on
-    * vec_id after the assignment aggregate: one extra exchange + join
-    * per use, purely to fetch back a column the aggregate's input
-    * already had (r11 optimization; one Lloyd build saved an exchange
-    * per iteration). `first(v)` is deterministic here — every row in a
-    * vec_id group is the same corpus row replicated per broadcast
-    * centroid, so v is constant within the group.
-    *
-    * PRECONDITION: `keyCol` must be UNIQUE in `space`. With duplicate
-    * keys the old assign-then-rejoin shape fanned each duplicate row
-    * out into downstream means/residuals, while `first(v)` silently
-    * collapses the group to ONE run-dependent row — different (and
-    * nondeterministic) centroids, with no error. Every current caller
-    * passes a primary-key vec_id; a caller with possibly-duplicated
-    * keys must dedupe first (same contract as
-    * [[graft.operators.Quantization.assignCellsWithVec]]).
+  /** [[nearestCentroid]] with the vector carried along — (vec_id,
+    * assigned, v) — for consumers that need the assigned rows with their
+    * vectors (k-means M-step, residuals, cell-keyed corpus frames).
     */
   def nearestCentroidWithVec(
       space: DataFrame,
       keyCol: String,
       vecCol: String,
       cents: DataFrame
+  ): DataFrame =
+    nearestCentroidWithVec(space, keyCol, vecCol,
+      CentroidTable.collect(cents, "centroid_id", "centroid"))
+
+  /** [[nearestCentroidWithVec]] against an already collected table. No
+    * centroids, no rows (the empty cross-join the kernel replaced).
+    */
+  def nearestCentroidWithVec(
+      space: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      cents: CentroidTable
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
-    space
-      .select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", cosine(col("v"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(
-        max_by(col("centroid_id"), struct(col("sim"), -col("centroid_id"))).as("assigned"),
-        first(col("v")).as("v"))
+    val assigned =
+      if (cents.isEmpty) lit(null).cast(cents.idType) else nearestCentroidId(col(vecCol), cents)
+    val out = space.select(col(keyCol).as("vec_id"), assigned.as("assigned"), col(vecCol).as("v"))
+    if (cents.isEmpty) out.limit(0) else out
+  }
+
+  /** (query_id, q_vec, cell): each query row with its nProbe nearest
+    * cells by cosine (ties to the smaller id) — one native top-n per
+    * query ([[graft.plans.NearestCentroids]]) and an explode, in place of
+    * a ranking window over query x cell rows.
+    */
+  private[operators] def probeCells(
+      queries: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      cents: CentroidTable,
+      nProbe: Int
+  ): DataFrame =
+    queries.select(
+      col(keyCol).as("query_id"), col(vecCol).as("q_vec"),
+      explode(nearestCentroidIds(col(vecCol), cents, nProbe)).as("cell"))
+
+  /** The IVF probe over a cell-assigned corpus: candidates are the
+    * corpus rows of each query's nProbe cells, ranked by exact cosine.
+    */
+  private def knnInCells(
+      corpus: DataFrame,
+      queries: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      cents: CentroidTable,
+      k: Int,
+      nProbe: Int
+  ): DataFrame = {
+    val corpusCells = nearestCentroidWithVec(corpus, keyCol, vecCol, cents)
+      .select(
+        col("vec_id").as("neighbor_id"), col("v").as("n_vec"),
+        col("assigned").as("cell"))
+    val scored = corpusCells
+      .join(broadcast(probeCells(queries, keyCol, vecCol, cents, nProbe)), Seq("cell"))
+      .where(col("neighbor_id") =!= col("query_id"))
+      .withColumn("sim", cosine(col("q_vec"), col("n_vec")))
+    topKPerGroup(scored, "query_id", "sim", "neighbor_id", k)
   }
 
   /** Approximate top-k via IVF: probe only the nProbe nearest cells per
@@ -489,29 +516,9 @@ object Similarity {
       nProbe: Int
   ): DataFrame = {
     graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val cents = centroids(corpus, groupColForCentroids, vecCol)
-    // cell-keyed corpus via the carried-vector assignment (see
-    // nearestCentroidWithVec) — no corpus re-join after the argmax
-    val corpusCells = nearestCentroidWithVec(corpus, keyCol, vecCol, cents)
-      .select(
-        col("vec_id").as("neighbor_id"), col("v").as("n_vec"),
-        col("assigned").as("cell"))
-    // Per query: its nProbe nearest cells.
-    val q = queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qCells = q
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", cosine(col("q_vec"), col("centroid")))
-      .withColumn(
-        "rk",
-        row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("centroid_id"))))
-      .where(col("rk") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("centroid_id").as("cell"))
-    val scored = corpusCells
-      .join(broadcast(qCells), Seq("cell"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("q_vec"), col("n_vec")))
-    topKPerGroup(scored, "query_id", "sim", "neighbor_id", k)
+    val cents = CentroidTable.collect(
+      centroids(corpus, groupColForCentroids, vecCol), "centroid_id", "centroid")
+    knnInCells(corpus, queries, keyCol, vecCol, cents, k, nProbe)
   }
 
   /** Full ANN pipeline: build an IVF index with a k-means codebook,
@@ -531,28 +538,10 @@ object Similarity {
       kmeansIterations: Int = 3
   ): DataFrame = {
     graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val cents = kmeansCodebook(corpus, keyCol, vecCol, nCells, kmeansIterations)
-      .pinned() // index build artifact; don't re-iterate per probe
-    // carried-vector assignment: no corpus re-join (nearestCentroidWithVec)
-    val corpusCells = nearestCentroidWithVec(corpus, keyCol, vecCol, cents)
-      .select(
-        col("vec_id").as("neighbor_id"), col("v").as("n_vec"),
-        col("assigned").as("cell"))
-    val q = queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec"))
-    val qCells = q
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", cosine(col("q_vec"), col("centroid")))
-      .withColumn(
-        "rk",
-        row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("centroid_id"))))
-      .where(col("rk") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("centroid_id").as("cell"))
-    val scored = corpusCells
-      .join(broadcast(qCells), Seq("cell"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("q_vec"), col("n_vec")))
-    topKPerGroup(scored, "query_id", "sim", "neighbor_id", k)
+    val cents = CentroidTable.collect(
+      kmeansCodebook(corpus, keyCol, vecCol, nCells, kmeansIterations),
+      "centroid_id", "centroid")
+    knnInCells(corpus, queries, keyCol, vecCol, cents, k, nProbe)
   }
 
   /** ANN quality evaluation: per-query recall of an approximate result
@@ -686,12 +675,11 @@ object Similarity {
           .cast("int").as("centroid_id"),
         transform(col("v"), x => x.cast("double")).as("centroid"))
     for (_ <- 0 until iterations) {
-      // E-step carries the vector through the argmax group (see
-      // [[nearestCentroidWithVec]]) so the M-step reads it directly —
-      // the old keyed ⋈ assigned re-join (one exchange + join per
-      // iteration, fetching back a column the E-step input had) is gone
-      // (r11 optimization; identical assignment and means).
-      cents = nearestCentroidWithVec(keyed, "vec_id", "v", cents)
+      // E-step: the current centroids are collected (k rows) and every
+      // vector is assigned by a narrow projection that keeps the vector
+      // for the M-step.
+      val table = CentroidTable.collect(cents, "centroid_id", "centroid")
+      cents = nearestCentroidWithVec(keyed, "vec_id", "v", table)
         .select(col("assigned").as("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("centroid_id"), col("pos"))
         .agg(avg(col("x")).as("c"))

@@ -414,6 +414,18 @@ class DedupSpec extends AnyFunSuite {
     assert(out(("srcA", "srcB"))._5 >= 1L)
   }
 
+  test("corpusOverlap rejects more than 200 lanes at the call, before any plan is built") {
+    val spark = GraftTestSession.spark
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d", "srcA")).toDF("doc_id", "text", "source")
+    val err = intercept[IllegalArgumentException](
+      Dedup.corpusOverlap(docs, "source", "text", lanes = 202))
+    assert(err.getMessage.contains("lanes must be <= 200") && err.getMessage.contains("202"),
+      err.getMessage)
+    // the cap itself is accepted
+    assert(Dedup.corpusOverlap(docs, "source", "text", lanes = 200).columns.contains("lane_matches"))
+  }
+
   test("editVerifiedPairs: exact dup at distance 0, small edit verified, unrelated text absent") {
     val spark = GraftTestSession.spark
     import spark.implicits._
