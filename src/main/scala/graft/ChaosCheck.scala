@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.operators.{Dedup, FeatureStore, Sampling, Similarity}
+import graft.operators.{Dedup, FeatureStore, Quantization, Sampling, Similarity}
 import graft.sources.{Lakehouse, Tables}
 
 /** Task-retry chaos harness: runs representative operators with
@@ -84,6 +84,14 @@ object ChaosCheck {
           lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("s"))
       .head()
     s"n=${r.getLong(0)} h=${r.getDecimal(1)}"
+  }
+
+  /** (row, col, bits) of driver-side doubles, for a bit-exact fingerprint. */
+  private def bitsFrame(cells: Seq[(Int, Int, Double)]): DataFrame = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    import spark.implicits._
+    cells.map { case (r, c, v) => (r, c, java.lang.Double.doubleToLongBits(v)) }
+      .toDF("r", "c", "bits")
   }
 
   def main(args: Array[String]): Unit = {
@@ -168,7 +176,25 @@ object ChaosCheck {
     check("kmeans_codebook")(wrap =>
       Similarity.kmeansCodebook(wrap(embs), "vec_id", "embedding", k = 8, iterations = 3))
 
-    // 7. the write path: data files land via retried write tasks, the
+    // 7. PCA moments: the exact fixed-point aggregate's partial buffers
+    // serialized, re-run and merged under dying scan tasks; (μ, W) must
+    // match bit for bit (compared as the doubles' bits, not 6dp)
+    check("pca_moments") { wrap =>
+      val (mu, w) = Quantization.pcaWhitening(wrap(embs), "vec_id", "embedding", dims = 64, k = 8)
+      bitsFrame((mu +: w).zipWithIndex.flatMap { case (row, r) =>
+        row.zipWithIndex.map { case (v, c) => (r, c, v) } })
+    }
+
+    // 8. PQ codebooks: driver-side seeds, two VectorMean M-steps and the
+    // driver-side re-densify under dying scan tasks, bit for bit
+    check("pq_codebooks") { wrap =>
+      val cb = Quantization.pqCodebooks(wrap(embs), "vec_id", "embedding",
+        m = 8, dims = 64, ksub = 8, iterations = 2).collect()
+      bitsFrame(cb.toSeq.flatMap { r =>
+        r.getSeq[Double](2).zipWithIndex.map { case (v, c) => (r.getInt(0) * 1000 + r.getInt(1), c, v) } })
+    }
+
+    // 9. the write path: data files land via retried write tasks, the
     // commit publishes once, the snapshot reads back identical
     {
       val before = injected.get()

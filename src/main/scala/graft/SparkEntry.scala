@@ -2559,9 +2559,11 @@ object SparkEntry {
   @volatile var oracleDataDir: Option[String] = None
 
   /** Learned OPQ rotation per sf dir, memoized so the emb_opq_knn query
-    * and its generated oracle share the SAME matrix within one JVM run
-    * (and recomputation is bit-stable anyway: decimal-exact covariance
-    * + same-LAPACK SVD — see Quantization.opqRotation).
+    * and its generated oracle share the SAME matrix within one JVM run.
+    * Recomputation is not bit-stable: the cross-covariance is exact, but
+    * the PQ codebooks inside each OPQ iteration are double M-step means
+    * whose partial-sum merge order is not fixed, and a last-bit change in
+    * a sub-centroid can move codes and so R (see Quantization.opqRotation).
     */
   private val opqRotCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]
@@ -2574,17 +2576,13 @@ object SparkEntry {
 
   private val PcaK = 8
 
-  /** Learned PCA-whitening transform per sf dir, memoized for the same
-    * reason as [[opqRotCache]]: the emb_pca_whiten query and its
-    * generated oracle must share the SAME (μ, W) within one JVM run.
+  /** Learned PCA-whitening transform of an sf dir. Not memoized: the
+    * fit is one exact pass whose (μ, W) does not depend on partitioning,
+    * so the emb_pca_whiten query and its generated oracle each fit and
+    * get the same matrix bit for bit.
     */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Double], Seq[Seq[Double]])]
   private def pcaWhiten(s: SparkSession, dir: String): (Seq[Double], Seq[Seq[Double]]) =
-    pcaCache.computeIfAbsent(
-      dir,
-      _ => Quantization.pcaWhitening(
-        t(s, dir, "embeddings"), "vec_id", "embedding", dims = 64, k = PcaK))
+    Quantization.pcaWhitening(t(s, dir, "embeddings"), "vec_id", "embedding", dims = 64, k = PcaK)
 
   /** Generated emb_pca_whiten oracle: each whitened component an
     * UNROLLED ascending-i left-associated fold of embedding[i]·W[j][i]

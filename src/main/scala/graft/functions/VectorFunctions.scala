@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqEncode}
+import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqEncode, VectorMean, VectorMoments}
 
 /** Vector math over `array<float>` embedding columns — the compute core
   * of the embeddinghub surface (reference:
@@ -111,4 +111,17 @@ object VectorFunctions {
   /** ADC lookup tables of `vec` (m x ksub squared L2), the input of [[adc]]. */
   def adcTables(vec: Column, codebook: PqCodebook, dsub: Int): Column =
     column(AdcTables(expression(vec), codebook, dsub))
+
+  // Vector-fit aggregates (graft.plans.VectorFitAggregates), built from
+  // Scala like the kernels above.
+
+  /** Exact n, Σx and Σx·yᵀ of `dims`-element vectors, one row per group
+    * (graft.plans.VectorMoments).
+    */
+  def vectorMoments(x: Column, y: Column, dims: Int): Column =
+    column(VectorMoments(expression(x), expression(y), dims).toAggregateExpression())
+
+  /** Elementwise mean of the group's vectors (graft.plans.VectorMean). */
+  def vectorMean(vec: Column): Column =
+    column(VectorMean(expression(vec)).toAggregateExpression())
 }

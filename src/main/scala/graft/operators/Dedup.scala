@@ -1138,7 +1138,6 @@ object Dedup {
     graft.plans.GraftFunctions.register(space.sparkSession)
     val cents = Similarity
       .kmeansCodebook(space, keyCol, vecCol, nCells, kmeansIterations)
-      .pinned() // tiny index artifact; don't re-iterate per consumer
     val probes = space
       .select(col(keyCol).as("k"), col(vecCol).as("vec"))
       .crossJoin(broadcast(cents))

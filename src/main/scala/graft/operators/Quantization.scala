@@ -26,9 +26,10 @@ import graft.plans.{CentroidTable, PqCodebook}
   *    sum_j table[j][code_j(x)] — table lookups instead of float
   *    kernels over the full vectors.
   *
-  * Codebooks are a (subspace, cell, dim) aggregation; encoding and the
-  * per-query ADC tables are narrow projections through native kernels
-  * that hold the collected codebook (graft.plans.PqEncode / AdcTables);
+  * Codebooks take one (subspace, cell) VectorMean aggregate per Lloyd
+  * step; encoding and the per-query ADC tables are narrow projections
+  * through native kernels that hold the collected codebook
+  * (graft.plans.PqEncode / AdcTables);
   * the ADC scan is a narrow projection over the encoded corpus feeding
   * the bounded-heap top-k aggregate — no shuffle carries more than
   * (partitions x k) rows per query.
@@ -62,12 +63,16 @@ object Quantization {
   }
 
   /** Per-subspace Lloyd k-means codebooks: (subspace, centroid_id,
-    * centroid). All m subspaces iterate together — each iteration
-    * collects the m*ksub sub-centroids once, encodes every vector with
-    * the native PQ kernel (a narrow projection) and runs one (subspace,
-    * cell, dim) aggregation, regardless of m. Final ids are re-densified
-    * to 0..n-1 per subspace (Lloyd can empty a cell), so codes index
-    * positionally into ADC tables.
+    * centroid) as a small local relation. Seeds are the subvectors of the
+    * ksub smallest non-null keys (one TakeOrdered collect). All m
+    * subspaces iterate together: each iteration encodes every vector
+    * with the native PQ kernel holding the current codebook (a narrow
+    * projection), explodes the m codes — n·m rows, never n·d — and takes
+    * one map-side combined [[graft.plans.VectorMean]] per (subspace,
+    * cell) over the code's subvector; its m·ksub rows are the next
+    * codebook. Final ids are re-densified to 0..n-1 per subspace on the
+    * driver (Lloyd can empty a cell), so codes index positionally into
+    * ADC tables.
     */
   def pqCodebooks(
       space: DataFrame,
@@ -77,55 +82,40 @@ object Quantization {
       dims: Int,
       ksub: Int,
       iterations: Int
-  ): DataFrame = {
+  ): DataFrame =
+    pqFit(space, keyCol, vecCol, m, dims, ksub, iterations).toFrame(space.sparkSession)
+
+  /** [[pqCodebooks]] as the collected codebook. */
+  private def pqFit(
+      space: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      m: Int,
+      dims: Int,
+      ksub: Int,
+      iterations: Int
+  ): PqCodebook = {
+    require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
     graft.plans.GraftFunctions.register(space.sparkSession)
-    val sub = subVectors(space, keyCol, vecCol, m, dims)
-    // Seeds: the ksub smallest keys (TakeOrdered — per-partition top-k,
-    // no global sort), split into subspaces; centroid_id = key rank.
-    val seedKeys = space.select(col(keyCol).as("vec_id")).orderBy(col("vec_id")).limit(ksub)
-    var cents = sub
-      .join(broadcast(seedKeys), "vec_id")
-      .select(
-        col("subspace"),
-        col("vec_id"),
-        col("subvec").as("centroid"))
-      .withColumn(
-        "centroid_id",
-        (row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("subspace")).orderBy(col("vec_id"))) - 1).cast("int"))
-      .select(col("subspace"), col("centroid_id"), col("centroid"))
-    val dsub = dims / m
-    for (_ <- 0 until iterations) {
-      // E-step: codes per vector, exploded with each code's subvector
-      // for the M-step mean.
-      val codebook = PqCodebook.collect(cents, m)
-      cents = space
-        .select(
-          posexplode(VectorFunctions.pqEncode(col(vecCol), codebook, dsub))
-            .as(Seq("subspace", "cell")),
-          col(vecCol).as("v"))
-        .select(
-          col("subspace"), col("cell"),
-          posexplode(transform(slice(col("v"), col("subspace") * dsub + 1, lit(dsub)),
-            x => x.cast("double"))).as(Seq("pos", "x")))
-        .groupBy(col("subspace"), col("cell"), col("pos"))
-        .agg(avg(col("x")).as("c"))
-        .groupBy(col("subspace"), col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(
-          col("subspace"),
-          col("cell").as("centroid_id"),
-          transform(col("pc"), p => p.getField("c")).as("centroid"))
-    }
-    // Re-densify ids so they are contiguous per subspace.
-    cents
-      .withColumn(
-        "centroid_id",
-        (row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("subspace")).orderBy(col("centroid_id"))) - 1).cast("int"))
+    var codebook = PqCodebook.seeds(space, keyCol, vecCol, m, dims / m, ksub)
+    for (_ <- 0 until iterations)
+      codebook = PqCodebook.collect(pqStep(space, vecCol, codebook, dims / m), m)
+    codebook.redensified
   }
+
+  /** One PQ Lloyd step: (subspace, centroid_id, centroid) = per subspace,
+    * the mean of the subvectors each sub-centroid of `codebook` wins. A
+    * cell whose subvectors are all null or empty has no row.
+    */
+  private[graft] def pqStep(space: DataFrame, vecCol: String, codebook: PqCodebook, dsub: Int): DataFrame =
+    space
+      .select(
+        posexplode(VectorFunctions.pqEncode(col(vecCol), codebook, dsub)).as(Seq("subspace", "cell")),
+        col(vecCol).as("v"))
+      .groupBy(col("subspace"), col("cell").as("centroid_id"))
+      .agg(VectorFunctions.vectorMean(slice(col("v"), col("subspace") * dsub + 1, lit(dsub)))
+        .as("centroid"))
+      .where(col("centroid").isNotNull)
 
   /** PQ encoding: (vec_id, codes) with codes[j] = nearest sub-centroid
     * of subspace j (squared L2, ties to the smaller id) — the m-byte
@@ -239,17 +229,18 @@ object Quantization {
   }
 
   /** Build the IVF-PQ index: coarse k-means cells, per-cell residuals,
-    * residual PQ codebooks, encoded corpus. `pinEncoded` additionally
-    * pins the encoded corpus — do that when probing more than once
-    * (the tuner), not for a one-shot query where it would add a
-    * materialization pass. The encoded corpus is corpus-sized (m bytes
+    * residual PQ codebooks, encoded corpus. Both fits run their Lloyd
+    * steps as one VectorMean aggregate each and come back as collected
+    * tables, so `coarse` and `codebooks` are small local relations built
+    * from them — nothing to pin, nothing to collect again. `pinEncoded`
+    * additionally pins the encoded corpus — do that when probing more
+    * than once (the tuner), not for a one-shot query where it would add
+    * a materialization pass. The encoded corpus is corpus-sized (m bytes
     * per vector), so `durable = true` switches that pin from
     * executor-resident localCheckpoint to the fault-tolerant
     * reliable checkpoint for real-cluster runs — same trade as
     * `Dedup.connectedComponents`; on a production cluster you would
     * instead persist `encoded` as a table alongside the corpus.
-    * (The coarse/codebook artifacts are k-row-sized; their local pins
-    * are rebuild-cheap and never the durability concern.)
     */
   def buildIvfPq(
       corpus: DataFrame,
@@ -264,19 +255,14 @@ object Quantization {
       pinEncoded: Boolean = false,
       durable: Boolean = false
   ): IvfPqIndex = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val coarse = Similarity
-      .kmeansCodebook(corpus, keyCol, vecCol, nCells, coarseIterations)
-      .select(col("centroid_id").as("cell"), col("centroid").as("c_vec"))
-      .pinned()
-    val coarseCentroids = CentroidTable.collect(coarse, "cell", "c_vec")
+    val spark = corpus.sparkSession
+    val coarseCentroids = Similarity.kmeansFit(corpus, keyCol, vecCol, nCells, coarseIterations)
     val resid = residuals(corpus, keyCol, vecCol, coarseCentroids)
-    val cb = pqCodebooks(resid, "vec_id", "r", m, dims, ksub, iterations)
-      .pinned()
-    val pqCodebook = PqCodebook.collect(cb, m)
+    val pqCodebook = pqFit(resid, "vec_id", "r", m, dims, ksub, iterations)
     val enc = encodeWith(resid, "r", pqCodebook, dims / m)
     val pinned = if (!pinEncoded) enc else Pins.pin(enc, durable)
-    IvfPqIndex(coarse, cb, pinned, coarseCentroids, pqCodebook)
+    IvfPqIndex(coarseCentroids.toFrame(spark, "cell", "c_vec"), pqCodebook.toFrame(spark), pinned,
+      coarseCentroids, pqCodebook)
   }
 
   /** (vec_id, r, cell): each row's nearest coarse cell and its residual
@@ -569,7 +555,6 @@ object Quantization {
       k: Int
   ): DataFrame = {
     val cb = pqCodebooks(corpus, keyCol, vecCol, m, dims, ksub, iterations)
-      .pinned() // index-build artifact: pin so probe doesn't re-iterate Lloyd
     val enc = pqEncode(corpus, keyCol, vecCol, m, dims, cb)
     pqKnnAdc(enc, queries, keyCol, vecCol, m, dims, cb, k)
   }
@@ -641,15 +626,18 @@ object Quantization {
     * minimizes PQ reconstruction error by alternating (a) train+encode
     * PQ on the rotated corpus, (b) solve the orthogonal Procrustes
     * problem R = V·Uᵀ from the SVD of A = Σ x·ŷᵀ. The cross-covariance
-    * A is a d×d aggregate computed distributively (two posexplodes +
-    * one (i,j) sum — d² cells, collected once per iteration: 4096
-    * doubles for d=64, the only driver-side data); the SVD is a d×d
-    * driver-side Breeze call, same pattern as the CC loop's scalar
-    * fixpoint reads. Spec-verified (orthogonality + error vs plain PQ).
-    * LAPACK SVD has no cross-engine bit contract, so the emb_opq_knn
-    * oracle does not re-derive R in SQL — Verify computes R once
-    * (bit-stable: decimal-exact covariance + same-JVM SVD) and embeds
-    * it as literals in the generated oracle (SparkEntry.opqKnnOracle).
+    * A is one [[graft.plans.VectorMoments]] aggregate per iteration over
+    * the (x, ŷ) rows — n rows into a map-side combined d×d fixed-point
+    * buffer, the d² sums the only driver-side data (4096 for d=64); the
+    * SVD is a d×d driver-side Breeze call, same pattern as the CC loop's
+    * scalar fixpoint reads. Spec-verified (orthogonality + error vs
+    * plain PQ). Every x must have `dims` elements and no null element
+    * ([[pcaWhitening]]'s contract). LAPACK SVD has no cross-engine bit
+    * contract, so the emb_opq_knn oracle does not re-derive R in SQL —
+    * Verify computes R once and embeds it as literals in the generated
+    * oracle (SparkEntry.opqKnnOracle). A is exact, but the PQ codebooks
+    * it is measured against are double M-step means whose merge order is
+    * not fixed, so R is only stable within one schedule.
     */
   def opqRotation(
       space: DataFrame,
@@ -666,28 +654,45 @@ object Quantization {
     for (_ <- 1 to opqIterations) {
       val rotated = rotate(space, keyCol, vecCol, rot).pinned()
       val cb = pqCodebooks(rotated, "vec_id", "vec", m, dims, ksub, pqIterations)
-        .pinned()
       val recon = pqReconstruct(pqEncode(rotated, "vec_id", "vec", m, dims, cb), cb)
-      // Decimal-exact covariance: each x·ŷ term 12dp-rounded and summed
-      // as DECIMAL so A — and therefore the SVD and R — is bit-stable
-      // under any partitioning/run (two separate evaluations of this
-      // pipeline must hand the SAME matrix to the same LAPACK).
-      val cells = space
-        .select(col(keyCol).as("vec_id"), transform(col(vecCol), x => x.cast("double")).as("x"))
-        .join(recon, "vec_id")
-        .select(col("vec_id"), posexplode(col("x")).as(Seq("i", "xi")), col("recon"))
-        .select(col("i"), posexplode(transform(col("recon"), y => col("xi") * y)).as(Seq("j", "v")))
-        .groupBy(col("i"), col("j"))
-        .agg(sum(round(col("v"), 12).cast("decimal(38,12)")).cast("double").as("a"))
-        .collect()
-      val a = breeze.linalg.DenseMatrix.zeros[Double](dims, dims)
-      cells.foreach(r => a(r.getAs[Int]("i"), r.getAs[Int]("j")) = r.getAs[Double]("a"))
+      // Decimal-exact cross-covariance, so two evaluations of this
+      // pipeline hand the same A to the same LAPACK.
+      val pairs = space.select(col(keyCol).as("vec_id"), col(vecCol).as("x")).join(recon, "vec_id")
+      val moments = checkedMoments(pairs, "x", "recon", dims, "opqRotation", vecCol)
+      val a = breeze.linalg.DenseMatrix.tabulate(dims, dims)((i, j) => moments.sumXY(i * dims + j))
       val s = breeze.linalg.svd(a)
       // max tr(R·A), A = U·S·Vᵀ  ⇒  R = V·Uᵀ
       val rNew = s.Vt.t * s.U.t
       rot = Seq.tabulate(dims, dims)((out, in) => rNew(out, in))
     }
     rot
+  }
+
+  /** Exact moments of a vector fit, read on the driver: n and the sums,
+    * a null sum (no term, or an overflow outside ANSI mode) read as 0.0
+    * as the replaced per-cell group-by read a missing or null cell.
+    */
+  private final case class Moments(n: Long, sumX: Array[Double], sumXY: Array[Double])
+
+  /** The one-row [[graft.plans.VectorMoments]] plan of (x, y) over `rows`. */
+  private[graft] def momentsPlan(rows: DataFrame, x: String, y: String, dims: Int): DataFrame = {
+    require(dims > 0, s"dims must be positive, got $dims")
+    rows.agg(VectorFunctions.vectorMoments(col(x), col(y), dims).as("m")).select("m.*")
+  }
+
+  /** Collect [[momentsPlan]] and enforce the vector-fit input contract at
+    * the caller's boundary: every non-null vector has exactly `dims`
+    * elements and no null element (null vectors are skipped).
+    */
+  private def checkedMoments(
+      rows: DataFrame, x: String, y: String, dims: Int, op: String, vecCol: String): Moments = {
+    val r = momentsPlan(rows, x, y, dims).head()
+    val (wrongLength, nullElements) = (r.getLong(1), r.getLong(2))
+    require(wrongLength == 0,
+      s"$op: $wrongLength non-null vectors in $vecCol do not have dims=$dims elements")
+    require(nullElements == 0, s"$op: $nullElements vectors in $vecCol have null elements")
+    def sums(i: Int) = r.getSeq[java.lang.Double](i).map(v => if (v == null) 0.0 else v.doubleValue).toArray
+    Moments(r.getLong(0), sums(3), sums(4))
   }
 
   /** Deterministic ±1 sign for random-projection cell (i, j): +1 iff
@@ -859,14 +864,18 @@ object Quantization {
     * retrieval score calibration). Returns (μ, W) with W k×dims;
     * whitened = W·(x − μ).
     *
-    * Distributed part: ONE pass for per-dim decimal-exact sums and one
-    * for the d×d second-moment matrix (posexplode² + map-side-combined
-    * sum — the OPQ covariance shape; d² rows to the driver, d=64 ⇒
-    * 4096). Driver part: C = S/n − μμᵀ (IEEE on exact ingredients) +
-    * LAPACK eigSym — O(d³) on a d×d matrix, independent of corpus
-    * size. Bit-stable: decimal sums are partition-order independent
-    * and the same matrix always hands the same eigenvectors to the
-    * same LAPACK.
+    * Distributed part: ONE pass — a [[graft.plans.VectorMoments]]
+    * aggregate folds n, Σx and Σx·xᵀ of every vector into a map-side
+    * combined fixed-point buffer (each term summed exactly as a 12dp
+    * decimal), and one d + d² row comes to the driver. Driver part:
+    * C = S/n − μμᵀ (IEEE on exact ingredients) + LAPACK eigSym — O(d³) on
+    * a d×d matrix, independent of corpus size. Bit-stable: the exact
+    * sums do not depend on partitioning or merge order, and the same
+    * matrix always hands the same eigenvectors to the same LAPACK.
+    *
+    * Input contract, checked with a named message: every non-null vector
+    * has exactly `dims` elements and no null element; null vectors are
+    * skipped; at least one vector remains.
     */
   def pcaWhitening(
       space: DataFrame,
@@ -877,30 +886,12 @@ object Quantization {
       eps: Double = 1e-6
   ): (Seq[Double], Seq[Seq[Double]]) = {
     require(k > 0 && k <= dims, s"k must be in [1, $dims], got $k")
-    val xs = space.select(transform(col(vecCol), x => x.cast("double")).as("x"))
-    val firstMoments = xs
-      .select(posexplode(col("x")).as(Seq("i", "xi")))
-      .groupBy(col("i"))
-      .agg(
-        count(lit(1)).as("c"),
-        sum(round(col("xi"), 12).cast("decimal(38,12)")).cast("double").as("s"))
-      .collect()
-    val n = firstMoments.head.getAs[Long]("c").toDouble
-    val mu = new Array[Double](dims)
-    firstMoments.foreach(r => mu(r.getAs[Int]("i")) = r.getAs[Double]("s") / n)
-    val cells = xs
-      .select(posexplode(col("x")).as(Seq("i", "xi")), col("x"))
-      .select(
-        col("i"),
-        posexplode(transform(col("x"), y => col("xi") * y)).as(Seq("j", "v")))
-      .groupBy(col("i"), col("j"))
-      .agg(sum(round(col("v"), 12).cast("decimal(38,12)")).cast("double").as("s2"))
-      .collect()
-    val c = breeze.linalg.DenseMatrix.zeros[Double](dims, dims)
-    cells.foreach { r =>
-      val (i, j) = (r.getAs[Int]("i"), r.getAs[Int]("j"))
-      c(i, j) = r.getAs[Double]("s2") / n - mu(i) * mu(j)
-    }
+    val m = checkedMoments(space, vecCol, vecCol, dims, "pcaWhitening", vecCol)
+    require(m.n > 0, s"pcaWhitening: $vecCol has no non-null vectors")
+    val n = m.n.toDouble
+    val mu = m.sumX.map(_ / n)
+    val c = breeze.linalg.DenseMatrix.tabulate(dims, dims)((i, j) =>
+      m.sumXY(i * dims + j) / n - mu(i) * mu(j))
     val es = breeze.linalg.eigSym(c)
     // eigSym returns eigenvalues ascending; take the top k, largest first
     val order = (0 until dims).sortBy(i => -es.eigenvalues(i)).take(k)

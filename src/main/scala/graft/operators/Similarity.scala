@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.operators.Pins.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -201,9 +200,8 @@ object Similarity {
     * (argmax cosine, smallest-centroid-id tiebreak). Returns
     * (vec_id, vec, cluster, csim) — the shared front-end of semantic
     * dedup (Dedup.semDeDup) and prototypicality pruning
-    * (Sampling.prototypePrune). The codebook is pinned: it is a tiny
-    * index artifact and re-running Lloyd per consumer would multiply
-    * the dominant cost.
+    * (Sampling.prototypePrune). The codebook is a small local relation
+    * (the fit's collected table), so no consumer re-runs Lloyd.
     */
   def clusterAssign(
       space: DataFrame,
@@ -213,7 +211,7 @@ object Similarity {
       iterations: Int
   ): DataFrame = {
     graft.plans.GraftFunctions.register(space.sparkSession)
-    val cb = kmeansCodebook(space, keyCol, vecCol, k, iterations).pinned()
+    val cb = kmeansCodebook(space, keyCol, vecCol, k, iterations)
     space
       .select(col(keyCol).as("vec_id"), col(vecCol).as("vec"))
       .crossJoin(broadcast(cb))
@@ -644,10 +642,14 @@ object Similarity {
     * graph incrementally; at 100TB a codebook + cell assignment is the
     * shape that parallelizes).
     *
-    * Deterministic: seeds are the k smallest keys. Each iteration is
-    * one broadcast (centroids, k rows) + one scan + one (group, dim)
-    * aggregation — no iteration-over-collect on the driver beyond the
-    * k-row codebook itself.
+    * Deterministic: seeds are the vectors of the k smallest non-null
+    * keys (one TakeOrdered collect, ids 0..k-1 in key order). Each
+    * iteration is one narrow scan — the native nearest-centroid kernel
+    * holding the k-row table assigns every vector — into one map-side
+    * combined [[graft.plans.VectorMean]] per cell, whose k rows are the
+    * next table; no row per vector element, no window. Result:
+    * (centroid_id int, centroid array<double>) as a small local
+    * relation, so consumers neither re-run Lloyd nor need to pin it.
     */
   def kmeansCodebook(
       space: DataFrame,
@@ -655,40 +657,39 @@ object Similarity {
       vecCol: String,
       k: Int,
       iterations: Int
-  ): DataFrame = {
+  ): DataFrame =
+    kmeansFit(space, keyCol, vecCol, k, iterations)
+      .toFrame(space.sparkSession, "centroid_id", "centroid")
+
+  /** [[kmeansCodebook]] as the collected table. */
+  private[operators] def kmeansFit(
+      space: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      k: Int,
+      iterations: Int
+  ): CentroidTable = {
     graft.plans.GraftFunctions.register(space.sparkSession)
-    val keyed = space.select(col(keyCol).as("vec_id"), col(vecCol).as("v"))
-    // Seeds = k smallest keys via sort+limit, which Spark executes as
-    // TakeOrdered (per-partition top-k then merge) — not a global sort.
-    // partitionBy(vec_id % 1) = deliberate single-partition window over
-    // the k seed rows (k is tiny by construction). The column-derived
-    // constant key survives constant folding (a bare lit would be
-    // stripped from the partition spec), so the "No Partition Defined"
-    // warning stays out of the logs and a REAL unpartitioned window
-    // can't hide behind a known-benign one.
-    var cents = keyed
-      .orderBy(col("vec_id"))
-      .limit(k)
-      .select(
-        (row_number().over(
-          Window.partitionBy(pmod(col("vec_id"), lit(1))).orderBy(col("vec_id"))) - 1)
-          .cast("int").as("centroid_id"),
-        transform(col("v"), x => x.cast("double")).as("centroid"))
-    for (_ <- 0 until iterations) {
-      // E-step: the current centroids are collected (k rows) and every
-      // vector is assigned by a narrow projection that keeps the vector
-      // for the M-step.
-      val table = CentroidTable.collect(cents, "centroid_id", "centroid")
-      cents = nearestCentroidWithVec(keyed, "vec_id", "v", table)
-        .select(col("assigned").as("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("x")).as("c"))
-        .groupBy(col("centroid_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(col("centroid_id"), transform(col("pc"), p => p.getField("c")).as("centroid"))
-    }
-    cents
+    var table = CentroidTable.seeds(space, keyCol, vecCol, k)
+    for (_ <- 0 until iterations)
+      table = CentroidTable.collect(kmeansStep(space, keyCol, vecCol, table), "centroid_id", "centroid")
+    table
   }
+
+  /** One Lloyd step: (centroid_id, centroid) = the mean of the vectors
+    * each centroid of `table` wins (E-step projection + per-cell
+    * VectorMean). A cell whose vectors are all null or empty has no row.
+    */
+  private[graft] def kmeansStep(
+      space: DataFrame,
+      keyCol: String,
+      vecCol: String,
+      table: CentroidTable
+  ): DataFrame =
+    nearestCentroidWithVec(space, keyCol, vecCol, table)
+      .groupBy(col("assigned").as("centroid_id"))
+      .agg(vectorMean(col("v")).as("centroid"))
+      .where(col("centroid").isNotNull)
 
   /** Norm distribution per group. */
   def normStats(space: DataFrame, groupCol: String, vecCol: String): DataFrame =

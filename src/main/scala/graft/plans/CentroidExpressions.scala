@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** A small centroid matrix — IVF cells, k-means centroids, or the
   * sub-centroids of one PQ subspace — collected once on the driver and
@@ -136,6 +137,28 @@ final class CentroidTable private (
     if (idType == IntegerType) UnsafeArrayData.fromPrimitiveArray(positions.map(p => ids(p).toInt))
     else UnsafeArrayData.fromPrimitiveArray(positions.map(ids(_)))
 
+  /** Centroid `j` as collected: null elements and a null vector restored. */
+  private[plans] def centroid(j: Int): Seq[java.lang.Double] =
+    if (rows(j) == null) null
+    else rows(j).indices.map(i =>
+      if (nullAt(j) != null && nullAt(j)(i)) null else java.lang.Double.valueOf(rows(j)(i)))
+
+  /** The same centroids with ids 0..size-1 in id order. */
+  private[plans] def redensified: CentroidTable =
+    CentroidTable(idType, ids.indices.map(j => j.toLong -> centroid(j)))
+
+  /** The table as a small local relation (idCol, vecCol array<double>),
+    * rows in id order — the k-row result of a fit, with no plan behind it.
+    */
+  def toFrame(spark: SparkSession, idCol: String, vecCol: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(j => Row(idValue(j), centroid(j))): _*),
+      StructType(Seq(
+        StructField(idCol, idType, nullable = false),
+        StructField(vecCol, ArrayType(DoubleType, containsNull = true)))))
+
+  private[plans] def idValue(j: Int): Any = if (idType == IntegerType) ids(j).toInt else ids(j)
+
   override def toString: String = s"CentroidTable(${ids.length} centroids)"
 }
 
@@ -220,11 +243,30 @@ object CentroidTable {
     */
   def collect(df: DataFrame, idCol: String, vecCol: String): CentroidTable = {
     val rows = df.select(idCol, vecCol).collect().map { r =>
-      idOf(r.get(0), s"centroid column $idCol") ->
-        (if (r.isNullAt(1)) null else r.getSeq[Any](1).map(toBoxed))
+      idOf(r.get(0), s"centroid column $idCol") -> vector(r, 1)
     }
     apply(df.schema(idCol).dataType, rows.toSeq)
   }
+
+  /** Column `i` of `r`, an array<float|double> or null, as doubles. */
+  private[plans] def vector(r: Row, i: Int): Seq[java.lang.Double] =
+    if (r.isNullAt(i)) null else r.getSeq[Any](i).map(toBoxed)
+
+  /** The (key, vector) rows of the `k` smallest non-null keys, in key
+    * order — the deterministic Lloyd seeds, one TakeOrdered job.
+    */
+  private[plans] def smallestKeys(df: DataFrame, keyCol: String, vecCol: String, k: Int): Seq[Row] =
+    if (k <= 0) Seq.empty
+    else df.select(keyCol, vecCol).where(col(keyCol).isNotNull)
+      .orderBy(col(keyCol)).limit(k).collect().toSeq
+
+  /** k-means seeds: the vectors of the `k` smallest non-null keys as
+    * doubles, ids 0..k-1 in key order.
+    */
+  def seeds(df: DataFrame, keyCol: String, vecCol: String, k: Int): CentroidTable =
+    apply(IntegerType, smallestKeys(df, keyCol, vecCol, k).zipWithIndex.map { case (r, id) =>
+      id.toLong -> vector(r, 1)
+    })
 }
 
 /** The m per-subspace codebooks of a product quantizer, subspace j
@@ -265,6 +307,21 @@ final class PqCodebook private (subspaces: Array[CentroidTable], val idType: Dat
     })
   }
 
+  /** The same codebook with ids 0..n-1 per subspace, in id order. */
+  def redensified: PqCodebook = new PqCodebook(subspaces.map(_.redensified), idType)
+
+  /** The codebook as a small local relation (subspace, centroid_id,
+    * centroid array<double>), rows in (subspace, id) order.
+    */
+  def toFrame(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(subspaces.indices.flatMap(s => (0 until subspaces(s).size).map(j =>
+        Row(s, subspaces(s).idValue(j), subspaces(s).centroid(j)))): _*),
+      StructType(Seq(
+        StructField("subspace", IntegerType, nullable = false),
+        StructField("centroid_id", idType, nullable = false),
+        StructField("centroid", ArrayType(DoubleType, containsNull = true)))))
+
   override def toString: String = s"PqCodebook($m subspaces)"
 }
 
@@ -288,6 +345,21 @@ object PqCodebook {
           (if (r.isNullAt(2)) null else r.getSeq[Any](2).map(CentroidTable.toBoxed))
       })
     }, idType)
+  }
+
+  /** PQ seeds: per subspace j, the slice [j·dsub, (j+1)·dsub) of the
+    * vectors of the `ksub` smallest non-null keys (clipped at the end of a
+    * short vector; a null vector gives null sub-centroids), ids 0..ksub-1
+    * in key order.
+    */
+  def seeds(df: DataFrame, keyCol: String, vecCol: String, m: Int, dsub: Int, ksub: Int): PqCodebook = {
+    val vecs = CentroidTable.smallestKeys(df, keyCol, vecCol, ksub).map(CentroidTable.vector(_, 1))
+    // no seed, no codebook (nothing to encode against), as collecting an empty relation gives
+    new PqCodebook(Array.tabulate(if (vecs.isEmpty) 0 else m) { j =>
+      CentroidTable(IntegerType, vecs.zipWithIndex.map { case (v, id) =>
+        id.toLong -> (if (v == null) null else v.slice(j * dsub, (j + 1) * dsub))
+      })
+    }, IntegerType)
   }
 
   /** [[collect]], checked against the subspace count the caller uses. */

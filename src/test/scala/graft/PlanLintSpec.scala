@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * intentionally joins a broadcast query set under a non-equi predicate
   * (self-pair exclusion) — a broadcast × scan, not a shuffle blowup.
   */
-class PlanLintSpec extends AnyFunSuite {
+class PlanLintSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private lazy val spark = GraftTestSession.spark
 
   test("no query plans a CartesianProduct, an unpartitioned Window, or a UDF") {
@@ -53,6 +54,49 @@ class PlanLintSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("partial_graft_kmv"),
       s"KMV aggregate is not partial (map-side) in:\n${plan.take(2000)}")
+  }
+
+  test("vector-fit aggregates aggregate map-side (partial before the exchange)") {
+    // each partition must reduce to one buffer per group BEFORE the
+    // shuffle; a final-only aggregate would shuffle every vector
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.functions._
+    val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
+    val df = emb.groupBy(pmod(col("vec_id"), lit(3))).agg(
+      graft.functions.VectorFunctions.vectorMoments(col("embedding"), col("embedding"), 64).as("m"),
+      graft.functions.VectorFunctions.vectorMean(col("embedding")).as("mean"))
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val belowExchange = collectWithSubqueries(plan) { case e: Exchange => e.child.toString }.mkString
+    for (agg <- Seq("partial_graft_vector_moments", "partial_graft_vector_mean"))
+      assert(belowExchange.contains(agg), s"$agg is not below an exchange in:\n$plan")
+  }
+
+  test("vector fits explode no vector elements (no n·d or n·d² Generate)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    import graft.operators.{Quantization, Similarity}
+    import graft.plans.{CentroidTable, PqCodebook}
+    graft.plans.GraftFunctions.register(spark)
+    val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
+    def vectorGenerates(df: DataFrame): Seq[String] = df.queryExecution.optimizedPlan.collect {
+      case g: Generate if g.generator.children.exists(_.dataType match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _ => false
+      }) => g.generator.toString
+    }
+    // the guard catches the explode the fits replaced
+    assert(vectorGenerates(emb.select(posexplode(col("embedding")))).nonEmpty)
+    val cents = CentroidTable.seeds(emb, "vec_id", "embedding", 6)
+    val codebook = PqCodebook.seeds(emb, "vec_id", "embedding", 8, 8, 8)
+    val fits = Map(
+      "pcaWhitening" -> Quantization.momentsPlan(emb, "embedding", "embedding", 64),
+      "kmeansCodebook M-step" -> Similarity.kmeansStep(emb, "vec_id", "embedding", cents),
+      "pqCodebooks M-step" -> Quantization.pqStep(emb, "embedding", codebook, 8))
+    for ((name, df) <- fits)
+      assert(vectorGenerates(df).isEmpty, s"$name explodes vector elements:\n${df.queryExecution.optimizedPlan}")
   }
 
   test("events scans push filters and prune columns (restored family plan audit)") {

@@ -571,4 +571,51 @@ class QuantizationSpec extends AnyFunSuite {
       assert(math.abs(cov) < 0.01, s"components $a,$b uncorrelated, got $cov")
     }
   }
+
+  test("pcaWhitening is bit-identical however the rows are partitioned") {
+    val one = Quantization.pcaWhitening(emb.repartition(1), "vec_id", "embedding", dims = 64, k = 8)
+    val seven = Quantization.pcaWhitening(emb.repartition(7), "vec_id", "embedding", dims = 64, k = 8)
+    def bits(fit: (Seq[Double], Seq[Seq[Double]])) =
+      (fit._1 +: fit._2).map(_.map(java.lang.Double.doubleToLongBits))
+    assert(bits(one) == bits(seven))
+  }
+
+  private def pcaInput(vectors: Seq[Seq[java.lang.Double]]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      java.util.Arrays.asList(vectors.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }: _*),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType, containsNull = true)))))
+  }
+
+  private def pcaError(vectors: Seq[java.lang.Double]*): String =
+    intercept[IllegalArgumentException](
+      Quantization.pcaWhitening(pcaInput(vectors), "vec_id", "embedding", dims = 3, k = 2)).getMessage
+
+  private def v(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+
+  test("pcaWhitening rejects vectors without exactly dims elements, by name") {
+    // too short used to pull the mean off; too long threw out of bounds on the driver
+    for (bad <- Seq(v(1.0, 2.0), v(1.0, 2.0, 3.0, 4.0))) {
+      val msg = pcaError(v(1.0, 0.0, 2.0), bad, v(0.0, 1.0, 1.0), null)
+      assert(msg.contains("pcaWhitening: 1 non-null vectors in embedding do not have dims=3 elements"), msg)
+    }
+  }
+
+  test("pcaWhitening rejects null elements, by name") {
+    // a null element used to count in n but not in the sum, pulling the mean toward 0
+    val msg = pcaError(v(1.0, 0.0, 2.0), v(1.0, null, 3.0), v(0.0, 1.0, 1.0))
+    assert(msg.contains("pcaWhitening: 1 vectors in embedding have null elements"), msg)
+  }
+
+  test("pcaWhitening needs a non-null vector, by name; null vectors are skipped") {
+    val msg = pcaError(null, null)
+    assert(msg.contains("pcaWhitening: embedding has no non-null vectors"), msg)
+    val rows = Seq(v(1.0, 0.0, 2.0), v(3.0, 1.0, 0.0), v(0.0, 2.0, 1.0))
+    val withNulls = Quantization.pcaWhitening(pcaInput(rows :+ null), "vec_id", "embedding", 3, 2)
+    val without = Quantization.pcaWhitening(pcaInput(rows), "vec_id", "embedding", 3, 2)
+    assert(withNulls == without)
+    assert(without._1 == Seq(4.0 / 3, 1.0, 1.0))
+  }
 }
