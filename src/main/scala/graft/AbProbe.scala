@@ -38,13 +38,8 @@ object AbProbe {
         stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
       }
     })
-    def drain(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc(); Thread.sleep(300)
-    }
     def time(name: String): (Double, Int, Int, Int) = {
-      drain()
+      Bench.drain(spark)
       jobs.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()

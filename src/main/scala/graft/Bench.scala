@@ -22,33 +22,34 @@ object Bench {
     tag
   }
 
+  /** Pre-rep teardown, all in the untimed gap: drop the table cache
+    * (catalog.clearCache() completes ASYNCHRONOUSLY — it is not relied
+    * on for quiescence) and the localCheckpoint pins (the explicit RDD
+    * unpersist loop DOES block until block removal), then force a GC
+    * so the ContextCleaner's weak refs for dead broadcasts/shuffles
+    * enqueue NOW, and settle long enough for the cleaner thread plus
+    * any straggling async uncache to finish before the clock starts.
+    * Each rep is a full cold evaluation. Every timing tool drains
+    * through this one.
+    */
+  def drain(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+    Thread.sleep(500)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Checked before any work: the tag becomes part of a file name.
     val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG").map(checkTag)
-    // A/B'd in round 7 (BENCH_AB_r7.json): round 6 made ContextCleaner
-    // removals synchronous session-wide, reasoning that async cleanup of
-    // PRIOR queries' dead state (broadcast blocks, shuffle files) was
-    // landing inside later timed windows; the same round's bench then
-    // read a diffuse ~x1.2 on small unchanged-plan queries and the confs
-    // were the prime suspect. The A/B (24-query subset spanning the
-    // inflation victims + the dedup family the confs were meant to
-    // protect, same host, back-to-back sessions) reads blocking=off
-    // 26.64s vs blocking=on 26.38s — no measurable difference, and the
-    // ~x1.2 drift vs round 5 persists under BOTH settings, so it is
-    // host/session variance, not the confs. The protection round 6
-    // actually bought came from drain()'s explicit GC + settle (the
-    // cleaner's weak refs only enqueue when a GC collects them —
-    // blocking or not), which this harness keeps: dedup_components
-    // reads 4.3s in-bench either way vs round 5's 12.9s victim value.
-    // Default OFF: matches the cluster default and leaves in-query
-    // cleanup off the task critical path at bigger SFs.
-    val blocking = sys.env.getOrElse("SPARK_GRAFT_BENCH_BLOCKING", "false").toBoolean
-    val spark = GraftSession.builder(Some(s"local[$cpus]"), shufflePartitions = cpus)
-      .config("spark.cleaner.referenceTracking.blocking", blocking.toString)
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", blocking.toString)
-      .getOrCreate()
+    // The ContextCleaner keeps Spark's defaults: the round-7 A/B
+    // (BENCH_AB_r7.json) read blocking off 26.64 s vs on 26.38 s. What
+    // keeps prior queries' dead state out of timed windows is drain()'s
+    // explicit GC + settle.
+    val spark = GraftSession.builder(Some(s"local[$cpus]"), shufflePartitions = cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // drain() deliberately unpersists localCheckpoint pins; RDD.unpersist
     // WARNs that each one's lineage is gone (true, intended — the next
@@ -73,23 +74,6 @@ object Bench {
       case None => (SparkEntry.queries.keys.toSeq.sorted, "BENCH_full.json")
     }
 
-    /** Pre-rep teardown, all in the untimed gap: drop the table cache
-      * (catalog.clearCache() completes ASYNCHRONOUSLY — it is not relied
-      * on for quiescence) and the localCheckpoint pins (the explicit RDD
-      * unpersist loop DOES block until block removal), then force a GC
-      * so the ContextCleaner's weak refs for dead broadcasts/shuffles
-      * enqueue NOW, and settle long enough for the cleaner thread plus
-      * any straggling async uncache to finish before the clock starts.
-      * Each rep is a full cold evaluation.
-      */
-    def drain(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      Thread.sleep(500)
-    }
-
     // Warmup EVERY query once on the tiny SF: JIT + Janino codegen of
     // each query's generated classes costs seconds per distinct plan
     // shape and lands on whichever query runs a shape first (measured:
@@ -103,7 +87,7 @@ object Bench {
     // The warmup pass leaves ~200 queries of dead state behind —
     // unreferenced checkpointed RDDs, broadcast blocks, shuffle files.
     // Drain it all before the timed pass starts.
-    drain()
+    drain(spark)
     Thread.sleep(3000) // let the cleaner thread finish its queue
 
     // Two independent reps per query; the MIN is the headline number and
@@ -118,7 +102,7 @@ object Bench {
     // evaluation with no inherited intermediates.
     val results = names.map { name =>
       val reps = (1 to 2).map { _ =>
-        drain()
+        drain(spark)
         val t0 = System.nanoTime()
         val ok = try { force(name, sfDir); true } catch { case _: Throwable => false }
         ((System.nanoTime() - t0) / 1e9, ok)
@@ -161,7 +145,7 @@ object Bench {
       .mkString("{", ",", "}")
     val slowest = qmap(results.sortBy(-_._2).take(12))
     val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"blocking_cleaner":$blocking,"queries":${qmap(results)},"reps":$repsMap,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"queries":${qmap(results)},"reps":$repsMap,"errors":$errs,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullArtifact), fullJson)
     // Optional round-stamped copy (SPARK_GRAFT_BENCH_TAG=r12 ->

@@ -51,11 +51,6 @@ object ConcurrentBench {
 
     def force(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-    def drain(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc(); Thread.sleep(500)
-    }
 
     // warmup both sets (JIT/codegen out of every timed window)
     (setA ++ setB).foreach { w =>
@@ -63,14 +58,14 @@ object ConcurrentBench {
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[conc] warmup $w: ${e.getMessage}") }
     }
-    drain(); Thread.sleep(2000)
+    Bench.drain(spark); Thread.sleep(2000)
 
     def runSet(names: Seq[String]): Double = {
       val t0 = System.nanoTime()
       names.foreach(force)
       (System.nanoTime() - t0) / 1e9
     }
-    def timedSolo(names: Seq[String]): Double = { drain(); runSet(names) }
+    def timedSolo(names: Seq[String]): Double = { Bench.drain(spark); runSet(names) }
 
     // solo baselines, two reps each (min), alone on the box
     def minOf2(names: Seq[String]): Double = Seq(timedSolo(names), timedSolo(names)).min
@@ -79,7 +74,7 @@ object ConcurrentBench {
 
     // concurrent: both sets at once from two threads, two reps
     def concurrentOnce(): Double = {
-      drain()
+      Bench.drain(spark)
       val pool = Executors.newFixedThreadPool(2)
       val latch = new CountDownLatch(1)
       val t0 = System.nanoTime()

@@ -151,8 +151,8 @@ object Explain {
     sb.append("# show only their residual stats frame here (LocalTableScan); their\n")
     sb.append("# distributed build side is the lineage they share with a non-eager twin —\n")
     sb.append("# emb_hnsw_export's build is emb_hnsw_ivf_build's audited plan (shared\n")
-    sb.append("# ivfCandidateSource + diverseFromCandidates), whose exchange carries the\n")
-    sb.append("# partial_graft_topk bounded heap, never an n x nCells frame.\n")
+    sb.append("# ivfCandidateSource + diverseFromCandidates), whose cells and probe cells\n")
+    sb.append("# are native nearest-centroid projections: no plan holds an n x nCells frame.\n")
     picks.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n\n## $name\n\n```\n")

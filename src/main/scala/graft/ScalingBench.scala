@@ -7,8 +7,8 @@ package graft
   *
   * Same timing discipline as [[Bench]]: noop sink (full column
   * evaluation), warmup of every query on the smallest supplied dir to
-  * amortize JIT/codegen, synchronous cleaner + cache/pinned-RDD drain
-  * before every rep, min of 2 reps.
+  * amortize JIT/codegen, [[Bench.drain]] before every rep, min of 2
+  * reps.
   *
   * Usage: runMain graft.ScalingBench <outJson> <dir1> <dir2> ...
   * (dirs ordered smallest to largest; the exponent uses the last two).
@@ -39,35 +39,13 @@ object ScalingBench {
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").toSeq).getOrElse(DefaultQueries)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val blocking = sys.env.getOrElse("SPARK_GRAFT_CLEANER_BLOCKING", "true")
     val initParts = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTS", "0").toInt
     val spark = GraftSession.builder(Some(s"local[$cpus]"), shufflePartitions = cpus,
-        initialPartitionNum = initParts)
-      // synchronous cleaner — same rationale as Bench: reclamation of
-      // prior queries' dead state must not land inside a timed query
-      .config("spark.cleaner.referenceTracking.blocking", blocking)
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", blocking)
-      // shuffle/broadcast codec A/B knob (lz4 = Spark default; zstd
-      // trades CPU for bytes on disk-bound wide exchanges)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
+        initialPartitionNum = initParts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def force(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-
-    val drainMode = sys.env.getOrElse("SPARK_GRAFT_DRAIN", "gc_settle")
-    def drain(): Unit = { // see Bench.drain
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      drainMode match {
-        case "gc_settle" => System.gc(); Thread.sleep(500)
-        case "gc"        => System.gc()
-        case _           => // unpersist only
-      }
-    }
 
     // JIT/codegen warmup (see Bench) on the SMALLEST supplied dir — no
     // hardcoded sandbox path, so the tool works wherever the data lives.
@@ -79,7 +57,7 @@ object ScalingBench {
         case e: Throwable =>
           System.err.println(s"[scaling] WARN warmup $w failed: ${e.getMessage}")
       }
-    drain()
+    Bench.drain(spark)
     Thread.sleep(3000)
 
     // A failing rep records -1.0 AND the exception, so a broken query at
@@ -88,7 +66,7 @@ object ScalingBench {
     def timed(name: String, dir: String): (Double, Option[String]) = {
       var err: Option[String] = None
       val reps = (1 to 2).map { _ =>
-        drain()
+        Bench.drain(spark)
         val t0 = System.nanoTime()
         try { force(name, dir); (System.nanoTime() - t0) / 1e9 }
         catch {

@@ -2246,7 +2246,7 @@ object SparkEntry {
     val p = java.nio.file.Files
       .createTempDirectory(s"graft_hnsw_export_${tag}_")
       .resolve("index.hnsw").toString
-    val cents = Similarity.centroids(space, "label", "embedding").pinned()
+    val cents = Similarity.centroids(space, "label", "embedding")
     // the oracle equality below assumes the IVF probe is EXHAUSTIVE
     // (every cell probed => candidate set identical to brute); fail
     // loudly if the corpus ever grows more label cells than nProbe

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqEncode, VectorMean, VectorMoments}
+import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqDecode, PqEncode, VectorMean, VectorMoments}
 
 /** Vector math over `array<float>` embedding columns — the compute core
   * of the embeddinghub surface (reference:
@@ -107,6 +107,10 @@ object VectorFunctions {
   /** PQ codes of `vec`: per subspace, the nearest sub-centroid's id. */
   def pqEncode(vec: Column, codebook: PqCodebook, dsub: Int): Column =
     column(PqEncode(expression(vec), codebook, dsub))
+
+  /** The concatenated sub-centroids PQ `codes` name (the reconstruction). */
+  def pqDecode(codes: Column, codebook: PqCodebook): Column =
+    column(PqDecode(expression(codes), codebook))
 
   /** ADC lookup tables of `vec` (m x ksub squared L2), the input of [[adc]]. */
   def adcTables(vec: Column, codebook: PqCodebook, dsub: Int): Column =

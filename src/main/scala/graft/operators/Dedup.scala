@@ -1121,9 +1121,11 @@ object Dedup {
     * nProbe nearest cells. Sub-quadratic — pair count is the sum of
     * per-(block, cell) squares and the codebook bounds cell sizes —
     * with a controlled recall loss for pairs split across non-probed
-    * cells (same structure as the minhash band trade-off). Candidates
-    * carry only id triples; vectors re-attach for the exact cosine
-    * verify, so the candidate shuffle stays narrow.
+    * cells (same structure as the minhash band trade-off). Each
+    * vector's nProbe cells are one native top-n projection over the
+    * collected codebook ([[Similarity.probeCells]]), one row per input
+    * row. Candidates carry only id triples; vectors re-attach for the
+    * exact cosine verify, so the candidate shuffle stays narrow.
     */
   def embeddingNearDupsCellBlocked(
       space: DataFrame,
@@ -1136,18 +1138,9 @@ object Dedup {
       kmeansIterations: Int = 2
   ): DataFrame = {
     graft.plans.GraftFunctions.register(space.sparkSession)
-    val cents = Similarity
-      .kmeansCodebook(space, keyCol, vecCol, nCells, kmeansIterations)
-    val probes = space
-      .select(col(keyCol).as("k"), col(vecCol).as("vec"))
-      .crossJoin(broadcast(cents))
-      .withColumn("sim", cosine(col("vec"), col("centroid")))
-      .withColumn(
-        "rk",
-        row_number().over(
-          Window.partitionBy(col("k")).orderBy(col("sim").desc, col("centroid_id"))))
-      .where(col("rk") <= nProbe)
-      .select(col("k"), col("centroid_id").as("cell"))
+    val cents = Similarity.kmeansFit(space, keyCol, vecCol, nCells, kmeansIterations)
+    val probes = Similarity.probeCells(space, keyCol, vecCol, cents, nProbe)
+      .select(col("query_id").as("k"), col("cell"))
     val sides = space
       .select(col(blockCol).as("block"), col(keyCol).as("k"))
       .join(probes, "k")

@@ -4,6 +4,8 @@ import graft.operators.Pins.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.CentroidTable
+
 /** Graph analytics over derived similarity graphs — the curation step
   * AFTER near-dup/kNN edges exist: connected components (see
   * [[Dedup.connectedComponents]]) answers "which docs are the same",
@@ -472,12 +474,12 @@ object Graph {
     *
     * Self-join probe shape — the part that matters at 100 TB: the
     * query side IS the corpus, so nothing query-sized is ever
-    * broadcast. Centroids (bounded: one per cell) broadcast once;
-    * per-node probe cells come from the bounded-heap TopK aggregate
-    * (map-side combined — the exchange carries <= nProbe rows per node
-    * per partition, never the n×nCells scored frame); candidates come
-    * from ONE shuffle hash join of probes against cell-keyed corpus
-    * rows; the per-node top-candK is again the bounded heap. Work:
+    * broadcast. Centroids (bounded: one per cell) are collected once;
+    * each node's cell and its nProbe probe cells are narrow projections
+    * through the native nearest-centroid kernels (no node x cell rows);
+    * candidates come from ONE shuffle hash join of probes against
+    * cell-keyed corpus rows; the per-node top-candK is the bounded
+    * heap. Work:
     * Σ_cells |probes into cell| × |cell| — the IVF contract, tunable
     * by nProbe/nCells, priced by cell statistics before running.
     *
@@ -495,9 +497,9 @@ object Graph {
       nProbe: Int
   ): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
-    // coarse quantizer trained ONCE over the full space (layer 0);
-    // bounded rows, pinned, broadcast at every use
-    val cents = Similarity.centroids(space, cellCol, vecCol).pinned()
+    // coarse quantizer trained ONCE over the full space (layer 0),
+    // collected once by the candidate source
+    val cents = Similarity.centroids(space, cellCol, vecCol)
     val leveled = hnswLevels(space, keyCol, vecCol, maxLevel)
     val source = ivfCandidateSource(keyCol, vecCol, cents, nProbe)
     (0 to maxLevel)
@@ -515,11 +517,16 @@ object Graph {
     * in the exact shape [[diverseFromCandidates]] consumes — the probe
     * [[hnswBuildIvf]] runs, factored out so any hierarchy consumer
     * ([[HnswExport.exportIndex]] in particular) builds without the
-    * all-pairs brute stage. At nProbe >= the cell count the probe is
-    * exhaustive and the ranked candidates EQUAL
-    * [[Similarity.knnBruteForce]]'s (same bounded-heap ranking, same
-    * self-exclusion), which is what both gates hold it to:
-    * emb_hnsw_ivf_build's brute-oracle edge equality and
+    * all-pairs brute stage. `cents` is collected once, here; every level
+    * assigns its nodes to cells and picks their nProbe cells through
+    * that one table ([[Similarity.probeCells]]: best cosine first, ties
+    * and ±0.0 to the smaller cell id, null scores last). A node whose
+    * cosine is null against every centroid probes the first cells, and
+    * its null-scored candidates are dropped by the final heap. At
+    * nProbe >= the cell count the probe is exhaustive and the ranked
+    * candidates EQUAL [[Similarity.knnBruteForce]]'s (same bounded-heap
+    * ranking, same self-exclusion), which is what both gates hold it
+    * to: emb_hnsw_ivf_build's brute-oracle edge equality and
     * HnswExportSpec's byte-identical-artifact assertion.
     */
   def ivfCandidateSource(
@@ -529,29 +536,17 @@ object Graph {
       nProbe: Int
   ): (DataFrame, Int) => DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
-    def cos(a: Column, b: Column) = graft.functions.VectorFunctions.cosine(a, b)
+    val table = CentroidTable.collect(cents, "centroid_id", "centroid")
     (sub: DataFrame, candK: Int) => {
       graft.plans.GraftFunctions.register(sub.sparkSession)
-      // cell-keyed corpus: one narrow assignment projection
-      val corpusCells = Similarity.nearestCentroidWithVec(sub, keyCol, vecCol, cents)
+      val corpusCells = Similarity.nearestCentroidWithVec(sub, keyCol, vecCol, table)
         .select(
           col("vec_id").as("neighbor_id"), col("v").as("n_vec"),
           col("assigned").as("cell"))
-      // per-node nProbe nearest cells via the bounded heap (NOT a
-      // per-node window over the n×nCells scored frame)
-      val cellScores = sub
-        .select(col(keyCol).as("query_id"), col(vecCol).as("q_vec"))
-        .crossJoin(broadcast(cents))
-        .withColumn("csim", cos(col("q_vec"), col("centroid")))
-      val probes = Similarity
-        .topKPerGroup(cellScores, "query_id", "csim", "centroid_id", nProbe)
-        .select(col("query_id"), col("neighbor_id").as("cell"))
-        .join(
-          sub.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")), "query_id")
-      val scored = probes
+      val scored = Similarity.probeCells(sub, keyCol, vecCol, table, nProbe)
         .join(corpusCells, Seq("cell")) // the ONE corpus-sized shuffle join
         .where(col("neighbor_id") =!= col("query_id"))
-        .withColumn("sim", cos(col("q_vec"), col("n_vec")))
+        .withColumn("sim", graft.functions.VectorFunctions.cosine(col("q_vec"), col("n_vec")))
       Similarity.topKPerGroup(scored, "query_id", "sim", "neighbor_id", candK)
     }
   }

@@ -355,10 +355,12 @@ object Quantization {
     * Similarity.centroidDrift, computed against the LIVE index
     * artifacts instead of a time split.
     *
-    * Scale: assignment is the normal broadcast-centroid scan
-    * (O(|corpus|), no shuffle beyond the nCells-row mean agg); the
-    * shift reduction collects nCells doubles to take a max — the same
-    * tiny-driver-read pattern as the recall gates. The expensive
+    * Scale: one Lloyd step against the frozen centroids
+    * ([[Similarity.kmeansStep]]: the native assignment projection into a
+    * map-side combined mean per cell, O(|corpus|), no shuffle beyond the
+    * nCells-row aggregate); the shift reduction collects nCells
+    * doubles to take a max — the same tiny-driver-read pattern as the
+    * recall gates. The expensive
     * branch (re-train) runs only when the threshold trips, which is
     * the only sane cadence at 100 TB: daily deltas take the O(|delta|)
     * upsert path; the quarterly distribution shift pays for one
@@ -379,9 +381,7 @@ object Quantization {
       shiftThreshold: Double
   ): IvfPqMaintenance = {
     graft.plans.GraftFunctions.register(corpus.sparkSession)
-    val fresh = Similarity.centroids(
-      Similarity.nearestCentroidWithVec(corpus, keyCol, vecCol, index.coarseCentroids),
-      "assigned", "v")
+    val fresh = Similarity.kmeansStep(corpus, keyCol, vecCol, index.coarseCentroids)
     val shifts = fresh
       .join(
         index.coarse.select(col("cell").as("centroid_id"), col("c_vec")),
@@ -595,17 +595,15 @@ object Quantization {
 
   /** Decode PQ codes back to their reconstructed vectors (sub-centroid
     * concatenation) — the ŷ used for error measurement and OPQ's
-    * Procrustes step.
+    * Procrustes step: (vec_id, recon), one row per input row, a narrow
+    * projection through the native decode kernel holding the collected
+    * codebook ([[graft.plans.PqDecode]]).
     */
   def pqReconstruct(encoded: DataFrame, codebooks: DataFrame): DataFrame =
-    encoded
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("subspace", "cell")))
-      .join(codebooks.withColumnRenamed("centroid_id", "cell"), Seq("subspace", "cell"))
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("centroid")))).as("sc"))
-      .select(
-        col("vec_id"),
-        flatten(transform(col("sc"), p => p.getField("centroid"))).as("recon"))
+    pqReconstruct(encoded, PqCodebook.collect(codebooks))
+
+  private def pqReconstruct(encoded: DataFrame, codebook: PqCodebook): DataFrame =
+    encoded.select(col("vec_id"), VectorFunctions.pqDecode(col("codes"), codebook).as("recon"))
 
   /** Mean squared PQ reconstruction error of a (vec, recon) pairing —
     * the quantization-quality scalar OPQ minimizes.
@@ -653,8 +651,8 @@ object Quantization {
       Seq.tabulate(dims, dims)((i, j) => if (i == j) 1.0 else 0.0)
     for (_ <- 1 to opqIterations) {
       val rotated = rotate(space, keyCol, vecCol, rot).pinned()
-      val cb = pqCodebooks(rotated, "vec_id", "vec", m, dims, ksub, pqIterations)
-      val recon = pqReconstruct(pqEncode(rotated, "vec_id", "vec", m, dims, cb), cb)
+      val cb = pqFit(rotated, "vec_id", "vec", m, dims, ksub, pqIterations)
+      val recon = pqReconstruct(encodeWith(rotated, "vec", cb, dims / m), cb)
       // Decimal-exact cross-covariance, so two evaluations of this
       // pipeline hand the same A to the same LAPACK.
       val pairs = space.select(col(keyCol).as("vec_id"), col(vecCol).as("x")).join(recon, "vec_id")

@@ -198,10 +198,12 @@ object Similarity {
   /** Cluster the space with the deterministic Lloyd schedule
     * ([[kmeansCodebook]]) and assign every vector to its best centroid
     * (argmax cosine, smallest-centroid-id tiebreak). Returns
-    * (vec_id, vec, cluster, csim) — the shared front-end of semantic
-    * dedup (Dedup.semDeDup) and prototypicality pruning
-    * (Sampling.prototypePrune). The codebook is a small local relation
-    * (the fit's collected table), so no consumer re-runs Lloyd.
+    * (vec_id, vec, cluster, csim), one row per input row — the shared
+    * front-end of semantic dedup (Dedup.semDeDup) and prototypicality
+    * pruning (Sampling.prototypePrune). The assignment is the native
+    * kernel's narrow projection over the fit's collected table; csim is
+    * the cosine to the winning centroid, read through a broadcast join of
+    * the k-row codebook on the cell.
     */
   def clusterAssign(
       space: DataFrame,
@@ -210,21 +212,12 @@ object Similarity {
       k: Int,
       iterations: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
-    val cb = kmeansCodebook(space, keyCol, vecCol, k, iterations)
-    space
-      .select(col(keyCol).as("vec_id"), col(vecCol).as("vec"))
-      .crossJoin(broadcast(cb))
-      .withColumn("sim", cosine(col("vec"), col("centroid")))
-      .groupBy(col("vec_id"))
-      .agg(
-        first(col("vec")).as("vec"),
-        max_by(
-          struct(col("centroid_id"), col("sim")),
-          struct(col("sim"), (-col("centroid_id")).as("nid"))).as("best"))
+    val table = kmeansFit(space, keyCol, vecCol, k, iterations)
+    nearestCentroidWithVec(space, keyCol, vecCol, table)
+      .join(broadcast(table.toFrame(space.sparkSession, "assigned", "centroid")), "assigned")
       .select(
-        col("vec_id"), col("vec"),
-        col("best.centroid_id").as("cluster"), col("best.sim").as("csim"))
+        col("vec_id"), col("v").as("vec"), col("assigned").as("cluster"),
+        cosine(col("v"), col("centroid")).as("csim"))
   }
 
   /** Contrastive triplet mining — for each anchor, the k nearest
@@ -375,11 +368,12 @@ object Similarity {
   /** Embedding-distribution drift — the vector-space companion of
     * FeatureStore.featureDrift's scalar PSI: per group, the L2 shift
     * between the centroids of an "old" and "new" corpus slice (plus
-    * slice sizes). A moved centroid means the upstream encoder or the
-    * data changed — re-train the quantizer / refresh the index. Two
-    * (group, slice, dim) mean aggregations; squared diffs are
-    * 12dp-rounded decimals so the shift is partition-order exact.
-    * Groups present in only one slice are omitted (no drift defined).
+    * slice sizes). One map-side combined group-by carries both slices'
+    * [[graft.plans.VectorMean]]s and counts; the shift sums
+    * round((mo - mn)², 12) as decimals over the positions both means
+    * have, so it is partition-order exact. A null group and a group with
+    * no position on both sides (a slice with no non-empty vector) are
+    * omitted (no drift defined).
     */
   def centroidDrift(
       space: DataFrame,
@@ -388,36 +382,37 @@ object Similarity {
       groupCol: String,
       oldSide: Column
   ): DataFrame = {
-    val base = space
-      .select(col(groupCol).as("label"), oldSide.as("is_old"),
-        posexplode(col(vecCol)).as(Seq("pos", "xf")))
-      .select(col("label"), col("is_old"), col("pos"), col("xf").cast("double").as("x"))
-    val means = base.groupBy(col("label"), col("is_old"), col("pos")).agg(avg(col("x")).as("m"))
-    val o = means.where(col("is_old")).select(col("label"), col("pos"), col("m").as("mo"))
-    val n = means.where(!col("is_old")).select(col("label"), col("pos"), col("m").as("mn"))
-    val counts = space.groupBy(col(groupCol).as("label")).agg(
-      sum(when(oldSide, 1L).otherwise(0L)).as("n_old"),
-      sum(when(oldSide, 0L).otherwise(1L)).as("n_new"))
-    o.join(n, Seq("label", "pos"))
-      .withColumn(
-        "d2",
-        round((col("mo") - col("mn")) * (col("mo") - col("mn")), 12).cast("decimal(28,12)"))
-      .groupBy(col("label"))
-      .agg(sqrt(sum(col("d2")).cast("double")).as("centroid_shift"))
-      .join(counts, "label")
+    // decimal(37,12) + decimal(28,12) is decimal(38,12), so the running
+    // sum keeps every digit (reaching 10^25 takes 10^9 positions)
+    val acc = "decimal(37,12)"
+    // zip_with pads the shorter mean with nulls: a position one side
+    // lacks adds nothing, as a null term adds nothing to a sum
+    val d2 = zip_with(col("mo"), col("mn"),
+      (a, b) => round((a - b) * (a - b), 12).cast("decimal(28,12)"))
+    val total = aggregate(d2, lit(null).cast(acc),
+      (s, x) => when(x.isNull, s).when(s.isNull, x.cast(acc)).otherwise((s + x).cast(acc)))
+    space
+      .groupBy(col(groupCol).as("label"))
+      .agg(
+        vectorMean(when(oldSide, col(vecCol))).as("mo"),
+        vectorMean(when(!oldSide, col(vecCol))).as("mn"),
+        sum(when(oldSide, 1L).otherwise(0L)).as("n_old"),
+        sum(when(oldSide, 0L).otherwise(1L)).as("n_new"))
+      .where(col("label").isNotNull && col("mo").isNotNull && col("mn").isNotNull)
+      .select(col("label"), sqrt(total.cast("double")).as("centroid_shift"), col("n_old"), col("n_new"))
   }
 
-  /** Centroid per group (k-means M-step / IVF codebook build). One
-    * shuffle on (group, dim) after posexplode; partial sums map-side.
+  /** Centroid per group (IVF codebook build, k-means M-step): the
+    * elementwise mean of the group's vectors, one map-side combined
+    * [[graft.plans.VectorMean]] per group — n rows into the aggregate,
+    * no row per vector element. A group whose vectors are all null or
+    * empty has no row.
     */
   def centroids(space: DataFrame, groupCol: String, vecCol: String): DataFrame =
     space
-      .select(col(groupCol).as("centroid_id"), posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .groupBy(col("centroid_id"), col("pos"))
-      .agg(avg(col("v")).as("c"))
-      .groupBy(col("centroid_id"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-      .select(col("centroid_id"), transform(col("pc"), p => p.getField("c")).as("centroid"))
+      .groupBy(col(groupCol).as("centroid_id"))
+      .agg(vectorMean(col(vecCol)).as("centroid"))
+      .where(col("centroid").isNotNull)
 
   /** Assign every vector to its nearest centroid by cosine (IVF assign /
     * k-means E-step): (vec_id, assigned), one row per input row. The
@@ -677,8 +672,8 @@ object Similarity {
   }
 
   /** One Lloyd step: (centroid_id, centroid) = the mean of the vectors
-    * each centroid of `table` wins (E-step projection + per-cell
-    * VectorMean). A cell whose vectors are all null or empty has no row.
+    * each centroid of `table` wins — the E-step projection into
+    * [[centroids]]. A cell whose vectors are all null or empty has no row.
     */
   private[graft] def kmeansStep(
       space: DataFrame,
@@ -686,10 +681,7 @@ object Similarity {
       vecCol: String,
       table: CentroidTable
   ): DataFrame =
-    nearestCentroidWithVec(space, keyCol, vecCol, table)
-      .groupBy(col("assigned").as("centroid_id"))
-      .agg(vectorMean(col("v")).as("centroid"))
-      .where(col("centroid").isNotNull)
+    centroids(nearestCentroidWithVec(space, keyCol, vecCol, table), "assigned", "v")
 
   /** Norm distribution per group. */
   def normStats(space: DataFrame, groupCol: String, vecCol: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.col
@@ -307,6 +307,23 @@ final class PqCodebook private (subspaces: Array[CentroidTable], val idType: Dat
     })
   }
 
+  /** The sub-centroids the codes name, concatenated in subspace order:
+    * code j is looked up in subspace j, and a null or unknown code (or
+    * one past the m-th) adds nothing. Null codes or a null sub-centroid
+    * give null, as the replaced flatten did.
+    */
+  private[plans] def decode(codes: ArrayData, isLong: Boolean): ArrayData = {
+    if (codes == null) return null
+    val parts = (0 until math.min(codes.numElements(), m)).flatMap { j =>
+      val p = if (codes.isNullAt(j)) -1
+        else java.util.Arrays.binarySearch(subspaces(j).ids, if (isLong) codes.getLong(j) else codes.getInt(j).toLong)
+      if (p < 0) None else Some(subspaces(j).centroid(p))
+    }
+    if (parts.contains(null)) null
+    else if (parts.exists(_.contains(null))) new GenericArrayData(parts.flatten.toArray[Any])
+    else UnsafeArrayData.fromPrimitiveArray(parts.flatten.map(_.doubleValue).toArray)
+  }
+
   /** The same codebook with ids 0..n-1 per subspace, in id order. */
   def redensified: PqCodebook = new PqCodebook(subspaces.map(_.redensified), idType)
 
@@ -370,11 +387,12 @@ object PqCodebook {
   }
 }
 
-/** A kernel over one array<float|double> vector whose value is
-  * `compute(vector)`, a method of the expression itself: the generated
+/** A kernel over one array column (a vector, or PQ codes) whose value
+  * is `compute(array)`, a method of the expression itself: the generated
   * code calls it on the expression held as a reference object, so the
   * interpreted and the generated path run the same loop (the
-  * [[LaneHashes]] pattern). A null vector reaches `compute` as null.
+  * [[LaneHashes]] pattern). A null array reaches `compute` as null; a
+  * nullable kernel's null result is a null value.
   */
 private[plans] abstract class VectorKernel extends UnaryExpression {
 
@@ -393,7 +411,7 @@ private[plans] abstract class VectorKernel extends UnaryExpression {
       ${x.code}
       ${CodeGenerator.javaType(dataType)} ${ev.value} =
         (${CodeGenerator.boxedType(dataType)}) $kernel.compute(${x.isNull} ? null : ${x.value});
-    """, isNull = FalseLiteral)
+    """, isNull = if (nullable) JavaCode.isNullExpression(s"${ev.value} == null") else FalseLiteral)
   }
 }
 
@@ -447,6 +465,30 @@ case class PqEncode(child: Expression, codebook: PqCodebook, dsub: Int) extends 
   override def compute(x: ArrayData): Any = codebook.encode(x, isFloat, dsub)
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
+    copy(child = newChild)
+}
+
+/** PQ decoding: the concatenated sub-centroids the codes name — the
+  * reconstruction as a per-row lookup instead of a codes explode, a
+  * codebook join and a per-vector collect_list. Codes are array<int> or
+  * array<bigint>.
+  */
+case class PqDecode(child: Expression, codebook: PqCodebook) extends VectorKernel {
+
+  private lazy val isLong: Boolean = child.dataType match {
+    case ArrayType(LongType, _) => true
+    case ArrayType(IntegerType, _) => false
+    case other => throw new IllegalArgumentException(
+      s"$prettyName: codes must be array<int|bigint>, got $other")
+  }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_pq_decode"
+
+  override def compute(x: ArrayData): Any = codebook.decode(x, isLong)
+
+  override protected def withNewChildInternal(newChild: Expression): PqDecode =
     copy(child = newChild)
 }
 

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Window => LWindow}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan lint over the ENTIRE query inventory — the static scale guard:
@@ -72,21 +74,20 @@ class PlanLintSpec extends AnyFunSuite
       assert(belowExchange.contains(agg), s"$agg is not below an exchange in:\n$plan")
   }
 
+  /** Generators over an array<float|double>: a row per vector element. */
+  private def vectorGenerates(df: DataFrame): Seq[String] = df.queryExecution.optimizedPlan.collect {
+    case g: Generate if g.generator.children.exists(_.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }) => g.generator.toString
+  }
+
   test("vector fits explode no vector elements (no n·d or n·d² Generate)") {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.plans.logical.Generate
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     import graft.operators.{Quantization, Similarity}
     import graft.plans.{CentroidTable, PqCodebook}
     graft.plans.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
-    def vectorGenerates(df: DataFrame): Seq[String] = df.queryExecution.optimizedPlan.collect {
-      case g: Generate if g.generator.children.exists(_.dataType match {
-        case ArrayType(FloatType | DoubleType, _) => true
-        case _ => false
-      }) => g.generator.toString
-    }
     // the guard catches the explode the fits replaced
     assert(vectorGenerates(emb.select(posexplode(col("embedding")))).nonEmpty)
     val cents = CentroidTable.seeds(emb, "vec_id", "embedding", 6)
@@ -97,6 +98,48 @@ class PlanLintSpec extends AnyFunSuite
       "pqCodebooks M-step" -> Quantization.pqStep(emb, "embedding", codebook, 8))
     for ((name, df) <- fits)
       assert(vectorGenerates(df).isEmpty, s"$name explodes vector elements:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("centroid sites run on the kernels: no cross join, no vector explode, a narrow decode") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.functions._
+    import graft.operators.{Graph, Quantization, Similarity}
+    graft.plans.GraftFunctions.register(spark)
+    val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
+    /** Why `df` is not on the kernels: a centroid cross-join, a row per
+      * vector element, or (`narrow`) any join, aggregate or generator.
+      */
+    def offenses(df: DataFrame, narrow: Boolean): Seq[String] = {
+      val crossJoins = df.queryExecution.sparkPlan.collect {
+        case p @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => p.nodeName
+      }
+      val wide = if (!narrow) Nil else df.queryExecution.optimizedPlan.collect {
+        case p @ (_: Join | _: Aggregate | _: Generate) => p.nodeName
+      }
+      crossJoins ++ vectorGenerates(df) ++ wide
+    }
+    val cents = Similarity.centroids(emb, "label", "embedding")
+    val codebooks = Quantization.pqCodebooks(emb, "vec_id", "embedding", 8, 64, 8, 1)
+    val codes = Quantization.pqEncode(emb, "vec_id", "embedding", 8, 64, codebooks)
+    val oldSide = col("vec_id") % 2 === 0
+    // (site, its plan, the declarative copy it replaced, narrow)
+    val sites = Seq(
+      ("centroids", cents, DeclarativeCentroids.centroids(emb, "label", "embedding"), false),
+      ("centroidDrift", Similarity.centroidDrift(emb, "vec_id", "embedding", "label", oldSide),
+        DeclarativeCentroids.centroidDrift(emb, "embedding", "label", oldSide), false),
+      ("clusterAssign", Similarity.clusterAssign(emb, "vec_id", "embedding", 4, 1),
+        DeclarativeCentroids.clusterAssign(emb, "vec_id", "embedding", 4, 1), false),
+      ("ivfCandidateSource", Graph.ivfCandidateSource("vec_id", "embedding", cents, 2)(emb, 5),
+        DeclarativeCentroids.ivfCandidateSource("vec_id", "embedding", cents, 2)(emb, 5), false),
+      ("pqReconstruct", Quantization.pqReconstruct(codes, codebooks),
+        DeclarativeCentroids.pqReconstruct(codes, codebooks), true))
+    for ((name, df, replaced, narrow) <- sites) {
+      assert(offenses(df, narrow).isEmpty,
+        s"$name: ${offenses(df, narrow).mkString(", ")}\n${df.queryExecution.optimizedPlan}")
+      // the guard catches the copy the site replaced
+      assert(offenses(replaced, narrow).nonEmpty, s"$name: the guard misses the declarative form")
+    }
   }
 
   test("events scans push filters and prune columns (restored family plan audit)") {
