@@ -1,26 +1,57 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.time.{ZoneOffset, ZonedDateTime}
+import java.time.format.DateTimeFormatter
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
+/** The timing tools' one core, plus the benchmark main.
   *
-  * Each query is forced through the `noop` sink (full evaluation of
-  * every output column — `.count()` would let Catalyst prune the
-  * projection and under-measure scan-heavy operators). A warmup pass
-  * at sf0.001 amortizes JIT/codegen startup out of the first timed
-  * query.
+  * The core is the session ([[session]]), the forced evaluation
+  * ([[force]]), the untimed warm-up ([[warmUp]]), the pre-rep teardown
+  * ([[drain]]) and the timed rep with its job/stage/task counts
+  * ([[time]]). `Bench.main` and [[AbProbe]] time through it;
+  * [[Explain]] and [[GenData]] take its session.
+  *
+  * `Bench.main` runs every SparkEntry query (or the comma-separated
+  * `SPARK_GRAFT_BENCH_ONLY` subset) against `SPARK_GRAFT_SF_DIR`, two
+  * reps each, writes a stamped record under `bench_records/` and
+  * prints one JSON line. A scaling sweep is one run per SF directory.
   */
 object Bench {
-  /** A `SPARK_GRAFT_BENCH_TAG` value, if it is safe inside the file name
-    * `BENCH_full_<tag>.json`: letters, digits, '.', '_' and '-' only, so
-    * no tag can name a path outside the working directory.
+
+  /** Core count of every timing tool: `SPARK_GRAFT_CPUS`, else the host's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The timing tools' session: `local[n]` with n shuffle partitions,
+    * WARN logging, and the `org.apache.spark.rdd` package at ERROR.
+    * drain() deliberately unpersists localCheckpoint pins, and
+    * RDD.unpersist WARNs that each one's lineage is gone (true and
+    * intended: the next rep re-evaluates from source). Each RDD
+    * subclass logs under its own class name, so the whole package is
+    * silenced. The resolved master is printed once, so a pasted log
+    * states its core count.
     */
-  def checkTag(tag: String): String = {
-    require(tag.matches("[A-Za-z0-9._-]+"),
-      s"SPARK_GRAFT_BENCH_TAG must match ^[A-Za-z0-9._-]+$$ (it names BENCH_full_<tag>.json), got '$tag'")
-    tag
+  def session(n: Int = cpus): SparkSession = {
+    val spark = GraftSession.local(n, n)
+    spark.sparkContext.setLogLevel("WARN")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    System.err.println(s"[graft] local[$n]")
+    spark
   }
+
+  /** Evaluates every output column of a query through the `noop` sink
+    * (`.count()` would let Catalyst prune the projection and
+    * under-measure scan-heavy operators).
+    */
+  def force(spark: SparkSession, name: String, dir: String): Unit =
+    SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
 
   /** Pre-rep teardown, all in the untimed gap: drop the table cache
     * (catalog.clearCache() completes ASYNCHRONOUSLY — it is not relied
@@ -29,8 +60,7 @@ object Bench {
     * so the ContextCleaner's weak refs for dead broadcasts/shuffles
     * enqueue NOW, and settle long enough for the cleaner thread plus
     * any straggling async uncache to finish before the clock starts.
-    * Each rep is a full cold evaluation. Every timing tool drains
-    * through this one.
+    * Each rep is a full cold evaluation.
     */
   def drain(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
@@ -40,78 +70,98 @@ object Bench {
     Thread.sleep(500)
   }
 
+  /** One untimed pass of every query on `dir`: JIT and Janino codegen
+    * cost seconds per distinct plan shape and would land on whichever
+    * timed query first runs a shape. The dead state the pass leaves
+    * behind is drained before it returns. A failure is printed with the
+    * query's name: its first timed rep would otherwise absorb the
+    * compile cost unnoticed.
+    */
+  def warmUp(spark: SparkSession, names: Seq[String], dir: String): Unit = {
+    for (name <- names)
+      try force(spark, name, dir)
+      catch { case e: Throwable => System.err.println(s"[graft] warm-up $name failed: $e") }
+    drain(spark)
+    Thread.sleep(3000) // let the cleaner thread finish its queue
+  }
+
+  /** One timed rep: wall seconds, whether it succeeded, and the Spark
+    * jobs, stages and tasks it submitted.
+    */
+  final case class Rep(seconds: Double, ok: Boolean, jobs: Int, stages: Int, tasks: Int)
+
+  private final class Counts extends SparkListener {
+    val jobs, stages, tasks = new AtomicInteger
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks)
+    }
+  }
+
+  /** Blocks until every posted listener event has been delivered. The
+    * bus is internal to Spark; reflection keeps this on public packages.
+    */
+  private def awaitBus(sc: SparkContext): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  /** Drains, then times one forced evaluation of `name` on `dir`. The
+    * counting listener is attached only after the bus is empty and read
+    * only after it is empty again, so the counts are exactly this rep's.
+    */
+  def time(spark: SparkSession, name: String, dir: String): Rep = {
+    drain(spark)
+    val sc = spark.sparkContext
+    awaitBus(sc)
+    val counts = new Counts
+    sc.addSparkListener(counts)
+    try {
+      val t0 = System.nanoTime()
+      val ok =
+        try { force(spark, name, dir); true }
+        catch { case e: Throwable => System.err.println(s"[graft] $name failed: $e"); false }
+      val dt = (System.nanoTime() - t0) / 1e9
+      awaitBus(sc)
+      Rep(dt, ok, counts.jobs.get, counts.stages.get, counts.tasks.get)
+    } finally sc.removeSparkListener(counts)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Checked before any work: the tag becomes part of a file name.
-    val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG").map(checkTag)
+    val n = cpus
     // The ContextCleaner keeps Spark's defaults: the round-7 A/B
     // (BENCH_AB_r7.json) read blocking off 26.64 s vs on 26.38 s. What
     // keeps prior queries' dead state out of timed windows is drain()'s
     // explicit GC + settle.
-    val spark = GraftSession.builder(Some(s"local[$cpus]"), shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // drain() deliberately unpersists localCheckpoint pins; RDD.unpersist
-    // WARNs that each one's lineage is gone (true, intended — the next
-    // rep re-evaluates from source). ~480 of those per bench pad the
-    // stdout tail the driver parses, so silence the rdd PACKAGE — each
-    // RDD subclass logs under its own concrete class name
-    // (MapPartitionsRDD etc.), so the base-class logger isn't enough.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = session(n)
 
-    def force(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    // Optional subset (comma-separated query names) for local A/B runs
+    // and scaling sweeps; only full-surface runs write BENCH_full.json.
+    val subset = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq.sorted)
+    val names = subset.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
 
-    // Optional subset (comma-separated query names) for local A/B runs;
-    // the driver never sets it, so official benches time the full surface.
-    // Subset runs write their per-query map to BENCH_subset.json, NOT
-    // BENCH_full.json: a later A/B subset run used to silently clobber
-    // the committed full-surface artifact (bit past rounds twice).
-    val (names, fullArtifact) = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(s) =>
-        (s.split(',').map(_.trim).filter(_.nonEmpty).toSeq.sorted, "BENCH_subset.json")
-      case None => (SparkEntry.queries.keys.toSeq.sorted, "BENCH_full.json")
-    }
-
-    // Warmup EVERY query once on the tiny SF: JIT + Janino codegen of
-    // each query's generated classes costs seconds per distinct plan
-    // shape and lands on whichever query runs a shape first (measured:
-    // the first dedup query absorbed ~20s of the whole family's cold
-    // compile). Steady-state per-query cost is what a long-running
-    // cluster job sees; the warmup pass makes the timed pass measure
-    // exactly that.
-    for (w <- names)
-      try force(w, "/root/testdata/sf0.001") catch { case _: Throwable => }
-
-    // The warmup pass leaves ~200 queries of dead state behind —
-    // unreferenced checkpointed RDDs, broadcast blocks, shuffle files.
-    // Drain it all before the timed pass starts.
-    drain(spark)
-    Thread.sleep(3000) // let the cleaner thread finish its queue
+    // Every query warms up on the tiny SF (measured: without it the
+    // first dedup query absorbed ~20 s of the whole family's cold
+    // compile), so the timed pass measures steady-state cost.
+    warmUp(spark, names, "/root/testdata/sf0.001")
 
     // Two independent reps per query; the MIN is the headline number and
-    // BOTH reps are recorded in BENCH_full.json. Local-mode runs show
-    // rare multi-second stalls that strike queries at random (concurrent
+    // BOTH reps are recorded. Local-mode runs show rare multi-second
+    // stalls that strike queries at random (concurrent
     // broadcast-build/stage materialization jitter, not plan cost — the
     // same query's other rep runs at full speed); min-of-reps reports
-    // the plan's actual cost, which is what the steady state of a
-    // long-running cluster job pays, and the recorded spread lets a
-    // reader distinguish environment noise from a real regression.
-    // drain() runs before every rep so each one is a full cold
-    // evaluation with no inherited intermediates.
+    // the plan's actual cost, and the recorded spread lets a reader
+    // distinguish environment noise from a real regression.
     val results = names.map { name =>
-      val reps = (1 to 2).map { _ =>
-        drain(spark)
-        val t0 = System.nanoTime()
-        val ok = try { force(name, sfDir); true } catch { case _: Throwable => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val ok = reps.forall(_._2)
-      val dt = reps.map(_._1).min
+      val reps = Seq.fill(2)(time(spark, name, sfDir))
+      val ok = reps.forall(_.ok)
+      val dt = reps.map(_.seconds).min
       System.err.println(f"[bench] $name%-28s ${if (ok) dt else -dt}%8.2f s  " +
-        reps.map(r => f"${r._1}%.2f").mkString("(", " ", ")"))
-      (name, dt, ok, reps.map(_._1))
+        reps.map(r => f"${r.seconds}%.2f").mkString("(", " ", ")") +
+        reps.map(_.jobs).mkString("  jobs=", "|", ""))
+      (name, dt, ok, reps)
     }
     // Failures are reported distinctly (negative time + errors list) so
     // a hard-failing query never shows up as a suspiciously fast pass.
@@ -121,50 +171,53 @@ object Bench {
     // that window every prior round (BENCH_r{1,2,3}.json all record
     // parsed:null). So the stdout line is COMPACT: total, per-family
     // subtotals, the slowest queries, and the full errors list — always
-    // under the window — while the complete per-query map (min AND both
-    // reps) goes to BENCH_full.json in the working directory for the
-    // plan-level audit.
+    // under the window — while the complete per-query reps and counts
+    // go to a stamped record under bench_records/.
     def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def qmap(rs: Seq[(String, Double, Boolean, Seq[Double])]): String =
-      rs.map { case (k, v, ok, _) => "\"" + k + "\":" + ms(if (ok) v else -v) }
+    def str(s: String): String = "\"" + s + "\""
+    def qmap(rs: Seq[(String, Double, Boolean, Seq[Rep])]): String =
+      rs.map { case (k, v, ok, _) => str(k) + ":" + ms(if (ok) v else -v) }
         .mkString("{", ",", "}")
-    val repsMap = results
-      .map { case (k, _, _, rs) => "\"" + k + "\":" + rs.map(ms).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val errs = results.collect { case (k, _, false, _) => str(k) }.mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    def family(name: String): String = name.takeWhile(_ != '_') match {
-      case "q" | "q1" | "q2" | "q3" | "q4" | "q5" | "q6" | "q7" | "q8" | "q9"
-           | "q10" | "q11" | "q12" | "q13" | "q14" | "q15" | "q16" | "q17"
-           | "q18" | "q19" | "q20" | "q21" | "q22" => "analytics"
-      case f => f
+    def family(name: String): String = {
+      val prefix = name.takeWhile(_ != '_')
+      if (prefix.matches("q\\d*")) "analytics" else prefix
     }
     val fams = results.groupBy(r => family(r._1)).toSeq.sortBy(_._1)
-      .map { case (f, rs) => "\"" + f + "\":" + ms(rs.map(_._2).sum) }
+      .map { case (f, rs) => str(f) + ":" + ms(rs.map(_._2).sum) }
       .mkString("{", ",", "}")
     val slowest = qmap(results.sortBy(-_._2).take(12))
-    val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"queries":${qmap(results)},"reps":$repsMap,"errors":$errs,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(fullArtifact), fullJson)
-    // Optional round-stamped copy (SPARK_GRAFT_BENCH_TAG=r12 ->
-    // BENCH_full_r12.json): every run overwrites BENCH_full.json, which
-    // has twice left the driver's per-query regression compare with no
-    // stable "previous" artifact — a tagged copy committed at end of
-    // round preserves the full per-query map per round. The driver
-    // never sets the tag, so its runs are byte-identical to before.
-    tag.foreach { tag =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"BENCH_full_$tag.json"), fullJson)
+
+    // The record is opened CREATE_NEW under a UTC-second + pid stamp,
+    // so no run overwrites another's.
+    val stamp = ZonedDateTime.now(ZoneOffset.UTC)
+      .format(DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss"))
+    val record = Paths.get("bench_records",
+      s"$stamp-${ProcessHandle.current().pid()}.json")
+    val perQuery = results.map { case (k, _, _, reps) =>
+      str(k) + ":" + reps.map(r =>
+        s"""{"s":${ms(r.seconds)},"ok":${r.ok},"jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks}}""")
+        .mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    Files.createDirectories(record.getParent)
+    Files.writeString(record,
+      s"""{"sf":"$sfDir","cpus":$n,"queries":$perQuery,"errors":$errs}""",
+      StandardOpenOption.CREATE_NEW)
+    if (subset.isEmpty) {
+      val repsMap = results
+        .map { case (k, _, _, reps) => str(k) + ":" + reps.map(r => ms(r.seconds)).mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
+      Files.writeString(Paths.get("BENCH_full.json"),
+        s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"queries":${qmap(results)},"reps":$repsMap,"errors":$errs,"sf":"$sfDir"}""")
     }
     val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"families":$fams,"slowest":$slowest,"errors":$errs,"sf":"$sfDir","full":"$fullArtifact"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"families":$fams,"slowest":$slowest,"errors":$errs,"sf":"$sfDir","full":"$record"}"""
     // Hard guarantee: never exceed the driver's tail window. If errors
     // somehow balloon the line, fall back to the minimal contract line.
     println(
       if (line.length <= 1900) line
-      else s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"n_errors":${results.count(!_._3)},"sf":"$sfDir","full":"$fullArtifact"}""")
+      else s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"n_errors":${results.count(!_._3)},"sf":"$sfDir","full":"$record"}""")
     spark.stop()
   }
 }

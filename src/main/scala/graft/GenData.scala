@@ -37,10 +37,7 @@ object GenData {
     require(args.length == 3, "usage: GenData <srcDir> <outDir> <copies>")
     val (src, out, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(Some(s"local[$cpus]"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     def load(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     // SPARK_GRAFT_GEN_TABLES=csv limits which tables are WRITTEN —

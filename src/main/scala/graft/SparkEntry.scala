@@ -2241,8 +2241,8 @@ object SparkEntry {
     import s.implicits._
     // per-invocation temp dir, not a (tag, pid)-keyed path: two
     // concurrent invocations of the same export query inside one JVM
-    // (e.g. a ConcurrentBench subset) must never write and read the
-    // same file
+    // (e.g. two threads sharing a session) must never write and read
+    // the same file
     val p = java.nio.file.Files
       .createTempDirectory(s"graft_hnsw_export_${tag}_")
       .resolve("index.hnsw").toString

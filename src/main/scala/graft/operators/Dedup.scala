@@ -215,7 +215,7 @@ object Dedup {
       shingleWidth: Int = 3,
       lanes: Int = 16
   ): DataFrame = {
-    require(lanes % 2 == 0, s"lanes must be even (two lanes per md5), got $lanes")
+    require(lanes > 0 && lanes % 2 == 0, s"lanes must be even and positive (two lanes per md5), got $lanes")
     require(lanes <= 200, s"lanes must be <= 200 (seed groups are two-digit), got $lanes")
     val sh = docs
       .select(

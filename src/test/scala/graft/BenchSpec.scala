@@ -1,0 +1,22 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The timing tools' shared core: exact per-rep counts and a drain that
+  * leaves no pinned state for the next rep to inherit.
+  */
+class BenchSpec extends AnyFunSuite {
+  test("Bench.time counts every job of a rep, the same on back-to-back reps, and drain unpins all") {
+    val spark = GraftTestSession.spark
+    val reps = Seq.fill(2)(Bench.time(spark, "q1_agg", GraftTestSession.Sf0001))
+    assert(reps.forall(_.ok))
+    assert(reps.head.jobs >= 1 && reps.head.stages >= 1 && reps.head.tasks >= 1, reps)
+    assert(reps.map(r => (r.jobs, r.stages, r.tasks)).distinct.size == 1, reps)
+
+    spark.range(100).cache().count()
+    spark.sparkContext.parallelize(1 to 10).localCheckpoint().count()
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    Bench.drain(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+}

@@ -422,6 +422,13 @@ class DedupSpec extends AnyFunSuite {
       Dedup.corpusOverlap(docs, "source", "text", lanes = 202))
     assert(err.getMessage.contains("lanes must be <= 200") && err.getMessage.contains("202"),
       err.getMessage)
+    // no lanes at all is named too, not an empty-Seq failure mid-build
+    Seq(0, -2).foreach { lanes =>
+      val e = intercept[IllegalArgumentException](
+        Dedup.corpusOverlap(docs, "source", "text", lanes = lanes))
+      assert(e.getMessage.contains("lanes must be even and positive") &&
+        e.getMessage.endsWith(s"got $lanes"), e.getMessage)
+    }
     // the cap itself is accepted
     assert(Dedup.corpusOverlap(docs, "source", "text", lanes = 200).columns.contains("lane_matches"))
   }
