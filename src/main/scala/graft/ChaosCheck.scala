@@ -100,7 +100,6 @@ object ChaosCheck {
     val spark = GraftSession
       .builder(Some("local[8,3]"), shufflePartitions = 8)
       .getOrCreate()
-    graft.plans.GraftFunctions.register(spark)
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir(s"$workDir/chaos_ckpt")
     // All pins take the reliable-checkpoint path, as a cluster run would.

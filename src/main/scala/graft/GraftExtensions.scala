@@ -2,24 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.plans.{AdcDistance, CosineSimilarity, DotProduct, GraftFunctions, L2SquaredDistance, MatrixApply, MinHashBands, SignedProjection, SimHash64}
+import graft.plans._
 
-/** Spark-idiomatic packaging of graft's native expressions: set
+/** The SQL-text surface of graft's native expressions: set
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (spark-submit / spark-defaults.conf / SparkSession.builder.config)
-  * and `graft_cosine`, `graft_l2sq`, `graft_adc`, `graft_simhash64`
-  * resolve in ANY SQL surface of the session — spark-sql shell, JDBC,
-  * `spark.sql(...)` — with no graft code on the driver path.
+  * and every `graft_*` name below resolves in ANY SQL surface of the
+  * session — spark-sql shell, JDBC, `spark.sql(...)` — with no graft
+  * code on the driver path. `GraftFunctions.register` installs the same
+  * builders into an already-built session (`GraftSession.local` /
+  * `cluster` call it once).
   *
-  * `GraftFunctions.register` remains the runtime-injection twin for
-  * sessions built without the config (tests, the Verify/Bench mains,
-  * notebook sessions you don't control the launch of); both register
-  * identical expression builders.
+  * Only SQL text goes through these names. graft's operators build
+  * the expressions directly as typed columns (graft.functions), so
+  * none of them needs a registered session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -33,10 +35,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Name -> expression builder for every injectable scalar function.
-    * (TopKByScore is registered only via GraftFunctions.register: its
-    * k argument needs literal extraction, which shares the same
-    * builder there.)
+
+  private def intLit(fn: String, what: String, e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$fn $what must be an int literal, got $other")
+  }
+
+  /** Name -> expression builder for every graft SQL function. Each
+    * builds the same expression as its kernel's typed column builder
+    * (graft.functions), so SQL text and Scala callers get one plan.
     */
   private[graft] val injectables: Seq[(String, Seq[Expression] => Expression)] = Seq(
     GraftFunctions.CosineName -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
@@ -44,63 +52,46 @@ object GraftExtensions {
     GraftFunctions.AdcName -> (exprs => AdcDistance(exprs(0), exprs(1))),
     GraftFunctions.DotName -> (exprs => DotProduct(exprs(0), exprs(1))),
     GraftFunctions.SimHashName -> (exprs => SimHash64(exprs(0))),
-    GraftFunctions.SortedInterName ->
-      (exprs => graft.plans.SortedIntersectSize(exprs(0), exprs(1))),
-    GraftFunctions.PairSampleName ->
-      (exprs => graft.plans.PairSampleMatch(exprs(0), exprs(1))),
-    GraftFunctions.LaneHashesName -> (exprs => {
-      val lanes = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_lane_hashes lanes must be an int literal, got $other")
-      }
-      graft.plans.LaneHashes(exprs(0), lanes)
-    }),
-    GraftFunctions.MinHashBandsName -> (exprs => {
-      def litInt(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash_bands $what must be an int literal, got $other")
-      }
-      MinHashBands(exprs(0), litInt(exprs(1), "bands"), litInt(exprs(2), "rowsPerBand"))
-    }),
+    GraftFunctions.SortedInterName -> (exprs => SortedIntersectSize(exprs(0), exprs(1))),
+    GraftFunctions.PairSampleName -> (exprs => PairSampleMatch(exprs(0), exprs(1))),
+    GraftFunctions.LaneHashesName -> (exprs =>
+      LaneHashes(exprs(0), intLit(GraftFunctions.LaneHashesName, "lanes", exprs(1)))),
+    GraftFunctions.MinHashBandsName -> (exprs => MinHashBands(
+      exprs(0),
+      intLit(GraftFunctions.MinHashBandsName, "bands", exprs(1)),
+      intLit(GraftFunctions.MinHashBandsName, "rowsPerBand", exprs(2)))),
     GraftFunctions.RpName -> (exprs => {
-      def litInt(e: Expression, what: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"graft_rp $what must be an int literal, got $other")
-      }
       val seed = exprs(3) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(s, _) if s != null =>
-          s.toString
+        case Literal(s, _) if s != null => s.toString
         case other => throw new IllegalArgumentException(
-          s"graft_rp seed must be a string literal, got $other")
+          s"${GraftFunctions.RpName} seed must be a string literal, got $other")
       }
-      SignedProjection(exprs(0), litInt(exprs(1), "dims"), litInt(exprs(2), "outDims"), seed)
+      SignedProjection(
+        exprs(0),
+        intLit(GraftFunctions.RpName, "dims", exprs(1)),
+        intLit(GraftFunctions.RpName, "outDims", exprs(2)),
+        seed)
     }),
     GraftFunctions.MatApplyName -> (exprs => {
-      // The matrix arrives as an array<array<double>> literal (typedLit)
-      // consumed at analysis time — the built expression carries it as a
-      // JVM reference object, so no per-row literal walk survives in the
-      // plan.
-      val mat = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(
-              ad: org.apache.spark.sql.catalyst.util.ArrayData,
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType, _), _)) =>
-          Array.tabulate(ad.numElements())(i => ad.getArray(i).toDoubleArray())
-        case other => throw new IllegalArgumentException(
-          s"graft_matapply matrix must be an array<array<double>> literal, got $other")
+      // The constant array<array<double>> matrix (a literal, or SQL's
+      // array(array(..), ..)) is evaluated here, at analysis time: the
+      // built expression carries it as a JVM object, so no per-row
+      // literal walk survives in the plan.
+      val mat = (exprs(1), exprs(1).dataType) match {
+        case (e, ArrayType(ArrayType(DoubleType, _), _)) if e.foldable => e.eval() match {
+          case ad: ArrayData if (0 until ad.numElements()).forall(!ad.isNullAt(_)) =>
+            Array.tabulate(ad.numElements())(i => ad.getArray(i).toDoubleArray())
+          case other => throw new IllegalArgumentException(
+            s"${GraftFunctions.MatApplyName} matrix must be non-null with no null rows, got $other")
+        }
+        case (other, _) => throw new IllegalArgumentException(
+          s"${GraftFunctions.MatApplyName} matrix must be a constant array<array<double>>, got $other")
       }
       MatrixApply(exprs(0), mat)
-    })
+    }),
+    GraftFunctions.TopKName -> (exprs => TopKByScore.coerced(
+      exprs(0), exprs(1), intLit(GraftFunctions.TopKName, "k", exprs(2)))),
+    GraftFunctions.KmvName -> (exprs =>
+      KmvSketch.coerced(exprs(0), intLit(GraftFunctions.KmvName, "k", exprs(1))))
   )
-
-  /** The builders as a FunctionRegistry-shaped seq, for reuse by
-    * runtime registration.
-    */
-  private[graft] def asRegistryEntries
-      : Seq[(String, FunctionRegistry.FunctionBuilder)] =
-    injectables.map { case (n, b) => n -> (b: FunctionRegistry.FunctionBuilder) }
 }

@@ -70,8 +70,9 @@ object GraftSession {
     master.fold(b)(b.master)
   }
 
-  /** Local session for tests / bench on this container, with graft's
-    * native expressions pre-registered.
+  /** Local session for tests and benches, with graft's `graft_*` SQL
+    * functions registered once for SQL text (operators build the
+    * native expressions directly and need no registration).
     */
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val s = builder(Some(s"local[$cores]"), shufflePartitions).getOrCreate()
@@ -99,9 +100,10 @@ object GraftSession {
     *    buildIvfPq so their per-round pins survive executor loss;
     *  - `warehouseDir` is the catalog root for Tables.writeBucketed's
     *    shuffle-free recurring-join tables;
-    *  - graft's native expressions are registered on create (the
-    *    spark.sql.extensions=graft.GraftExtensions config route works
-    *    too and needs no code on the driver path).
+    *  - graft's `graft_*` SQL functions are registered once on create,
+    *    for SQL text only (the spark.sql.extensions=graft.GraftExtensions
+    *    config route installs the same names with no code on the driver
+    *    path); operators build the native expressions directly.
     */
   def cluster(
       totalCores: Int,

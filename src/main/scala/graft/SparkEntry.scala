@@ -51,11 +51,7 @@ object SparkEntry {
     // allocations were the single hottest expression of the bench
     // (r12 stall dumps: >40 CPU-min in NumberConverter/md5Hex when the
     // per-query codegen ran de-optimized). See PairSampleExpression.
-    graft.plans.GraftFunctions.register(pairs.sparkSession)
-    pairs.where(
-      call_function(
-        graft.plans.GraftFunctions.PairSampleName,
-        col("a").cast("long"), col("b").cast("long")))
+    pairs.where(TextFunctions.pairSampleMatch(col("a").cast("long"), col("b").cast("long")))
   }
 
   private val jaccardWordsOracleSql: String = """
@@ -150,7 +146,6 @@ object SparkEntry {
     // explicit (has_embedding), vector summarized as a micro-unit L2
     // norm via the native dot kernel.
     "fs_training_set_embedded" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id").as("entity"), col("embedding"))
       pitTrainingSet(s, dir)
@@ -159,8 +154,7 @@ object SparkEntry {
           col("entity"), col("label_ts_us"), col("label"),
           col("f_click"), col("f_view"),
           col("embedding").isNotNull.as("has_embedding"),
-          floor(sqrt(call_function(
-            graft.plans.GraftFunctions.DotName, col("embedding"), col("embedding")))
+          floor(sqrt(VectorFunctions.dotNative(col("embedding"), col("embedding")))
             * lit(1000000.0)).cast("long").as("norm_micro"))
     }),
     // Paged training-set export — the served GetTrainingSet iterator
@@ -1441,7 +1435,6 @@ object SparkEntry {
     // cost seconds of optimizer+Janino work per plan and overflowed
     // the 64KB generated-method limit into interpreted eval.
     "emb_random_projection" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "embeddings")
         .select(
           col("vec_id"),
@@ -1454,7 +1447,6 @@ object SparkEntry {
     // same lossy-axis eval as matryoshka, but with the training-free
     // JL transform that mixes ALL input dims instead of truncating.
     "emb_rp_recall" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val rp = emb.select(
         col("vec_id"),
@@ -1629,7 +1621,6 @@ object SparkEntry {
     // the projected space — 4x cheaper codebooks and tables on top of
     // PQ's compression, end-to-end deterministic and hash-checked.
     "emb_rp_pq_knn" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val rp = emb.select(
         col("vec_id"),
@@ -4217,10 +4208,6 @@ object SparkEntry {
     // 20-candidate cosine front (lambda = 0.5) — near-duplicates of
     // already-picked results fall behind novel ones.
     "search_mmr_rerank" -> ((s, dir) => {
-      // The candidate pool pins eagerly below — the native cosine must
-      // be registered before that first evaluation, not inside
-      // mmrRerank.
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val q = broadcast(
         emb.where(col("vec_id") < 5)

@@ -1,10 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
-/** Text primitives for the LLM-data-pipeline operators. All composed
-  * from built-in (codegen'd) functions — no UDFs in the hot path.
+import graft.plans.{KmvSketch, LaneHashes, MinHashBands, PairSampleMatch, SortedIntersectSize}
+
+/** Text primitives for the LLM-data-pipeline operators: built-in
+  * (codegen'd) functions and graft's native sketch kernels — no UDFs
+  * in the hot path.
   */
 object TextFunctions {
 
@@ -70,4 +74,35 @@ object TextFunctions {
   /** Count of tokens that appear in a fixed marker set. */
   def markerCount(toks: Column, markers: Seq[String]): Column =
     size(filter(toks, t => t.isin(markers.map(m => m: Any): _*)))
+
+  /** The `bands` portable-MinHash LSH band hashes of a shingle array,
+    * `bands * rowsPerBand` md5 lanes in one pass
+    * (graft.plans.MinHashBands); null for an empty array.
+    */
+  def minhashBands(shingles: Column, bands: Int, rowsPerBand: Int): Column =
+    column(MinHashBands(expression(shingles), bands, rowsPerBand))
+
+  /** The `lanes` md5 lane hashes of one shingle as order-preserving
+    * longs (graft.plans.LaneHashes).
+    */
+  def laneHashes(shingle: Column, lanes: Int): Column =
+    column(LaneHashes(expression(shingle), lanes))
+
+  /** |a ∩ b| of two ascending distinct int or bigint arrays, by merge
+    * walk (graft.plans.SortedIntersectSize).
+    */
+  def sortedIntersectSize(a: Column, b: Column): Column =
+    column(SortedIntersectSize(expression(a), expression(b)))
+
+  /** True when the second md5 byte of "<a>:<b>" is 0: the keyed 1/256
+    * pair sample (graft.plans.PairSampleMatch).
+    */
+  def pairSampleMatch(a: Column, b: Column): Column =
+    column(PairSampleMatch(expression(a), expression(b)))
+
+  /** The `k` smallest distinct hashes of the group, ascending: the KMV
+    * distinct-count sketch (graft.plans.KmvSketch).
+    */
+  def kmvSketch(hash: Column, k: Int): Column =
+    column(KmvSketch.coerced(expression(hash), k).toAggregateExpression())
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AdcTables, CentroidResidual, CentroidTable, NearestCentroid, NearestCentroids, PqCodebook, PqDecode, PqEncode, VectorMean, VectorMoments}
+import graft.plans.{AdcDistance, AdcTables, CentroidResidual, CentroidTable, CosineSimilarity, DotProduct, L2SquaredDistance, MatrixApply, NearestCentroid, NearestCentroids, PqCodebook, PqDecode, PqEncode, TopKByScore, VectorMean, VectorMoments}
 
 /** Vector math over `array<float>` embedding columns — the compute core
   * of the embeddinghub surface (reference:
@@ -30,48 +30,42 @@ object VectorFunctions {
       (acc, x) => acc + x)
 
   /** Inner product via the native codegen'd expression
-    * (graft.plans.DotProduct) — the hnswlib ip-space kernel. Requires
-    * GraftFunctions.register (every graft operator entry point calls
-    * it); [[dot]] is the registration-free HOF twin.
+    * (graft.plans.DotProduct) — the hnswlib ip-space kernel; [[dot]]
+    * is its HOF twin.
     */
   def dotNative(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.DotName, a, b)
+    column(DotProduct(expression(a), expression(b)))
 
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity in [-1, 1], via the native codegen'd Catalyst
-    * expression (graft.plans.CosineSimilarity). The session must have
-    * called `GraftFunctions.register` first — every graft operator
-    * entry point does.
+    * expression (graft.plans.CosineSimilarity).
     */
   def cosine(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.CosineName, a, b)
+    column(CosineSimilarity(expression(a), expression(b)))
 
   /** Higher-order-function cosine: same sequential double accumulation,
-    * no codegen. Kept as the registration-free fallback and as the
-    * cross-check for the native expression in tests.
+    * no codegen. Kept as the cross-check for the native expression in
+    * tests.
     */
   def cosineHof(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Squared euclidean distance, via the native codegen'd expression
-    * (graft.plans.L2SquaredDistance). Requires GraftFunctions.register
-    * (every graft operator entry point calls it).
+    * (graft.plans.L2SquaredDistance).
     */
   def l2Sq(a: Column, b: Column): Column =
-    call_function(graft.plans.GraftFunctions.L2SqName, a, b)
+    column(L2SquaredDistance(expression(a), expression(b)))
 
   /** PQ asymmetric distance: sum_j tables(j)(codes(j)) via the native
-    * codegen'd expression (graft.plans.AdcDistance). Requires
-    * GraftFunctions.register (every graft operator entry point calls
-    * it).
+    * codegen'd expression (graft.plans.AdcDistance).
     */
   def adc(tables: Column, codes: Column): Column =
-    call_function(graft.plans.GraftFunctions.AdcName, tables, codes)
+    column(AdcDistance(expression(tables), expression(codes)))
 
   /** Higher-order-function ADC: the same sequential subspace-order
-    * fold, no codegen. Registration-free fallback and the cross-check
-    * for the native expression in tests. `m` is the subspace count.
+    * fold, no codegen. The cross-check for the native expression in
+    * tests. `m` is the subspace count.
     */
   def adcHof(tables: Column, codes: Column, m: Int): Column =
     aggregate(
@@ -80,17 +74,29 @@ object VectorFunctions {
       (acc, j) => acc + element_at(element_at(tables, j), element_at(codes, j) + lit(1)))
 
   /** Higher-order-function squared euclidean distance: same sequential
-    * double accumulation, no codegen. Registration-free fallback and
-    * the cross-check for the native expression in tests.
+    * double accumulation, no codegen. The cross-check for the native
+    * expression in tests.
     */
   def l2SqHof(a: Column, b: Column): Column = {
     val d = zip_with(asDouble(a), asDouble(b), (x, y) => x - y)
     aggregate(d, lit(0.0), (acc, x) => acc + x * x)
   }
 
+  /** `mat · vec` (graft.plans.MatrixApply): the matrix rides in the
+    * expression as a JVM object, not as a per-row literal.
+    */
+  def matrixApply(vec: Column, mat: Array[Array[Double]]): Column =
+    column(MatrixApply(expression(vec), mat))
+
+  /** Per group, the `k` best (score, id) as array<struct<id, score>>,
+    * best first, ties to the smaller id (graft.plans.TopKByScore).
+    */
+  def topKByScore(score: Column, id: Column, k: Int): Column =
+    column(TopKByScore.coerced(expression(score), expression(id), k).toAggregateExpression())
+
   // Nearest-centroid kernels (graft.plans.CentroidExpressions): each
-  // holds its driver-collected centroid or codebook matrix, so they are
-  // built from Scala, not registered as SQL functions.
+  // holds its driver-collected centroid or codebook matrix, so they
+  // have no SQL name.
 
   /** Id of the centroid most cosine-similar to `vec`. */
   def nearestCentroidId(vec: Column, cents: CentroidTable): Column =
@@ -116,8 +122,7 @@ object VectorFunctions {
   def adcTables(vec: Column, codebook: PqCodebook, dsub: Int): Column =
     column(AdcTables(expression(vec), codebook, dsub))
 
-  // Vector-fit aggregates (graft.plans.VectorFitAggregates), built from
-  // Scala like the kernels above.
+  // Vector-fit aggregates (graft.plans.VectorFitAggregates).
 
   /** Exact n, Σx and Σx·yᵀ of `dims`-element vectors, one row per group
     * (graft.plans.VectorMoments).

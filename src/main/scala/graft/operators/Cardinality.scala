@@ -131,14 +131,12 @@ object Cardinality {
       k: Int
   ): DataFrame = {
     require(k > 1, s"k must be > 1, got $k")
-    graft.plans.GraftFunctions.register(events.sparkSession)
     val M = 1152921504606846976.0 // 2^60, the md5Long60 hash space
     val sk = events
       .groupBy(col(segmentCol).as("seg"))
       .agg(
-        call_function(
-          graft.plans.GraftFunctions.KmvName,
-          TextFunctions.md5Long60(col(userCol).cast("string")), lit(k)).as("sk"),
+        TextFunctions.kmvSketch(TextFunctions.md5Long60(col(userCol).cast("string")), k)
+          .as("sk"),
         count_distinct(col(userCol)).as("exact_d"))
       // pin: the pair stage self-joins this |segments|-row frame; an
       // unpinned plan would re-scan the event log once per join leg

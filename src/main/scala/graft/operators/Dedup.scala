@@ -4,6 +4,7 @@ import graft.operators.Pins.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -127,7 +128,6 @@ object Dedup {
       maxCandidateInstances: Option[Long] = None,
       guardName: String = "minhashLshNative"
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     // The sketch kernel is pure per-row CPU; parallelism is whatever
     // the scan gives us, and a compact parquet corpus arrives in far
     // fewer splits than there are cores (one 600KB file = ONE task
@@ -176,17 +176,13 @@ object Dedup {
       bands: Int = 4,
       rowsPerBand: Int = 4
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs
       .select(
         col(idCol).as("doc_id"),
         array_distinct(shingles(col(textCol), shingleWidth)).as("shs"))
       .select(
         col("doc_id"),
-        posexplode(
-          call_function(
-            graft.plans.GraftFunctions.MinHashBandsName,
-            col("shs"), lit(bands), lit(rowsPerBand)))
+        posexplode(minhashBands(col("shs"), bands, rowsPerBand))
           .as(Seq("band", "band_hash")))
   }
 
@@ -232,15 +228,12 @@ object Dedup {
     // for the min-over-hex == min-over-flipped-long equivalence; the
     // lanes only feed EQUALITY counts downstream, so the long
     // re-encoding never reaches the output).
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val laneCols = (0 until lanes).map(i =>
       min(element_at(col("lh"), i + 1)).as(s"h$i"))
     val sig = sh
       .select(
         col("grp"),
-        call_function(
-          graft.plans.GraftFunctions.LaneHashesName, col("sh"), lit(lanes))
-          .as("lh"))
+        laneHashes(col("sh"), lanes).as("lh"))
       .groupBy(col("grp")).agg(laneCols.head, laneCols.tail: _*)
     val laneMatches = (0 until lanes)
       .map(i => when(col(s"p.h$i") === col(s"q.h$i"), 1L).otherwise(0L))
@@ -533,10 +526,10 @@ object Dedup {
   /** Native one-pass simhash (graft.plans.SimHash64): the whole sketch
     * as a single codegen'd projected column — no explode, no
     * aggregation, scan-speed sketch-per-document. Bit-identical to
-    * [[simhash]] (spec-checked); requires GraftFunctions.register.
+    * [[simhash]] (spec-checked).
     */
   def simhashNative(text: Column): Column =
-    call_function(graft.plans.GraftFunctions.SimHashName, distinctTokens(text))
+    column(graft.plans.SimHash64(expression(distinctTokens(text))))
 
   def simhashNearDups(
       docs: DataFrame,
@@ -627,7 +620,6 @@ object Dedup {
       threshold: Double,
       maxCandidateInstances: Option[Long] = None
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val sorted = freqSortedTokens(docs, idCol, textCol, blockCol)
     val prefix = sorted
       .withColumn("p", (col("nw") - ceil(col("nw") * threshold) + 1).cast("int"))
@@ -662,8 +654,7 @@ object Dedup {
       // merge-walk intersect size over the sorted rank arrays — see
       // [[graft.plans.SortedIntersectSize]]: array_intersect builds a
       // hash set per candidate row; this kernel is allocation-free.
-      .withColumn("inter",
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("ta"), col("tb")))
+      .withColumn("inter", sortedIntersectSize(col("ta"), col("tb")))
       .withColumn(
         "jaccard",
         round(col("inter") / (col("nwa") + col("nwb") - col("inter")), 6))
@@ -790,7 +781,6 @@ object Dedup {
       threshold: Double,
       maxCandidateInstances: Option[Long] = None
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val sorted = freqSortedTokens(docs, idCol, textCol, blockCol)
     val prefix = sorted
       .withColumn("p", (col("nw") - ceil(col("nw") * threshold) + 1).cast("int"))
@@ -822,9 +812,7 @@ object Dedup {
       .join(attach(ta), "a")
       .join(attach(tb), "b")
       // merge-walk intersect size — see [[graft.plans.SortedIntersectSize]]
-      .withColumn("inter",
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("ta"), col("tb"))
-          .cast("long"))
+      .withColumn("inter", sortedIntersectSize(col("ta"), col("tb")).cast("long"))
       .withColumn("containment", col("inter").cast("double") / col("nwa").cast("double"))
       .where(col("containment") >= threshold)
       .select(col("a"), col("b"), col("inter"), col("containment"))
@@ -1071,7 +1059,6 @@ object Dedup {
       maxBlockRows: Option[Long] = None
   ): DataFrame = {
     require(chunkRows > 0, s"chunkRows must be positive, got $chunkRows")
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val s = space.select(col(blockCol).as("block"), col(keyCol).as("k"), col(vecCol).as("vec"))
     val counted = s.groupBy(col("block")).agg(count(lit(1)).as("_n"))
     maxBlockRows.foreach { cap =>
@@ -1137,7 +1124,6 @@ object Dedup {
       nProbe: Int = 2,
       kmeansIterations: Int = 2
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val cents = Similarity.kmeansFit(space, keyCol, vecCol, nCells, kmeansIterations)
     val probes = Similarity.probeCells(space, keyCol, vecCol, cents, nProbe)
       .select(col("query_id").as("k"), col("cell"))
@@ -1213,7 +1199,6 @@ object Dedup {
   ): DataFrame = {
     require(planes >= 1 && planes <= 64, s"planes must fit one long, got $planes")
     require(bands >= 1 && planes % bands == 0, s"bands=$bands must divide planes=$planes")
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val width = planes / bands
     val rp = graft.operators.Quantization
       .randomProjectionNative(col(vecCol), dims, planes, seed)
@@ -1299,7 +1284,6 @@ object Dedup {
       iterations: Int,
       eps: Double
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val ranked = Similarity
       .clusterAssign(space, keyCol, vecCol, k, iterations)
       .withColumn(

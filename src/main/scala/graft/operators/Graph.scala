@@ -538,7 +538,6 @@ object Graph {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     val table = CentroidTable.collect(cents, "centroid_id", "centroid")
     (sub: DataFrame, candK: Int) => {
-      graft.plans.GraftFunctions.register(sub.sparkSession)
       val corpusCells = Similarity.nearestCentroidWithVec(sub, keyCol, vecCol, table)
         .select(
           col("vec_id").as("neighbor_id"), col("v").as("n_vec"),
@@ -585,7 +584,6 @@ object Graph {
       kBuild: Int,
       maxLevel: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val leveled = hnswLevels(space, keyCol, vecCol, maxLevel)
     val edges = (0 to maxLevel)
       .map { l =>

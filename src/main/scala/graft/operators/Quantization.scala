@@ -3,9 +3,10 @@ package graft.operators
 import graft.operators.Pins.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 
 import graft.functions.VectorFunctions
-import graft.plans.{CentroidTable, PqCodebook}
+import graft.plans.{CentroidTable, PqCodebook, SignedProjection}
 
 /** Product quantization (PQ) — the published compressed-index scale
   * path for billion-scale vector search (Jégou, Douze, Schmid:
@@ -96,7 +97,6 @@ object Quantization {
       iterations: Int
   ): PqCodebook = {
     require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
-    graft.plans.GraftFunctions.register(space.sparkSession)
     var codebook = PqCodebook.seeds(space, keyCol, vecCol, m, dims / m, ksub)
     for (_ <- 0 until iterations)
       codebook = PqCodebook.collect(pqStep(space, vecCol, codebook, dims / m), m)
@@ -162,7 +162,6 @@ object Quantization {
       codebooks: DataFrame,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(queries.sparkSession)
     require(dims % m == 0, s"dims=$dims must be divisible by m=$m")
     // tables[j][c] = ||q_sub_j - centroid_c||^2, positionally indexed.
     val qTables = queries.select(
@@ -294,7 +293,6 @@ object Quantization {
       m: Int,
       dims: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(rows.sparkSession)
     encodeWith(residuals(rows, keyCol, vecCol, index.coarseCentroids), "r",
       checkedCodebook(index, m, dims), dims / m)
   }
@@ -380,7 +378,6 @@ object Quantization {
       coarseIterations: Int,
       shiftThreshold: Double
   ): IvfPqMaintenance = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val fresh = Similarity.kmeansStep(corpus, keyCol, vecCol, index.coarseCentroids)
     val shifts = fresh
       .join(
@@ -416,7 +413,6 @@ object Quantization {
       nProbe: Int,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(queries.sparkSession)
     val cells = index.coarseCentroids
     // Query side, one projection per query row: its nProbe nearest
     // cells (cosine, same ranking as the corpus assignment), then a
@@ -586,11 +582,9 @@ object Quantization {
       vecCol: String,
       rot: Seq[Seq[Double]]
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     space.select(
       col(keyCol).as("vec_id"),
-      call_function(
-        graft.plans.GraftFunctions.MatApplyName, col(vecCol), typedLit(rot)).as("vec"))
+      VectorFunctions.matrixApply(col(vecCol), rot.map(_.toArray).toArray).as("vec"))
   }
 
   /** Decode PQ codes back to their reconstructed vectors (sub-centroid
@@ -712,8 +706,7 @@ object Quantization {
       outDims: Int,
       seed: String = "rp"
   ): Column =
-    call_function(
-      graft.plans.GraftFunctions.RpName, vec, lit(dims), lit(outDims), lit(seed))
+    column(SignedProjection(expression(vec), dims, outDims, seed))
 
   /** Achlioptas-style dense ±1 random projection to `outDims`
     * dimensions: out_j = Σ_i vec[i]·s(i,j) / sqrt(outDims), signs from
@@ -780,7 +773,6 @@ object Quantization {
       dims: Int,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(keyCol).as("neighbor_id"), binarySketch(col(vecCol), dims).as("skn"))
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), binarySketch(col(vecCol), dims).as("skq")))

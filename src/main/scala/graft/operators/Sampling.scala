@@ -4,6 +4,8 @@ import graft.operators.Pins.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.topKByScore
+
 /** Deterministic sampling for training-data pipelines.
   *
   * Production corpus sampling must be REPRODUCIBLE: re-running the
@@ -142,7 +144,6 @@ object Sampling {
     */
   def kCenterSelect(space: DataFrame, keyCol: String, vecCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.plans.GraftFunctions.register(space.sparkSession)
     import graft.functions.VectorFunctions.l2Sq
     val pts = space.select(col(keyCol).as("id"), col(vecCol).as("vec"))
     val seed = pts
@@ -199,7 +200,6 @@ object Sampling {
       seed: Long
   ): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // u ∈ (0,1]: 52-bit md5 slice — (v+1)/2^52 is exact in a double,
     // and the two divisions below round identically in any IEEE engine.
     val u = (conv(
@@ -215,9 +215,7 @@ object Sampling {
     // carries the threshold τ. Pinned — it feeds τ, the winner join,
     // and re-running it would re-scan the corpus per consumer.
     val top = keyed
-      .agg(call_function(
-        graft.plans.GraftFunctions.TopKName,
-        col("priority"), col("id"), lit(k + 1)).as("top"))
+      .agg(topKByScore(col("priority"), col("id"), k + 1).as("top"))
       .select(posexplode(col("top")).as(Seq("r", "e")))
       .select(
         col("e.id").as("id"),

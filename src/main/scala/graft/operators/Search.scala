@@ -164,7 +164,6 @@ object Search {
   def mmrRerank(candidates: DataFrame, k: Int, lambda: Double): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(lambda >= 0 && lambda <= 1, "lambda must be in [0,1]")
-    graft.plans.GraftFunctions.register(candidates.sparkSession)
     import graft.functions.VectorFunctions.cosine
     def pickBest(scored: DataFrame, rank: Int): DataFrame =
       scored

@@ -80,7 +80,6 @@ object Similarity {
       vecCol: String,
       minSim: Double
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     corpus
@@ -113,7 +112,6 @@ object Similarity {
       perGroup: Int
   ): DataFrame = {
     require(perGroup >= 1, s"perGroup must be >= 1, got $perGroup")
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     val scored = corpus
@@ -148,7 +146,6 @@ object Similarity {
       vecCol: String,
       k: Int
   )(score: (Column, Column) => Column): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(
       queries.select(col(keyCol).as("query_id"), col(vecCol).as("q_vec")))
     val scored = corpus
@@ -243,12 +240,9 @@ object Similarity {
       queries: DataFrame,
       k: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val q = broadcast(queries.select(
       col(keyCol).as("query_id"), col(vecCol).as("q_vec"), col(labelCol).as("q_label")))
-    def heap(mask: Column) = call_function(
-      graft.plans.GraftFunctions.TopKName,
-      when(mask, col("sim")), col("neighbor_id"), lit(k))
+    def heap(mask: Column) = topKByScore(when(mask, col("sim")), col("neighbor_id"), k)
     val lists = space
       .select(col(keyCol).as("neighbor_id"), col(vecCol).as("n_vec"), col(labelCol).as("n_label"))
       .join(q, col("neighbor_id") =!= col("query_id"))
@@ -328,7 +322,6 @@ object Similarity {
       queryIdCol: String,
       vecCol: String
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queryTokens.select(
       col(queryIdCol).as("query_id"), col("qtok"), col(vecCol).as("q_vec")))
     corpus
@@ -357,8 +350,7 @@ object Similarity {
   ): DataFrame =
     scored
       .groupBy(col(groupCol))
-      .agg(call_function(
-        graft.plans.GraftFunctions.TopKName, col(scoreCol), col(idCol), lit(k)).as("top"))
+      .agg(topKByScore(col(scoreCol), col(idCol), k).as("top"))
       .select(col(groupCol), posexplode(col("top")).as(Seq("r", "e")))
       .select(
         col(groupCol),
@@ -508,7 +500,6 @@ object Similarity {
       k: Int,
       nProbe: Int
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val cents = CentroidTable.collect(
       centroids(corpus, groupColForCentroids, vecCol), "centroid_id", "centroid")
     knnInCells(corpus, queries, keyCol, vecCol, cents, k, nProbe)
@@ -530,7 +521,6 @@ object Similarity {
       nCells: Int,
       kmeansIterations: Int = 3
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val cents = CentroidTable.collect(
       kmeansCodebook(corpus, keyCol, vecCol, nCells, kmeansIterations),
       "centroid_id", "centroid")
@@ -621,7 +611,6 @@ object Similarity {
       vecCol: String,
       pairs: DataFrame // columns: a, b
   ): DataFrame = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     val va = space.select(col(keyCol).as("a"), col(vecCol).as("va"))
     val vb = space.select(col(keyCol).as("b"), col(vecCol).as("vb"))
     pairs
@@ -664,7 +653,6 @@ object Similarity {
       k: Int,
       iterations: Int
   ): CentroidTable = {
-    graft.plans.GraftFunctions.register(space.sparkSession)
     var table = CentroidTable.seeds(space, keyCol, vecCol, k)
     for (_ <- 0 until iterations)
       table = CentroidTable.collect(kmeansStep(space, keyCol, vecCol, table), "centroid_id", "centroid")

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -93,4 +93,9 @@ case class KmvSketch(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvSketch =
     copy(child = newChildren(0))
+}
+
+object KmvSketch {
+  /** The sketch over any integral hash, cast to bigint at analysis time. */
+  def coerced(hash: Expression, k: Int): KmvSketch = KmvSketch(Cast(hash, LongType), k)
 }

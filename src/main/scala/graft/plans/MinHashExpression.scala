@@ -46,9 +46,12 @@ case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
   override def nullable: Boolean = true
 
   require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
-  require((bands * rowsPerBand) % 2 == 0, "portable minhash needs an even lane count")
+  // a Long product: an Int one wraps (2 x Int.MaxValue is -2) and
+  // slips past both checks below
+  private val lanes = bands.toLong * rowsPerBand
+  require(lanes % 2 == 0, "portable minhash needs an even lane count")
   // the kernel renders the "<g>:" seed prefix with at most two digits
-  require(bands * rowsPerBand <= 200, "lane count capped at 200 (two-digit seed groups)")
+  require(lanes <= 200, "lane count capped at 200 (two-digit seed groups)")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_minhash_bands"

@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -113,4 +113,13 @@ case class TopKByScore(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKByScore =
     copy(score = newChildren(0), id = newChildren(1))
+}
+
+object TopKByScore {
+  /** The aggregate over any numeric score and integral id: both are
+    * cast here, at analysis time, instead of ClassCastException-ing
+    * inside the aggregate buffer at execution time.
+    */
+  def coerced(score: Expression, id: Expression, k: Int): TopKByScore =
+    TopKByScore(Cast(score, DoubleType), Cast(id, LongType), k)
 }

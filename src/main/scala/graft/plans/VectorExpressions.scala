@@ -359,10 +359,11 @@ case class AdcDistance(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Runtime registration of graft's native expressions into a session's
-  * function registry (the standalone-library analog of a
-  * SparkSessionExtensions injection — works on any already-built
-  * session, e.g. the driver's).
+/** The SQL names of graft's native expressions, and their runtime
+  * registration into an already-built session's function registry (the
+  * standalone-library analog of the `spark.sql.extensions` route,
+  * graft.GraftExtensions). Registration serves SQL text only: operators
+  * build the expressions directly as typed columns.
   */
 object GraftFunctions {
   val CosineName = "graft_cosine"
@@ -380,41 +381,10 @@ object GraftFunctions {
   val LaneHashesName = "graft_lane_hashes"
 
   def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val registry = classic.sessionState.functionRegistry
-    // Scalar builders are shared with the spark.sql.extensions path
-    // (graft.GraftExtensions) so the two registration routes cannot
-    // drift.
-    graft.GraftExtensions.asRegistryEntries.foreach { case (name, builder) =>
+    val registry =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
+    graft.GraftExtensions.injectables.foreach { case (name, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    registry.createOrReplaceTempFunction(
-      TopKName,
-      (exprs: Seq[Expression]) => {
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(s"graft_topk k must be an int literal, got $other")
-        }
-        // Coerce at construction: an int id / float-or-decimal score is
-        // cast here, at analysis time, instead of ClassCastException-ing
-        // inside the aggregate buffer at execution time.
-        TopKByScore(
-          org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), DoubleType),
-          org.apache.spark.sql.catalyst.expressions.Cast(exprs(1), LongType),
-          k)
-      },
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      KmvName,
-      (exprs: Seq[Expression]) => {
-        val k = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other =>
-            throw new IllegalArgumentException(s"graft_kmv k must be an int literal, got $other")
-        }
-        KmvSketch(org.apache.spark.sql.catalyst.expressions.Cast(exprs(0), LongType), k)
-      },
-      "built-in")
   }
 }

@@ -786,7 +786,6 @@ object StreamingFeatures {
     * (neighbor_id, n_vec).
     */
   def knnServeStream(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val joined = queries
       .join(broadcast(corpus), col("query_id") =!= col("neighbor_id"))
       .withColumn(

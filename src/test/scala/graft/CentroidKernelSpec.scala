@@ -107,7 +107,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val ElemTypes = Seq(FloatType, DoubleType)
 
   test("nearestCentroid == broadcast cross-join + max_by(struct(sim, -id)), float and double") {
-    graft.plans.GraftFunctions.register(spark)
     val cs = centroids(1, Dims)
     val cents = centroidFrame(cs)
     // a zero centroid scores NaN against every vector — NaN ranks above
@@ -125,7 +124,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("nearest n cells == row_number over (sim desc, id), nulls last, ties to the smaller id") {
-    graft.plans.GraftFunctions.register(spark)
     val cs = centroids(2, Dims)
     val cents = centroidFrame(cs)
     val table = CentroidTable.collect(cents, "centroid_id", "centroid")
@@ -171,7 +169,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("pqEncode == subspace join + min_by(struct(d, id)) + collect_list, gaps in ids") {
-    graft.plans.GraftFunctions.register(spark)
     val cb = codebook(3)
     for (elem <- ElemTypes) {
       val space = frame(rows(9, 300, subCentroidRows(cb)), elem)
@@ -188,7 +185,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("ADC tables == subspace join + l2Sq + two collect_list group-bys") {
-    graft.plans.GraftFunctions.register(spark)
     val cb = codebook(4)
     val pq = PqCodebook.collect(cb, M)
     for (elem <- ElemTypes) {
@@ -208,7 +204,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("centroid residual == cell join + zip_with(x - c), nulls and lengths included") {
-    graft.plans.GraftFunctions.register(spark)
     val cs = centroids(5, Dims) :+ (40 -> boxed(1.0, 2.0)) :+ (41 -> boxed(1.0, 2.0, 3.0).updated(1, null))
     val cents = centroidFrame(cs)
     val table = CentroidTable.collect(cents, "centroid_id", "centroid")
@@ -227,7 +222,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a duplicated key is assigned and encoded once per input row") {
-    graft.plans.GraftFunctions.register(spark)
     val cs = centroids(6, Dims)
     val dup = frame(Seq(
       vecRow(1L, cs(0)._2), vecRow(1L, cs(3)._2), vecRow(2L, cs(4)._2)), FloatType)
@@ -283,7 +277,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("centroidDrift == two posexplode means + counts + joins, exact decimal shift") {
-    graft.plans.GraftFunctions.register(spark)
     val extra = Seq(
       vecRow(20000L, null), vecRow(20001L, boxed(1.0, 2.0, 3.0)), // label 11: old slice all null
       vecRow(20002L, boxed(1.0, 2.0, 3.0, 4.0, 5.0)), vecRow(20004L, boxed(1.0, 2.0)),
@@ -309,7 +302,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("clusterAssign == kmeans codebook cross-join + max_by(struct(sim, -id))") {
-    graft.plans.GraftFunctions.register(spark)
     for (elem <- ElemTypes) {
       // key -1 repeats key 0's vector: two equal seeds, an exact tie
       val base = grouped(17, elem)
@@ -321,7 +313,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("ivfCandidateSource == cross-join + bounded-heap cell probe, nProbe < cells") {
-    graft.plans.GraftFunctions.register(spark)
     val cents = centroidFrame(centroids(18, Dims))
     for (elem <- ElemTypes; nProbe <- Seq(1, 2, 4)) {
       val space = frame(rows(19, 150, centroids(18, Dims).map(_._2)), elem)
@@ -334,7 +325,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("ivfCandidateSource: a ±0.0 cell tie goes to the smaller id, not to +0.0 as the heap ranked") {
-    graft.plans.GraftFunctions.register(spark)
     // x's norm overflows to infinity, so it scores -0.0 against cell 1
     // and +0.0 against cell 2: Spark's ordering ties them, Double.compare
     // ranks +0.0 first
@@ -362,7 +352,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("pqReconstruct == codes posexplode + codebook join + collect_list, gaps in ids") {
-    graft.plans.GraftFunctions.register(spark)
     val cb = codebook(21)
     for (elem <- ElemTypes) {
       val enc = encoded(cb, elem)
@@ -411,7 +400,6 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("plan shape: assignment, encoding and the probe's query side are narrow") {
-    graft.plans.GraftFunctions.register(spark)
     val emb = Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
     val cents = Similarity.kmeansCodebook(emb, "vec_id", "embedding", k = 6, iterations = 1)
     val assign = Similarity.nearestCentroidWithVec(emb, "vec_id", "embedding", cents)

@@ -241,7 +241,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("native one-pass simhash equals the declarative HOF sketch") {
-    graft.plans.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.col
     val corpus = sources.Tables.load(spark, GraftTestSession.Sf0001, "documents")
     val mismatches = corpus
@@ -302,6 +301,23 @@ class DedupSpec extends AnyFunSuite {
     // a doc shorter than the shingle width drops out of both pipelines
     val tiny = Seq((1L, "a b"), (2L, "a b c d")).toDF("doc_id", "text")
     assert(Dedup.minhashLshNative(tiny, "doc_id", "text").where(col("a") === 1L).count() == 0)
+  }
+
+  test("bandedSketch rejects an overflowing lane count at the call, before any job runs") {
+    // bands * rowsPerBand wraps as an Int: 2 x Int.MaxValue is -2 and
+    // 65536 x 65536 is 0, both even and <= 200
+    val docs = Seq((1L, "a b c d e f")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val group = "bandedSketch-overflow"
+    sc.setJobGroup(group, group)
+    try {
+      Seq((2, Int.MaxValue), (65536, 65536)).foreach { case (bands, rowsPerBand) =>
+        val e = intercept[IllegalArgumentException](
+          Dedup.bandedSketch(docs, "doc_id", "text", bands = bands, rowsPerBand = rowsPerBand))
+        assert(e.getMessage.contains("lane count capped at 200"), e.getMessage)
+      }
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
   }
 
   test("spanDedup keeps a repeated span only at its first corpus occurrence") {
@@ -561,7 +577,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("graft_sorted_inter: merge-walk size == size(array_intersect) on random sorted sets") {
     val spark = GraftTestSession.spark
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(6)
@@ -574,7 +589,7 @@ class DedupSpec extends AnyFunSuite {
     // exact shape freqSortedTokens produces and the expression requires
     val df = cases.toDF("a", "b")
     val rows = df.select(
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("a"), col("b")).as("m"),
+        graft.functions.TextFunctions.sortedIntersectSize(col("a"), col("b")).as("m"),
         size(array_intersect(col("a"), col("b"))).as("ref"))
       .collect()
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1)))
@@ -582,7 +597,7 @@ class DedupSpec extends AnyFunSuite {
     val asLong = (c: org.apache.spark.sql.Column) => transform(c, x => x.cast("long"))
     val dfl = cases.toDF("a", "b").select(asLong(col("a")).as("a"), asLong(col("b")).as("b"))
     dfl.select(
-        call_function(graft.plans.GraftFunctions.SortedInterName, col("a"), col("b")).as("m"),
+        graft.functions.TextFunctions.sortedIntersectSize(col("a"), col("b")).as("m"),
         size(array_intersect(col("a"), col("b"))).as("ref"))
       .collect()
       .foreach(r => assert(r.getInt(0) == r.getInt(1)))

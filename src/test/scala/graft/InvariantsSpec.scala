@@ -5,7 +5,8 @@ import scala.util.Random
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Analytics, FeatureStore, TextAnalysis}
+import graft.functions.{TextFunctions, VectorFunctions}
+import graft.operators.{Analytics, Cardinality, Dedup, FeatureStore, Quantization, Similarity, TextAnalysis}
 import graft.sources.Lakehouse
 
 /** Seeded randomized invariants: each operator is checked against a
@@ -17,6 +18,45 @@ import graft.sources.Lakehouse
 class InvariantsSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
+
+  test("every native kernel family runs on a session with no graft function registered") {
+    // newSession() shares the context but starts from the built-in
+    // function registry: no graft_* name resolves there
+    val fresh = GraftTestSession.spark.newSession()
+    val vecs = fresh.createDataFrame(Seq(
+      (1L, 1L, Seq(1.0, 0.0)), (2L, 1L, Seq(0.0, 1.0)), (3L, 2L, Seq(1.0, 1.0))))
+      .toDF("id", "grp", "vec")
+    val v = vecs.orderBy("id").select(
+      VectorFunctions.cosine(col("vec"), col("vec")).as("c"),
+      VectorFunctions.l2Sq(col("vec"), array(lit(0.0), lit(0.0))).as("d"),
+      VectorFunctions.dotNative(col("vec"), col("vec")).as("p"),
+      VectorFunctions.adc(array(col("vec")), array(lit(1))).as("a"))
+      .collect()
+    assert(v.forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-12))
+    assert(v.map(r => (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSeq ==
+      Seq((1.0, 1.0, 0.0), (1.0, 1.0, 1.0), (2.0, 2.0, 1.0)))
+    val top = Similarity.topKPerGroup(
+      vecs.withColumn("s", col("vec")(0)), "grp", "s", "id", 1).collect()
+    assert(top.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 3L))
+    val events = fresh.createDataFrame(Seq(("x", 1), ("x", 2), ("y", 2))).toDF("seg", "user")
+    assert(Cardinality.audienceOverlapKmv(events, "seg", "user", 4).collect().nonEmpty)
+    val docs = fresh.createDataFrame(Seq(
+      (1L, "a b c d e f", "s1", "b"), (2L, "a b c d e f", "s2", "b"), (3L, "z y x w", "s1", "b")))
+      .toDF("doc_id", "text", "source", "blk")
+    assert(Dedup.bandedSketch(docs, "doc_id", "text").collect().nonEmpty)
+    assert(docs.select(Dedup.simhashNative(col("text"))).collect().forall(!_.isNullAt(0)))
+    assert(Dedup.corpusOverlap(docs, "source", "text").collect().nonEmpty)
+    assert(Dedup.containmentPairs(docs, "doc_id", "text", "blk", 0.5).collect().nonEmpty)
+    val pairs = fresh.createDataFrame(Seq((0L, 0L), (1L, 2L))).toDF("a", "b")
+    assert(pairs.where(TextFunctions.pairSampleMatch(col("a"), col("b"))).collect().length <= 2)
+    assert(vecs.select(Quantization.randomProjectionNative(col("vec"), 2, 3))
+      .collect().forall(_.getSeq[Double](0).length == 3))
+    val rotated = Quantization.rotate(vecs, "id", "vec", Seq(Seq(0.0, 1.0), Seq(1.0, 0.0)))
+      .orderBy("vec_id").collect().map(_.getSeq[Double](1))
+    assert(rotated.toSeq == Seq(Seq(0.0, 1.0), Seq(1.0, 0.0), Seq(1.0, 1.0)))
+    Seq(graft.plans.GraftFunctions.CosineName, graft.plans.GraftFunctions.TopKName)
+      .foreach(name => assert(!fresh.catalog.functionExists(name), name))
+  }
 
   test("seqPack invariant: random corpora always pack into a gapless stream cover") {
     val rnd = new Random(42)
@@ -319,7 +359,6 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("KmvSketch invariant: k smallest DISTINCT hashes under any partitioning; exact when small") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new Random(275)
     for (trial <- 1 to 5) {
       val n = 1 + rnd.nextInt(80)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextFunctions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate for the native overlap-signature lanes (graft.plans.LaneHashes):
@@ -16,7 +18,6 @@ class LaneHashSpec extends AnyFunSuite {
   private val lanes = 16
 
   test("per-shingle lanes are the flipped hex halves of the declarative md5") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val shingles = Seq("", "a", "a b c", "ümlaut sh", "日本 語 x") ++
       (1 to 2000).map(_ => (1 to 3).map(_ => rnd.alphanumeric.take(5).mkString).mkString(" "))
@@ -25,8 +26,7 @@ class LaneHashSpec extends AnyFunSuite {
       val h = md5(concat(lit(s"$g:"), col("sh")))
       Seq(substring(h, 1, 16).as(s"d${2 * g}"), substring(h, 17, 16).as(s"d${2 * g + 1}"))
     }
-    val native = call_function(
-      graft.plans.GraftFunctions.LaneHashesName, col("sh"), lit(lanes))
+    val native = TextFunctions.laneHashes(col("sh"), lanes)
     // flip the native long back and render as 16-char hex: must equal
     // the declarative substring lane
     val checks = (0 until lanes).map { i =>
@@ -38,7 +38,6 @@ class LaneHashSpec extends AnyFunSuite {
   }
 
   test("signed min over flipped lanes picks the same shingle as string min over hex") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val df = (1 to 500)
       .map(i => (i % 7, (1 to 3).map(_ => rnd.alphanumeric.take(4).mkString).mkString(" ")))
@@ -53,8 +52,7 @@ class LaneHashSpec extends AnyFunSuite {
       min(element_at(col("lh"), i + 1)).as(s"h$i"))
     val a = df.groupBy(col("grp")).agg(declMins.head, declMins.tail: _*)
     val b = df
-      .select(col("grp"), call_function(
-        graft.plans.GraftFunctions.LaneHashesName, col("sh"), lit(lanes)).as("lh"))
+      .select(col("grp"), TextFunctions.laneHashes(col("sh"), lanes).as("lh"))
       .groupBy(col("grp")).agg(nativeMins.head, nativeMins.tail: _*)
     val joined = a.join(b, "grp")
     val checks = (0 until lanes).map(i =>

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextFunctions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate for the native pair-sample kernel (graft.plans.PairSampleMatch):
@@ -19,15 +21,13 @@ class PairSampleSpec extends AnyFunSuite {
     16, 10).cast("int") % 256 === 0
 
   test("native kernel equals the declarative md5/conv predicate") {
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val pairs =
       Seq((0L, 0L), (1L, 2L), (-1L, -2L), (Long.MaxValue, Long.MinValue),
         (Long.MinValue, Long.MinValue), (-9L, 10L)) ++
         (1 to 20000).map(_ => (rnd.nextLong(), rnd.nextLong()))
     val df = pairs.toDF("a", "b")
-    val native = call_function(
-      graft.plans.GraftFunctions.PairSampleName, col("a"), col("b"))
+    val native = TextFunctions.pairSampleMatch(col("a"), col("b"))
     val diff = df.where(declarative =!= native).count()
     assert(diff === 0L)
     // and the sample is non-degenerate: some rows pass, most don't
@@ -36,11 +36,9 @@ class PairSampleSpec extends AnyFunSuite {
   }
 
   test("null inputs drop the row, matching the declarative filter") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq[(java.lang.Long, java.lang.Long)](
       (null, 1L), (1L, null), (null, null), (3L, 4L)).toDF("a", "b")
-    val native = call_function(
-      graft.plans.GraftFunctions.PairSampleName, col("a"), col("b"))
+    val native = TextFunctions.pairSampleMatch(col("a"), col("b"))
     assert(df.where(native).count() === df.where(declarative).count())
   }
 

@@ -47,7 +47,6 @@ class PlanLintSpec extends AnyFunSuite
     // sketch frame (localCheckpoint) so its agg plan is not visible
     // from the outer DF — lint the sketch-build plan directly.
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
     val ev = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "events")
     val df = ev.groupBy(col("event_type")).agg(
       call_function("graft_kmv",
@@ -86,7 +85,6 @@ class PlanLintSpec extends AnyFunSuite
     import org.apache.spark.sql.functions._
     import graft.operators.{Quantization, Similarity}
     import graft.plans.{CentroidTable, PqCodebook}
-    graft.plans.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
     // the guard catches the explode the fits replaced
     assert(vectorGenerates(emb.select(posexplode(col("embedding")))).nonEmpty)
@@ -105,7 +103,6 @@ class PlanLintSpec extends AnyFunSuite
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.functions._
     import graft.operators.{Graph, Quantization, Similarity}
-    graft.plans.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
     /** Why `df` is not on the kernels: a centroid cross-join, a row per
       * vector element, or (`narrow`) any join, aggregate or generator.

@@ -12,7 +12,6 @@ class QuantizationSpec extends AnyFunSuite {
   private lazy val emb = Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
 
   test("native l2Sq is bit-identical to the HOF fold and null-safe on mismatch") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     import graft.functions.VectorFunctions
     val df = Seq(
@@ -204,7 +203,6 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("rp->pq composed path: k rows per query, no self-matches, tracks rp-space exact L2") {
-    graft.plans.GraftFunctions.register(spark)
     val rp = emb.select(
       col("vec_id"),
       Quantization.randomProjectionNative(col("embedding"), 64, 16).as("embedding"))
@@ -229,7 +227,6 @@ class QuantizationSpec extends AnyFunSuite {
   }
 
   test("native ADC is bit-identical to the HOF fold and null-safe") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     import graft.functions.VectorFunctions
     val df = Seq(
@@ -475,7 +472,6 @@ class QuantizationSpec extends AnyFunSuite {
       "projection must be bit-deterministic")
     // Native kernel parity: graft_rp must reproduce the declarative
     // fold bit-for-bit (same signs, same ascending-i accumulation).
-    graft.plans.GraftFunctions.register(spark)
     val nat = emb
       .select(col("vec_id"),
         Quantization.randomProjectionNative(col("embedding"), 64, 16).as("p"))

@@ -31,7 +31,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("native cosine is null-strict on malformed inputs, matching the HOF path") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq(
       (1L, Array(1.0f, 0.0f), Array(1.0f, 0.0f, 0.0f)), // length mismatch
       (2L, Array(1.0f, 2.0f), Array(1.0f, 2.0f))        // well-formed
@@ -46,7 +45,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("tuneNProbe finds the smallest probe count meeting the recall target") {
-    graft.plans.GraftFunctions.register(spark)
     val emb = Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
     val q = emb.where(col("vec_id") < 5)
     val tuned = Similarity.tuneNProbe(
@@ -61,7 +59,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("tuneNProbe evaluates maxProbe itself and reports unmet targets as None") {
-    graft.plans.GraftFunctions.register(spark)
     val emb = Tables.load(spark, GraftTestSession.Sf0001, "embeddings")
     val q = emb.where(col("vec_id") < 5)
     // maxProbe=10 covers every label cell => recall 1.0 is achievable, and
@@ -82,7 +79,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("graft_topk coerces int ids and non-double scores at analysis time") {
-    graft.plans.GraftFunctions.register(spark)
     // int id + float score: round 1 threw ClassCastException at runtime
     val scored = Seq((1, 0.5f, 7), (1, 0.9f, 8), (1, 0.7f, 9))
       .toDF("g", "s", "id")
@@ -92,7 +88,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("native codegen cosine == HOF cosine on real embeddings") {
-    graft.plans.GraftFunctions.register(spark)
     val emb = Tables.load(spark, GraftTestSession.Sf0001, "embeddings").limit(50)
     val pairs = emb.select(col("vec_id").as("a"), col("embedding").as("va"))
       .crossJoin(emb.select(col("vec_id").as("b"), col("embedding").as("vb")))

@@ -10,7 +10,6 @@ class TopKSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("bounded-heap top-k matches window semantics including ties") {
-    graft.plans.GraftFunctions.register(spark)
     // many partitions so partial merge is exercised; tied scores resolve
     // by ascending id
     val scored = (1L to 10000L).map(i => (i % 7, i % 100 / 100.0, i))

@@ -241,7 +241,6 @@ class VectorFitKernelSpec extends AnyFunSuite {
   }
 
   test("kmeansCodebook == window seeds + posexplode/avg Lloyd, one partition") {
-    graft.plans.GraftFunctions.register(spark)
     for (elem <- ElemTypes; iterations <- Seq(0, 1, 3)) {
       // null seeds: a null centroid scores null and never wins an argmax
       val space = frame(lloydRows(3, (3L, 4L)), elem).coalesce(1)
@@ -285,7 +284,6 @@ class VectorFitKernelSpec extends AnyFunSuite {
     df.select(struct(col("subspace"), col("centroid_id")).as("key"), col("centroid"))
 
   test("pqCodebooks == window seeds + posexplode/avg Lloyd + window re-densify, one partition") {
-    graft.plans.GraftFunctions.register(spark)
     for (elem <- ElemTypes; iterations <- Seq(0, 1, 2)) {
       // null parts stay out of the seeds: a null sub-centroid would win
       // every L2 argmin, so every code would be the same
