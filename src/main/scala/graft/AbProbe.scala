@@ -24,7 +24,7 @@ object AbProbe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val confKey = args(2)
-    val names = args.drop(3).toSeq
+    val names = SparkEntry.requireKnown(args.drop(3).toSeq)
     val spark = Bench.session()
     def time(name: String): Bench.Rep = {
       val r = Bench.time(spark, name, sfDir)

@@ -51,7 +51,7 @@ object Bench {
     * under-measure scan-heavy operators).
     */
   def force(spark: SparkSession, name: String, dir: String): Unit =
-    SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    SparkEntry.queries(name).build(spark, dir).write.format("noop").mode("overwrite").save()
 
   /** Pre-rep teardown, all in the untimed gap: drop the table cache
     * (catalog.clearCache() completes ASYNCHRONOUSLY — it is not relied
@@ -130,17 +130,17 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = cpus
+    // Optional subset (comma-separated query names) for local A/B runs
+    // and scaling sweeps; only full-surface runs write BENCH_full.json.
+    val subset = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(v => SparkEntry.requireKnown(v.split(',').map(_.trim).filter(_.nonEmpty).toSeq.sorted))
+    val names = subset.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+
     // The ContextCleaner keeps Spark's defaults: the round-7 A/B
     // (BENCH_AB_r7.json) read blocking off 26.64 s vs on 26.38 s. What
     // keeps prior queries' dead state out of timed windows is drain()'s
     // explicit GC + settle.
     val spark = session(n)
-
-    // Optional subset (comma-separated query names) for local A/B runs
-    // and scaling sweeps; only full-surface runs write BENCH_full.json.
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq.sorted)
-    val names = subset.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
 
     // Every query warms up on the tiny SF (measured: without it the
     // first dedup query absorbed ~20 s of the whole family's cold

@@ -21,9 +21,7 @@ object Explain {
     // physical plan. (Queries that materialize eagerly at construction
     // time — exports, count-derived sampling moduli — run their jobs
     // here too; sf0.01 keeps that cheap.)
-    val named = args.drop(2).toSeq
-    require(named.forall(SparkEntry.queries.contains),
-      "unknown queries: " + named.filterNot(SparkEntry.queries.contains).mkString(", "))
+    val named = SparkEntry.requireKnown(args.drop(2).toSeq)
     val picks = if (named.isEmpty) SparkEntry.queries.keys.toSeq.sorted else named
     // Pinned at 8 cores, not the host's: shuffle partition counts are
     // part of the plan text, which must not depend on the machine.
@@ -41,7 +39,7 @@ object Explain {
     sb.append("# ivfCandidateSource + diverseFromCandidates), whose cells and probe cells\n")
     sb.append("# are native nearest-centroid projections: no plan holds an n x nCells frame.\n")
     picks.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = SparkEntry.queries(name).build(spark, sfDir)
       sb.append(s"\n\n## $name\n\n```\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

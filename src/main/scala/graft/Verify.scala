@@ -1,15 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each SparkEntry.queries build → parquet,
+  * plus every query's oracle in oracle_sql.json, for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query names] — the filter
     // is a builder-side iteration aid; the driver always runs all.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.requireKnown(args(2).split(",").toSeq).toSet)
+      else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -25,23 +27,13 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Data-dependent oracles (e.g. OPQ's learned-rotation literals)
-    // derive from this run's corpus.
-    SparkEntry.oracleDataDir = Some(sfDir)
     new java.io.File(outDir).mkdirs()
-    // The single-file dump is driver-compare tidiness; the checker
-    // globs part files, so builder-side scale-up sweeps (sf100 per-doc
-    // outputs would otherwise funnel a whole scan through ONE task via
-    // the narrow coalesce) can disable it.
-    val coalesce1 = sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") == "1"
+    // One part file per query: driver-compare tidiness.
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val res = fn(spark, sfDir)
-          (if (coalesce1) res.coalesce(1) else res)
-            .write.mode("overwrite").parquet(s"$outDir/$name")
-        }
+      .foreach { case (name, query) =>
+        try query.build(spark, sfDir).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
@@ -58,8 +50,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Data-dependent oracles (e.g. OPQ's learned-rotation literals)
+    // derive from this run's corpus.
+    val json = SparkEntry.queries
+      .map { case (k, query) => s"${q(k)}: ${q(query.oracle(spark, sfDir))}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -24,7 +24,8 @@ object Analytics {
 
   /** TPC-H Q1: pricing summary. One scan, one shuffle, map-side combine.
     * Sums run in DECIMAL (exact, order-independent) and are emitted as
-    * doubles; averages as exact-sum / count (see SparkEntry scaladoc).
+    * doubles; averages as exact-sum / count (see the numeric-exactness
+    * conventions in [[graft.SparkEntry]]'s scaladoc).
     */
   def q1PricingSummary(lineitem: DataFrame): DataFrame =
     lineitem

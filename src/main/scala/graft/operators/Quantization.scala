@@ -627,9 +627,10 @@ object Quantization {
     * ([[pcaWhitening]]'s contract). LAPACK SVD has no cross-engine bit
     * contract, so the emb_opq_knn oracle does not re-derive R in SQL —
     * Verify computes R once and embeds it as literals in the generated
-    * oracle (SparkEntry.opqKnnOracle). A is exact, but the PQ codebooks
-    * it is measured against are double M-step means whose merge order is
-    * not fixed, so R is only stable within one schedule.
+    * oracle (graft.surface.EmbeddingQueries.opqKnnOracle). A is exact,
+    * but the PQ codebooks it is measured against are double M-step means
+    * whose merge order is not fixed, so R is only stable within one
+    * schedule.
     */
   def opqRotation(
       space: DataFrame,

@@ -19,4 +19,16 @@ class BenchSpec extends AnyFunSuite {
     Bench.drain(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
+
+  test("the entry tools' name check rejects only the unknown names, before any job runs") {
+    val sc = GraftTestSession.spark.sparkContext
+    val group = "requireKnown-unknown"
+    sc.setJobGroup(group, group)
+    val e =
+      try intercept[IllegalArgumentException](SparkEntry.requireKnown(Seq("q1_agg", "no_such_query")))
+      finally sc.clearJobGroup()
+    assert(e.getMessage.contains("no_such_query"), e.getMessage)
+    assert(!e.getMessage.contains("q1_agg"), e.getMessage)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate for the native pair-sample kernel (graft.plans.PairSampleMatch):
   * bit-identical to the declarative md5/conv predicate it replaced in
-  * SparkEntry.pairSample — the sampled dedup queries' oracle depends on
+  * DedupQueries.pairSample — the sampled dedup queries' oracle depends on
   * the two forms never diverging.
   */
 class PairSampleSpec extends AnyFunSuite {

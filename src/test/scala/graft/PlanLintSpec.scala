@@ -20,8 +20,8 @@ class PlanLintSpec extends AnyFunSuite
   private lazy val spark = GraftTestSession.spark
 
   test("no query plans a CartesianProduct, an unpartitioned Window, or a UDF") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val df = fn(spark, GraftTestSession.Sf0001)
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
+      val df = q.build(spark, GraftTestSession.Sf0001)
       val cart =
         if (df.queryExecution.sparkPlan.toString.contains("CartesianProduct"))
           Seq(s"$name: CartesianProduct") else Seq.empty
@@ -142,7 +142,7 @@ class PlanLintSpec extends AnyFunSuite
   test("events scans push filters and prune columns (restored family plan audit)") {
     // fs_training_set_pit filters events by event_type: the predicate
     // must reach the parquet scan, not evaluate post-scan
-    val pit = SparkEntry.queries("fs_training_set_pit")(spark, GraftTestSession.Sf0001)
+    val pit = SparkEntry.queries("fs_training_set_pit").build(spark, GraftTestSession.Sf0001)
     val pitScan = pit.queryExecution.executedPlan.toString
     assert(
       pitScan.contains("PushedFilters: [") &&
@@ -150,7 +150,7 @@ class PlanLintSpec extends AnyFunSuite
       "event_type filter not pushed to the events scan")
     // fs_materialize_latest touches 4 of events' columns: the scan's
     // ReadSchema must NOT include the unused JSON properties payload
-    val mat = SparkEntry.queries("fs_materialize_latest")(spark, GraftTestSession.Sf0001)
+    val mat = SparkEntry.queries("fs_materialize_latest").build(spark, GraftTestSession.Sf0001)
     val matScans = mat.queryExecution.executedPlan.toString
       .linesIterator.filter(_.contains("ReadSchema")).mkString("\n")
     assert(matScans.nonEmpty, "no parquet scan found")
