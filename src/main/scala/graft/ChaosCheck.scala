@@ -164,11 +164,15 @@ object ChaosCheck {
 
     // 5. iterative fixpoint: MinHash-LSH candidate pairs into
     // large/small-star connected components, pins checkpointed per round
+    // (driver finish off: this small graph would skip the rounds)
+    val broadcastBound = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     check("minhash_cc")(wrap =>
       Dedup.connectedComponents(
         Dedup.minhashLshNative(wrap(docs), "doc_id", "text")
           .select(col("a"), col("b")),
         docs.select(col("doc_id")), "doc_id", durable = true))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBound)
 
     // 6. k-means: seeds-from-smallest-keys determinism through 3 Lloyd
     // rounds of broadcast + re-aggregate under dying tasks

@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.operators.Pins.PinOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -131,11 +132,12 @@ object Dedup {
     // The sketch kernel is pure per-row CPU; parallelism is whatever
     // the scan gives us, and a compact parquet corpus arrives in far
     // fewer splits than there are cores (one 600KB file = ONE task
-    // doing every md5 while the rest of the cluster idles). A
-    // raw-doc repartition is tiny (it moves text bytes, not exploded
-    // shingle rows) and buys full-width parallelism for the dominant
-    // hashing pass; both self-join consumers sit above the SAME
-    // repartition exchange, which AQE reuses.
+    // doing every md5 while the rest of the cluster idles). Such an
+    // input is round-robin spread to full width first (Width.spread):
+    // a raw-doc repartition is tiny (it moves text bytes, not exploded
+    // shingle rows). A corpus already planned in at least as many
+    // splits as cores is hashed where it lies; a repartition would
+    // only narrow it through a full shuffle.
     // Declarative parity for shingle-less docs needs NO filter here:
     // the kernel returns null for them and null posexplodes to zero
     // rows. (A where(size(shs) > 0) would push into the scan and
@@ -149,9 +151,7 @@ object Dedup {
     // where the persisted single evaluation is stable. Footprint is
     // bands rows of (long, int, 32-char hash) per doc — the same order
     // as a shuffle write of the sketch, spilling to disk if huge.
-    val banded = bandedSketch(
-      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism),
-      idCol, textCol, shingleWidth, bands, rowsPerBand)
+    val banded = bandedSketch(Width.spread(docs), idCol, textCol, shingleWidth, bands, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // fail-fast candidate budget from the band-bucket sizes (reads the
     // persisted sketch once, O(buckets)) — see [[guardBudget]]
@@ -953,31 +953,49 @@ object Dedup {
     * partitioned windows keyed on the star center, so no round moves
     * data through a single task.
     *
+    * Every pin (the initial edge set and each round's) observes the
+    * edge count and a hash-sum in its own job: equal (count, hash-sum)
+    * on consecutive pins is the fixpoint. After any pin whose (long id)
+    * edges fit the session's bound on a relation it ships whole
+    * (`spark.sql.autoBroadcastJoinThreshold`, 16 B per edge), the
+    * edges are collected and finished on the driver by union-find with
+    * the smaller id as root — the same component-minimum labels the
+    * rounds reach, without their jobs. A bound ≤ 0 turns the finish
+    * off. A large graph never shrinks below |V| − #components edges,
+    * so it keeps the distributed rounds throughout.
+    *
     * `durable = true` switches the per-round pin from
     * `localCheckpoint` (executor-memory lineage cut; fine single-node)
     * to `checkpoint` (HDFS/object-store; survives executor loss on a
     * real cluster — requires `sparkContext.setCheckpointDir`).
-    * Fixpoint test = (count, hash-sum) signature of the edge set, one
-    * cheap aggregate over the just-pinned rows per round.
     */
   def connectedComponents(
       pairs: DataFrame,
       nodes: DataFrame,
       idCol: String,
-      durable: Boolean = false,
-      verbose: Boolean = false
+      durable: Boolean = false
   ): DataFrame = {
-    def pin(df: DataFrame): DataFrame = Pins.pin(df, durable)
+    val driverBytes = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // Fixpoint signature: decimal hash-sum (overflow-proof under ANSI).
+    def pin(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+      val (pinned, sig) = Pins.pinObserved(df, durable,
+        count(lit(1)).as("n"),
+        coalesce(
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("h"))
+      (pinned, (sig("n").asInstanceOf[Long], sig("h").asInstanceOf[java.math.BigDecimal]))
+    }
     // Materialize the edge list ONCE: the (possibly expensive)
     // pair-producing subtree must not re-evaluate every round.
-    var edges = pin(
+    var (edges, signature) = pin(
       pairs
         .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
         .where(col("u") =!= col("v"))
         .distinct())
-    var signature: (Long, java.math.BigDecimal) = null
+    def fitsDriver: Boolean = driverBytes > 0 && signature._1 <= driverBytes / 16 &&
+      edges.schema("u").dataType == LongType
     var converged = false
-    while (!converged) {
+    while (!converged && !fitsDriver) {
       val sym = edges
         .select(col("u"), col("v"))
         .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
@@ -1003,30 +1021,47 @@ object Dedup {
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .where(col("u") =!= col("v"))
         .distinct()
-      edges = pin(ss)
-      // Fixpoint signature: decimal hash-sum (overflow-proof under ANSI).
-      val sig = edges
-        .agg(
-          count(lit(1)).as("n"),
-          coalesce(
-            sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-            lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("h"))
-        .collect()(0)
-      val newSignature = (sig.getLong(0), sig.getDecimal(1))
-      converged = signature == newSignature
-      signature = newSignature
-      if (verbose) {
-        println(s"[cc] round edges=${newSignature._1} converged=$converged " +
-          s"t=${System.nanoTime() / 1e9}")
-      }
+      val (next, nextSignature) = pin(ss)
+      converged = nextSignature == signature
+      edges = next
+      signature = nextSignature
     }
+    val labels =
+      if (fitsDriver) componentMinima(edges)
+      else edges.groupBy(col("u")).agg(min(col("v")).as("lbl")).withColumnRenamed("u", "doc_id")
     nodes
       .select(col(idCol).as("doc_id"))
-      .join(
-        edges.groupBy(col("u")).agg(min(col("v")).as("lbl"))
-          .withColumnRenamed("u", "doc_id"),
-        Seq("doc_id"), "left_outer")
+      .join(labels, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("canonical_id"))
+  }
+
+  /** The driver finish of [[connectedComponents]]: collect a small
+    * (u, v) long edge list, union-find it with the smaller root always
+    * winning (so every root is its component's minimum; path halving),
+    * and return a local (doc_id, lbl) relation for every node that is
+    * not its own component minimum.
+    */
+  private def componentMinima(edges: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var a = x
+      if (!parent.contains(a)) parent(a) = a
+      while (parent(a) != a) {
+        parent(a) = parent(parent(a))
+        a = parent(a)
+      }
+      a
+    }
+    edges.collect().foreach { r =>
+      val (ru, rv) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+    }
+    val rows = parent.keys.toArray.flatMap { x =>
+      val root = find(x)
+      if (root != x) Some(Row(x, root)) else None
+    }
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("doc_id", LongType), StructField("lbl", LongType))))
   }
 
   /** Embedding-cosine near-dups within blocks, EXACT, with bounded

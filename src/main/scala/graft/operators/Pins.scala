@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** Lineage pinning for iterative and prefix-sum operators — ONE place
   * that decides how a loop-carried / multiply-consumed frame is cut
@@ -49,6 +49,20 @@ object Pins {
     * durability parameter.
     */
   def pin(df: DataFrame): DataFrame = pin(df, durable = false)
+
+  /** Pin `df` and read the named aggregates `metric +: metrics` over
+    * its rows, keyed by name, in the pin's own job (a
+    * `Dataset.observe`), so a loop's decision read costs no second pass
+    * over the pinned rows. Both pin kinds evaluate the plan once (an
+    * eager checkpoint writes in the job that computes), so each row is
+    * counted once.
+    */
+  def pinObserved(df: DataFrame, durable: Boolean, metric: Column, metrics: Column*)
+      : (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val pinned = pin(df.observe(obs, metric, metrics: _*), durable)
+    (pinned, obs.get)
+  }
 
   /** `df.pinned()` syntax so pin sites read like the localCheckpoint
     * calls they replace (and chain the same way).

@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators over a document table — the corpus-prep
-  * stage of a training-data pipeline. Everything is a narrow projection
-  * (no shuffle at all): at 100TB these run at scan speed with the text
-  * column pruned straight off parquet.
+  * stage of a training-data pipeline. The per-row operators are narrow
+  * projections with the text column pruned straight off parquet; at
+  * 100TB the scan gives them more splits than cores and they run at
+  * scan speed. On a compact input planned in fewer splits than cores,
+  * the CPU-bound ones (quality signals, language markers, PII regexes)
+  * first round-robin spread it to full width ([[Width.spread]]).
   */
 object TextAnalysis {
 
@@ -38,7 +41,7 @@ object TextAnalysis {
       (lit(1.0) - stop / nTok) * lit(0.3) +
       (lit(1.0) - punct / nChar) * lit(0.1) +
       (lit(1.0) - upper / nChar) * lit(0.1)
-    docs.select(
+    Width.spread(docs).select(
       col(idCol).as("doc_id"),
       round(ttr, 6).as("type_token_ratio"),
       round(stop / nTok, 6).as("stopword_ratio"),
@@ -74,7 +77,7 @@ object TextAnalysis {
           lit(lang).as("lang"))
       }: _*)
     }
-    docs.select(
+    Width.spread(docs).select(
       col(idCol).as("doc_id"),
       best.getField("lang").as("lang_pred"),
       best.getField("score").cast("long").as("marker_hits"))
@@ -153,14 +156,16 @@ object TextAnalysis {
     * later one.
     *
     * Scale shape: k chained regexp passes fused into one codegen'd
-    * projection — no shuffle, no explode; the text column prunes
-    * straight off parquet and the whole operator runs at scan speed.
-    * The stage-k count column re-evaluates the k-1 prior replaces
-    * inside the same task (expression-tree sharing keeps no state), so
-    * cost is O(k²) regex passes per row with k = 5 — still scan-bound;
-    * a corpus with hundreds of classes would motivate a custom
-    * Expression holding one compiled Matcher chain, not a different
-    * plan shape.
+    * projection — no explode; the text column prunes straight off
+    * parquet. The regex work is CPU-bound per row, so an input planned
+    * in fewer splits than cores is round-robin spread first
+    * ([[Width.spread]]): one row group would otherwise run every regex
+    * in one task. The stage-k count column re-evaluates the k-1 prior
+    * replaces inside the same task (expression-tree sharing keeps no
+    * state), so cost is O(k²) regex passes per row with k = 5 — still
+    * scan-bound; a corpus with hundreds of classes would motivate a
+    * custom Expression holding one compiled Matcher chain, not a
+    * different plan shape.
     */
   def piiScrub(
       docs: DataFrame,
@@ -179,7 +184,7 @@ object TextAnalysis {
     }
     val total = classes.map(c => col(s"n_${c.name}"))
       .reduce(_ + _).as("n_redacted")
-    docs
+    Width.spread(docs)
       .select(col(idCol).as("doc_id") +: counts :+ cur.as("scrubbed"): _*)
       .select(col("*"), total)
   }

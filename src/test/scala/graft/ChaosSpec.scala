@@ -1,7 +1,6 @@
 package graft
 
 import java.lang.management.ManagementFactory
-import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
@@ -23,7 +22,10 @@ import org.scalatest.funspec.AnyFunSpec
 class ChaosSpec extends AnyFunSpec {
 
   it("fault-injected runs are bit-identical to clean runs (forked local[8,3] JVM)") {
-    val work = Files.createTempDirectory("graft_chaos").toString
+    TempDirs.withTempDir("graft_chaos")(check)
+  }
+
+  private def check(work: String): Unit = {
     val java = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     // Forward the parent's --add-opens pairs (Spark 4.x on JDK 17 needs

@@ -1,7 +1,7 @@
 package graft
 
 import java.lang.management.ManagementFactory
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
@@ -27,9 +27,14 @@ import graft.sources.Lakehouse
 class CrossJvmRaceSpec extends AnyFunSpec {
 
   it("3 writer JVMs x 3 appends: linear history, distinct claims, zero lost appends") {
+    TempDirs.withTempDir("graft_xjvm_race")(race)
+  }
+
+  /** The lakehouse under `work/lake`, writer `w`'s scratch dir `work/w<w>`. */
+  private def race(work: String): Unit = {
     val spark = GraftTestSession.spark
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_xjvm_race").toString
+    val root = s"$work/lake"
     val table = "t_xjvm"
     Lakehouse.commit(Seq((0L, "base")).toDF("k", "v"), root, table, "overwrite")
 
@@ -54,7 +59,7 @@ class CrossJvmRaceSpec extends AnyFunSpec {
     // would make the 300s waitFor unreachable for a hung writer).
     val procs = (1 to 3).map { w =>
       val pb = new ProcessBuilder(cmd(w).asJava).redirectErrorStream(true)
-      pb.directory(Files.createTempDirectory(s"graft_xjvm_w$w").toFile)
+      pb.directory(Files.createDirectories(Paths.get(work, s"w$w")).toFile)
       val p = pb.start()
       val buf = new _root_.java.io.ByteArrayOutputStream()
       val drain = new Thread(() => p.getInputStream.transferTo(buf))

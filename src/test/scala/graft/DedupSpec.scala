@@ -6,6 +6,18 @@ import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite {
 
+  /** Connected components with the driver finish off, so every graph
+    * runs the distributed star rounds to their fixpoint.
+    */
+  private def roundsOnly[A](body: => A): A = {
+    val conf = GraftTestSession.spark.conf
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val previous = conf.get(key)
+    conf.set(key, "-1")
+    try body
+    finally conf.set(key, previous)
+  }
+
   test("embeddingLshDedup finds identical vectors, verifies exactly, misses nothing it emits") {
     val spark = GraftTestSession.spark
     import spark.implicits._
@@ -217,14 +229,66 @@ class DedupSpec extends AnyFunSuite {
     val nodes = (1L to 8L).toDF("id")
     val expected = Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 6L, 7L -> 6L, 8L -> 8L)
-    val local = Dedup.connectedComponents(edges, nodes, "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(local == expected)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val durable = Dedup.connectedComponents(edges, nodes, "id", durable = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(durable == expected)
+    // Rounds only: the driver finish would take this small graph
+    // before the per-round pins under test run.
+    roundsOnly {
+      val local = Dedup.connectedComponents(edges, nodes, "id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(local == expected)
+      val durable = TempDirs.withCheckpointDir(spark.sparkContext, "graft_cc_ckpt") {
+        Dedup.connectedComponents(edges, nodes, "id", durable = true)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      assert(durable == expected)
+    }
+  }
+
+  test("connectedComponents: driver finish and star rounds give identical labels") {
+    val spark = GraftTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{explode, typedLit}
+    val rnd = new scala.util.Random(42)
+    def shuffledIds(n: Int): IndexedSeq[Long] = rnd.shuffle((1 to n).map(_ * 7L + 3L))
+    val chain = { val ids = shuffledIds(120); ids.zip(ids.tail) }
+    val star = { val ids = shuffledIds(40); ids.tail.map(ids.head -> _) }
+    val sparse = {
+      val ids = shuffledIds(300)
+      Seq.fill(220)((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+    }
+    // duplicates, reversed copies and self-loops on top of the sparse graph
+    val messy = sparse ++ sparse.take(60) ++ sparse.take(60).map(_.swap) ++
+      sparse.take(20).map { case (a, _) => (a, a) }
+    val graphs = Seq(
+      "chain" -> chain, "star" -> star, "sparse" -> sparse, "messy" -> messy,
+      "chains+star" -> (chain ++ star.map { case (a, b) => (a + 5000L, b + 5000L) }),
+      "self-loops only" -> Seq((3L, 3L), (10L, 10L)),
+      "no edges" -> Seq.empty[(Long, Long)])
+    graphs.foreach { case (name, edges) =>
+      // isolated nodes beyond every edge endpoint label themselves
+      val ids = (edges.flatMap { case (a, b) => Seq(a, b) } ++ (9001L to 9010L)).distinct
+      val pairs = edges.toDF("a", "b")
+      // not a LocalRelation, so the plan check below sees only the finish's
+      val nodes = spark.range(0, 1).select(explode(typedLit(ids)).as("id"))
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val finished = Dedup.connectedComponents(pairs, nodes, "id")
+      val rounds = roundsOnly(labels(Dedup.connectedComponents(pairs, nodes, "id")))
+      assert(finished.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+        s"$name: a small graph takes the driver finish")
+      assert(labels(finished) == rounds, s"$name: driver finish != star rounds")
+      // reference: component minimum by repeated min-label relaxation
+      var ref = ids.map(i => i -> i).toMap
+      var changed = true
+      while (changed) {
+        val next = edges.foldLeft(ref) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l)
+        }
+        changed = next != ref
+        ref = next
+      }
+      assert(rounds == ref, s"$name: labels are not the component minima")
+    }
   }
 
   test("portable md5 sketch modes agree with the xxhash modes on verdicts") {

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Graph, HnswExport}
@@ -17,6 +18,11 @@ import graft.operators.{Graph, HnswExport}
   */
 class HnswExportSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
+
+  /** The suite's index files, deleted after its last test. */
+  private var dir: String = _
+  override def run(testName: Option[String], args: Args): Status =
+    TempDirs.withTempDir("hnsw_export") { d => dir = d; super.run(testName, args) }
 
   private val n = 200
   private val dim = 2
@@ -45,7 +51,7 @@ class HnswExportSpec extends AnyFunSuite {
   }
 
   private lazy val path = {
-    val p = Files.createTempDirectory("hnsw_export").resolve("circle.hnsw").toString
+    val p = s"$dir/circle.hnsw"
     HnswExport.exportIndex(space, "vec_id", "embedding", m, maxLevel, 100, p)
     p
   }
@@ -121,7 +127,7 @@ class HnswExportSpec extends AnyFunSuite {
     val sizeDataPerElement = (2 * m * 4 + 4) + dim * 4 + 8
     val upper = (0 until n).map(i => 4 + levelOf(i.toLong) * (m * 4 + 4)).sum
     assert(actual == HnswExport.HeaderBytes + n.toLong * sizeDataPerElement + upper)
-    val p2 = Files.createTempDirectory("hnsw_export2").resolve("circle.hnsw").toString
+    val p2 = s"$dir/circle2.hnsw"
     val s2 = HnswExport.exportIndex(space, "vec_id", "embedding", m, maxLevel, 100, p2)
     assert(s2.fileBytes == actual)
     assert(java.util.Arrays.equals(
@@ -132,7 +138,7 @@ class HnswExportSpec extends AnyFunSuite {
   test("summary agrees with the parsed artifact") {
     val s = HnswExport.exportIndex(
       space, "vec_id", "embedding", m, maxLevel, 100,
-      Files.createTempDirectory("hnsw_export3").resolve("c.hnsw").toString)
+      s"$dir/c.hnsw")
     assert(s.nElements == n && s.dim == dim)
     assert(s.entryLabel == parsed.labels(parsed.header.enterPoint))
     assert(s.maxLevelUsed == parsed.header.maxLevel)
@@ -151,7 +157,7 @@ class HnswExportSpec extends AnyFunSuite {
     val cells = space.withColumn("cell", pmod(col("vec_id"), lit(4L)))
     val cents = graft.operators.Similarity.centroids(cells, "cell", "embedding")
     val src = Graph.ivfCandidateSource("vec_id", "embedding", cents, nProbe = 8)
-    val p3 = Files.createTempDirectory("hnsw_export_ivf").resolve("circle.hnsw").toString
+    val p3 = s"$dir/circle_ivf.hnsw"
     val s3 = HnswExport.exportIndex(
       space, "vec_id", "embedding", m, maxLevel, 100, p3, candidates = Some(src))
     assert(s3.fileBytes == Files.size(Paths.get(path)))
@@ -163,7 +169,7 @@ class HnswExportSpec extends AnyFunSuite {
 
   test("reader fails loudly on a truncated file") {
     val bytes = Files.readAllBytes(Paths.get(path))
-    val cut = Files.createTempDirectory("hnsw_cut").resolve("cut.hnsw")
+    val cut = Paths.get(dir, "cut.hnsw")
     Files.write(cut, java.util.Arrays.copyOf(bytes, bytes.length - 3))
     intercept[Exception] { HnswExport.readIndex(cut.toString) }
   }

@@ -88,29 +88,30 @@ class InvariantsSpec extends AnyFunSuite {
   }
 
   test("lakehouse merge invariant: random deltas equal the naive anti-join union") {
-    val root = java.nio.file.Files.createTempDirectory("graft_inv_merge").toString
-    val rnd = new Random(7)
-    for (trial <- 1 to 4) {
-      val t = s"t$trial"
-      val base = (1L to (20 + rnd.nextInt(60)))
-        .map(k => (k, rnd.nextInt(1000).toLong)).toMap
-      Lakehouse.commitClustered(
-        base.toSeq.toDF("k", "v"), root, t, "overwrite", "k", 1 + rnd.nextInt(6))
-      // delta: random updates / inserts / deletes over a random key range
-      val delta = (1 to 10 + rnd.nextInt(20)).map { _ =>
-        val k = 1L + rnd.nextInt(120) // some miss the table entirely
-        (k, rnd.nextInt(1000).toLong, rnd.nextInt(4) == 0) // 25% deletes
-      }.groupBy(_._1).map(_._2.head).toSeq // unique source keys
-      Lakehouse.merge(
-        spark, root, t, delta.toDF("k", "v", "del"), "k",
-        deleteWhen = Some(col("del")))
-      val got = Lakehouse.read(spark, root, t)
-        .select($"k", $"v").as[(Long, Long)].collect().toMap
-      // naive reference
-      val deltaMap = delta.map(d => d._1 -> d).toMap
-      val want = (base -- deltaMap.keys) ++
-        deltaMap.collect { case (k, (_, v, del)) if !del => k -> v }
-      assert(got == want, s"trial $trial")
+    TempDirs.withTempDir("graft_inv_merge") { root =>
+      val rnd = new Random(7)
+      for (trial <- 1 to 4) {
+        val t = s"t$trial"
+        val base = (1L to (20 + rnd.nextInt(60)))
+          .map(k => (k, rnd.nextInt(1000).toLong)).toMap
+        Lakehouse.commitClustered(
+          base.toSeq.toDF("k", "v"), root, t, "overwrite", "k", 1 + rnd.nextInt(6))
+        // delta: random updates / inserts / deletes over a random key range
+        val delta = (1 to 10 + rnd.nextInt(20)).map { _ =>
+          val k = 1L + rnd.nextInt(120) // some miss the table entirely
+          (k, rnd.nextInt(1000).toLong, rnd.nextInt(4) == 0) // 25% deletes
+        }.groupBy(_._1).map(_._2.head).toSeq // unique source keys
+        Lakehouse.merge(
+          spark, root, t, delta.toDF("k", "v", "del"), "k",
+          deleteWhen = Some(col("del")))
+        val got = Lakehouse.read(spark, root, t)
+          .select($"k", $"v").as[(Long, Long)].collect().toMap
+        // naive reference
+        val deltaMap = delta.map(d => d._1 -> d).toMap
+        val want = (base -- deltaMap.keys) ++
+          deltaMap.collect { case (k, (_, v, del)) if !del => k -> v }
+        assert(got == want, s"trial $trial")
+      }
     }
   }
 
@@ -818,25 +819,26 @@ class InvariantsSpec extends AnyFunSuite {
 
   test("writeAuditPublish invariant: publishes iff the batch is clean; table state is exact") {
     import graft.operators.FeatureStore.ContractCheck
-    val root = java.nio.file.Files.createTempDirectory("graft_inv_wap").toString
-    val rnd = new Random(947)
-    val checks = Seq(ContractCheck.NotNull("k"), ContractCheck.InRange("v", 0, 50))
-    for (trial <- 1 to 6) {
-      val t = s"w$trial"
-      // random batch; ~half the trials inject a violation
-      val rows = (1L to (5 + rnd.nextInt(10))).map { i =>
-        (if (rnd.nextInt(20) == 0) None else Some(i),
-          if (rnd.nextInt(8) == 0) 50.0 + rnd.nextInt(100) else rnd.nextInt(51).toDouble)
+    TempDirs.withTempDir("graft_inv_wap") { root =>
+      val rnd = new Random(947)
+      val checks = Seq(ContractCheck.NotNull("k"), ContractCheck.InRange("v", 0, 50))
+      for (trial <- 1 to 6) {
+        val t = s"w$trial"
+        // random batch; ~half the trials inject a violation
+        val rows = (1L to (5 + rnd.nextInt(10))).map { i =>
+          (if (rnd.nextInt(20) == 0) None else Some(i),
+            if (rnd.nextInt(8) == 0) 50.0 + rnd.nextInt(100) else rnd.nextInt(51).toDouble)
+        }
+        val df = rows.toDF("k", "v")
+        val clean = rows.forall(r => r._1.nonEmpty && r._2 >= 0 && r._2 <= 50)
+        val (v, report) = Lakehouse.writeAuditPublish(df, root, t, "overwrite", checks)
+        assert(v.nonEmpty == clean, s"trial $trial clean=$clean got $v")
+        assert(report.collect().forall(_.getAs[Boolean]("pass")) == clean)
+        if (clean)
+          assert(Lakehouse.read(spark, root, t).count() == rows.size.toLong)
+        else // never published -> no main table at all
+          assert(Lakehouse.versions(spark, root, t).isEmpty)
       }
-      val df = rows.toDF("k", "v")
-      val clean = rows.forall(r => r._1.nonEmpty && r._2 >= 0 && r._2 <= 50)
-      val (v, report) = Lakehouse.writeAuditPublish(df, root, t, "overwrite", checks)
-      assert(v.nonEmpty == clean, s"trial $trial clean=$clean got $v")
-      assert(report.collect().forall(_.getAs[Boolean]("pass")) == clean)
-      if (clean)
-        assert(Lakehouse.read(spark, root, t).count() == rows.size.toLong)
-      else // never published -> no main table at all
-        assert(Lakehouse.versions(spark, root, t).isEmpty)
     }
   }
 

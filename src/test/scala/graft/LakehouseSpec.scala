@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Lakehouse
@@ -11,7 +10,10 @@ class LakehouseSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
-  private lazy val root = Files.createTempDirectory("graft_lake").toString
+  /** Each test's own lakehouse root, deleted after it. */
+  private var root: String = _
+  override def withFixture(test: NoArgTest): Outcome =
+    TempDirs.withTempDir("graft_lake") { dir => root = dir; super.withFixture(test) }
 
   test("append/overwrite commits replay to the right snapshots, with time travel") {
     val t = "t1"

@@ -18,15 +18,19 @@ class PinsSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
-  private def withDurable[A](body: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set(Pins.ConfKey, "true")
-    try body
-    finally {
-      spark.conf.set(Pins.ConfKey, "false")
+  /** Durable pins for `body`, then the conf value and checkpoint dir
+    * found before it: a suite-wide durable run stays durable after it.
+    */
+  private def withDurable[A](body: => A): A =
+    TempDirs.withCheckpointDir(spark.sparkContext, "graft-ckpt") {
+      val previous = spark.conf.getOption(Pins.ConfKey)
+      spark.conf.set(Pins.ConfKey, "true")
+      try body
+      finally previous match {
+        case Some(v) => spark.conf.set(Pins.ConfKey, v)
+        case None => spark.conf.unset(Pins.ConfKey)
+      }
     }
-  }
 
   test("durable=true without a checkpoint dir fails fast with the contract message") {
     val sc = spark.sparkContext
@@ -64,6 +68,26 @@ class PinsSpec extends AnyFunSuite {
     local.zip(durable).zipWithIndex.foreach { case ((l, d), i) =>
       assert(l == d, s"operator $i differs between local and durable pins")
     }
+  }
+
+  test("metrics observed on a pin equal a separate aggregate, local and durable") {
+    // A shuffle below the pin: the observation rides on the post-exchange
+    // stage, and a reliable checkpoint must not count its rows twice.
+    val df = spark.range(0, 5000).select((col("id") % 997).as("u"), (col("id") % 13).as("v"))
+      .distinct()
+    val metrics = Seq(
+      count(lit(1)).as("n"),
+      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h"))
+    def observedAndAggregated(): (Map[String, Any], Map[String, Any]) = {
+      val (pinned, observed) = Pins.pinObserved(df, durable = false, metrics.head, metrics.tail: _*)
+      val r = pinned.agg(metrics.head, metrics.tail: _*).head()
+      (observed, Map("n" -> r.get(0), "h" -> r.get(1)))
+    }
+    val (localObs, localAgg) = observedAndAggregated()
+    assert(localObs == localAgg)
+    val (durableObs, durableAgg) = withDurable(observedAndAggregated())
+    assert(durableObs == durableAgg)
+    assert(durableObs == localObs)
   }
 
   test("conf flips the shared helper to reliable checkpoints (RDD is checkpointed)") {

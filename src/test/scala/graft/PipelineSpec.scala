@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, TextAnalysis}
@@ -18,7 +17,10 @@ class PipelineSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
-  private lazy val root = Files.createTempDirectory("graft_pipeline").toString
+  /** Each test's own lakehouse root, deleted after it. */
+  private var root: String = _
+  override def withFixture(test: NoArgTest): Outcome =
+    TempDirs.withTempDir("graft_pipeline") { dir => root = dir; super.withFixture(test) }
 
   test("corpus pipeline: quality gate -> exact dedup -> chunk -> lakehouse, counts conserve") {
     val docs = Tables.load(spark, GraftTestSession.Sf0001, "documents")

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
@@ -12,7 +11,10 @@ class SourcesSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
   import spark.implicits._
 
-  private lazy val tmp = Files.createTempDirectory("graft_sources").toString
+  /** Each test's own scratch dir, deleted after it. */
+  private var tmp: String = _
+  override def withFixture(test: NoArgTest): Outcome =
+    TempDirs.withTempDir("graft_sources") { dir => tmp = dir; super.withFixture(test) }
 
   test("csv and json round-trip with explicit schemas") {
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "score")

@@ -375,41 +375,42 @@ class StreamingSpec extends AnyFunSuite {
   test("dedup state survives a query RESTART through the checkpoint (exactly-once resume)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val (inDir, outDir, ckDir) = (s"$root/in", s"$root/out", s"$root/ck")
-    new java.io.File(inDir).mkdirs()
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("fp", StringType),
-      StructField("ts", TimestampType)))
-    def writeBatch(name: String, rows: Seq[String]): Unit =
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$inDir/$name"), rows.mkString("\n"))
-    def runQuery(): Unit = {
-      val q = StreamingFeatures
-        .dedupStream(
-          graft.sources.Tables.registerStream(spark, "doc_arrivals",
-            graft.sources.Tables.StreamSource.Files(inDir, "json", schema))
-            .as[DocArrival])
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckDir)
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    TempDirs.withTempDir("graft_restart") { root =>
+      val (inDir, outDir, ckDir) = (s"$root/in", s"$root/out", s"$root/ck")
+      new java.io.File(inDir).mkdirs()
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("fp", StringType),
+        StructField("ts", TimestampType)))
+      def writeBatch(name: String, rows: Seq[String]): Unit =
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$inDir/$name"), rows.mkString("\n"))
+      def runQuery(): Unit = {
+        val q = StreamingFeatures
+          .dedupStream(
+            graft.sources.Tables.registerStream(spark, "doc_arrivals",
+              graft.sources.Tables.StreamSource.Files(inDir, "json", schema))
+              .as[DocArrival])
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckDir)
+          .outputMode(OutputMode.Append())
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      // run 1: fps x and y commit to the checkpointed state
+      writeBatch("b1.json", Seq(
+        """{"doc_id": 3, "fp": "x", "ts": "2024-01-01T00:00:00.000Z"}""",
+        """{"doc_id": 7, "fp": "y", "ts": "2024-01-01T00:01:00.000Z"}"""))
+      runQuery()
+      // run 2 = a NEW query resuming from the checkpoint: the late dup of
+      // "x" must still be dropped — state recovered, not rebuilt
+      writeBatch("b2.json", Seq(
+        """{"doc_id": 1, "fp": "x", "ts": "2024-01-01T02:00:00.000Z"}""",
+        """{"doc_id": 9, "fp": "z", "ts": "2024-01-01T02:00:00.000Z"}"""))
+      runQuery()
+      val out = spark.read.parquet(outDir).collect()
+        .map(r => r.getAs[String]("fp") -> r.getAs[Long]("doc_id")).toMap
+      assert(out == Map("x" -> 3L, "y" -> 7L, "z" -> 9L))
     }
-    // run 1: fps x and y commit to the checkpointed state
-    writeBatch("b1.json", Seq(
-      """{"doc_id": 3, "fp": "x", "ts": "2024-01-01T00:00:00.000Z"}""",
-      """{"doc_id": 7, "fp": "y", "ts": "2024-01-01T00:01:00.000Z"}"""))
-    runQuery()
-    // run 2 = a NEW query resuming from the checkpoint: the late dup of
-    // "x" must still be dropped — state recovered, not rebuilt
-    writeBatch("b2.json", Seq(
-      """{"doc_id": 1, "fp": "x", "ts": "2024-01-01T02:00:00.000Z"}""",
-      """{"doc_id": 9, "fp": "z", "ts": "2024-01-01T02:00:00.000Z"}"""))
-    runQuery()
-    val out = spark.read.parquet(outDir).collect()
-      .map(r => r.getAs[String]("fp") -> r.getAs[Long]("doc_id")).toMap
-    assert(out == Map("x" -> 3L, "y" -> 7L, "z" -> 9L))
   }
 
   test("streaming near-dup gate: band-bucket state across batches == batch analog") {
@@ -451,34 +452,34 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming MultiSet sink folds micro-batches into versioned space snapshots") {
-    val root = System.getProperty("java.io.tmpdir") + "/graft_stream_spaces_" +
-      System.nanoTime()
-    val space = "vecs"
-    // (key, value, label, seq) set-requests; seq = stream arrival order
-    val input = MemoryStream[(Long, Double, Int, Long)](spark)
-    val query = StreamingFeatures.upsertSink(
-      input.toDS().toDF("vec_id", "value", "label", "seq"),
-      "vec_id", "seq", root, space)
-    try {
-      // batch 1: two writes to key 1 -> the later seq wins within the batch
-      input.addData((1L, 1.0, 10, 1L), (1L, 2.0, 11, 2L), (2L, 5.0, 20, 3L))
-      query.processAllAvailable()
-      val v1 = graft.sources.Spaces.load(spark, root, space, Some(1))
-        .collect().map(r => r.getAs[Long]("vec_id") ->
-          (r.getAs[Double]("value"), r.getAs[Int]("label"))).toMap
-      assert(v1 == Map(1L -> ((2.0, 11)), 2L -> ((5.0, 20))))
-      // batch 2: update key 2, insert key 3; version 1 must be untouched
-      input.addData((2L, 6.0, 21, 4L), (3L, 7.0, 30, 5L))
-      query.processAllAvailable()
-      assert(graft.sources.Spaces.versions(spark, root, space) == Seq(1, 2))
-      val v2 = graft.sources.Spaces.load(spark, root, space, None)
-        .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("value")).toMap
-      assert(v2 == Map(1L -> 2.0, 2L -> 6.0, 3L -> 7.0))
-      val v1Again = graft.sources.Spaces.load(spark, root, space, Some(1)).count()
-      assert(v1Again == 2L) // immutability: the old snapshot still reads as written
-    } finally {
-      query.stop()
-      graft.sources.Spaces.delete(spark, root, space)
+    TempDirs.withTempDir("graft_stream_spaces_") { root =>
+      val space = "vecs"
+      // (key, value, label, seq) set-requests; seq = stream arrival order
+      val input = MemoryStream[(Long, Double, Int, Long)](spark)
+      val query = StreamingFeatures.upsertSink(
+        input.toDS().toDF("vec_id", "value", "label", "seq"),
+        "vec_id", "seq", root, space)
+      try {
+        // batch 1: two writes to key 1 -> the later seq wins within the batch
+        input.addData((1L, 1.0, 10, 1L), (1L, 2.0, 11, 2L), (2L, 5.0, 20, 3L))
+        query.processAllAvailable()
+        val v1 = graft.sources.Spaces.load(spark, root, space, Some(1))
+          .collect().map(r => r.getAs[Long]("vec_id") ->
+            (r.getAs[Double]("value"), r.getAs[Int]("label"))).toMap
+        assert(v1 == Map(1L -> ((2.0, 11)), 2L -> ((5.0, 20))))
+        // batch 2: update key 2, insert key 3; version 1 must be untouched
+        input.addData((2L, 6.0, 21, 4L), (3L, 7.0, 30, 5L))
+        query.processAllAvailable()
+        assert(graft.sources.Spaces.versions(spark, root, space) == Seq(1, 2))
+        val v2 = graft.sources.Spaces.load(spark, root, space, None)
+          .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("value")).toMap
+        assert(v2 == Map(1L -> 2.0, 2L -> 6.0, 3L -> 7.0))
+        val v1Again = graft.sources.Spaces.load(spark, root, space, Some(1)).count()
+        assert(v1Again == 2L) // immutability: the old snapshot still reads as written
+      } finally {
+        query.stop()
+        graft.sources.Spaces.delete(spark, root, space)
+      }
     }
   }
 
@@ -522,29 +523,30 @@ class StreamingSpec extends AnyFunSuite {
 
   test("aggSink: batched partials merge to the exact full aggregate, versions immutable") {
     val input = MemoryStream[(Long, Double)](spark)
-    val root = java.nio.file.Files.createTempDirectory("agg_sink").toString
-    val space = "totals"
-    val query = StreamingFeatures.aggSink(
-      input.toDS().toDF("user_id", "value"), "user_id", "value", root, space)
-    try {
-      input.addData((1L, 10.0), (1L, 2.5), (2L, 7.0))
-      query.processAllAvailable()
-      input.addData((1L, 0.5), (3L, 4.0))
-      query.processAllAvailable()
-      assert(graft.sources.Spaces.versions(spark, root, space) == Seq(1, 2))
-      val v2 = graft.sources.Spaces.load(spark, root, space, None)
-        .collect()
-        .map(r => r.getAs[Long]("entity") ->
-          ((r.getDecimal(1).doubleValue(), r.getAs[Long]("n"))))
-        .toMap
-      // exactly the one-shot aggregate of all five rows, however batched
-      assert(v2 == Map(1L -> ((13.0, 3L)), 2L -> ((7.0, 1L)), 3L -> ((4.0, 1L))))
-      val v1 = graft.sources.Spaces.load(spark, root, space, Some(1))
-        .collect().map(r => r.getAs[Long]("entity") -> r.getAs[Long]("n")).toMap
-      assert(v1 == Map(1L -> 2L, 2L -> 1L), "version 1 snapshot unchanged")
-    } finally {
-      query.stop()
-      graft.sources.Spaces.delete(spark, root, space)
+    TempDirs.withTempDir("agg_sink") { root =>
+      val space = "totals"
+      val query = StreamingFeatures.aggSink(
+        input.toDS().toDF("user_id", "value"), "user_id", "value", root, space)
+      try {
+        input.addData((1L, 10.0), (1L, 2.5), (2L, 7.0))
+        query.processAllAvailable()
+        input.addData((1L, 0.5), (3L, 4.0))
+        query.processAllAvailable()
+        assert(graft.sources.Spaces.versions(spark, root, space) == Seq(1, 2))
+        val v2 = graft.sources.Spaces.load(spark, root, space, None)
+          .collect()
+          .map(r => r.getAs[Long]("entity") ->
+            ((r.getDecimal(1).doubleValue(), r.getAs[Long]("n"))))
+          .toMap
+        // exactly the one-shot aggregate of all five rows, however batched
+        assert(v2 == Map(1L -> ((13.0, 3L)), 2L -> ((7.0, 1L)), 3L -> ((4.0, 1L))))
+        val v1 = graft.sources.Spaces.load(spark, root, space, Some(1))
+          .collect().map(r => r.getAs[Long]("entity") -> r.getAs[Long]("n")).toMap
+        assert(v1 == Map(1L -> 2L, 2L -> 1L), "version 1 snapshot unchanged")
+      } finally {
+        query.stop()
+        graft.sources.Spaces.delete(spark, root, space)
+      }
     }
   }
 

@@ -148,6 +148,52 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(out(2L).getAs[Long]("n_redacted") == 2L)
   }
 
+  /** Round-robin exchanges in `df`'s physical plan (read, not run). */
+  private def roundRobinExchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }.size
+  }
+
+  test("Width.spread: a narrow input gains one round-robin exchange, a wide or streaming one none") {
+    import graft.operators.Width
+    val width = spark.sparkContext.defaultParallelism
+    val docs = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "documents")
+    val narrow = docs.coalesce(1)
+    val spread = Width.spread(narrow)
+    assert(roundRobinExchanges(narrow) == 0)
+    assert(roundRobinExchanges(spread) == 1)
+    assert(spread.rdd.getNumPartitions == width)
+    assert(spread.collect().map(_.toString).sorted.sameElements(
+      narrow.collect().map(_.toString).sorted))
+    val wide = docs.repartition(width)
+    assert(Width.spread(wide) eq wide)
+    val wider = spark.range(0, 100, 1, width + 3).toDF()
+    assert(Width.spread(wider) eq wider, "never narrows a wider input")
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark).toDF()
+    assert(Width.spread(stream) eq stream)
+  }
+
+  test("qualityScore, langId and piiScrub give the same rows spread or not") {
+    import org.apache.spark.sql.DataFrame
+    val docs = graft.sources.Tables.load(spark, GraftTestSession.Sf0001, "documents")
+    val narrow = docs.coalesce(1)
+    val wide = docs.repartition(spark.sparkContext.defaultParallelism)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "qualityScore" -> (d => TextAnalysis.qualityScore(d, "doc_id", "text")),
+      "langId" -> (d => TextAnalysis.langId(d, "doc_id", "text")),
+      "piiScrub" -> (d => TextAnalysis.piiScrub(d, "doc_id", "text")))
+    ops.foreach { case (name, op) =>
+      assert(roundRobinExchanges(op(narrow)) == 1, s"$name spreads a one-partition input")
+      assert(roundRobinExchanges(op(wide)) == 1, s"$name adds nothing to a full-width input")
+      assert(rows(op(narrow)) == rows(op(wide)), s"$name output differs when spread")
+    }
+  }
+
   test("repetitionSignals computes gopher signals and the keep verdict") {
     val passing = (1 to 25).map(i => f"wd$i%02d").mkString(" ") // 25 x 4-char distinct
     val docs = Seq((1L, "aa aa aa bb"), (2L, passing)).toDF("doc_id", "text")

@@ -23,50 +23,53 @@ class WdsShardsSpec extends AnyFunSuite {
   }
 
   test("writeShard -> parseShard round-trips names, order, sizes, CRCs and the byte formula") {
-    val dir = Files.createTempDirectory("wds_spec_")
-    val p = dir.resolve("shard-000000.tar")
-    val samples = Seq(
-      (7L, "hello world", "en"),
-      (9L, "x" * 600, "de"), // payload crosses one block boundary
-      (11L, "", "fr")) // empty member: header only
-    val (payload, written) = WdsShards.writeShard(p, samples)
-    assert(payload == samples.map(s => s._2.length + s._3.length).sum)
-    val formula = samples.map(s =>
-      WdsShards.sampleCost(s._2.length, s._3.length)).sum + 1024L
-    assert(written == formula && Files.size(p) == formula)
-    val members = WdsShards.parseShard(p)
-    assert(members.map(_.name) ==
-      Vector("7.txt", "7.cls", "9.txt", "9.cls", "11.txt", "11.cls"))
-    assert(members.map(_.size) == Vector(11L, 2L, 600L, 2L, 0L, 2L))
-    val crc = (s: String) => {
-      val c = new java.util.zip.CRC32
-      c.update(s.getBytes(StandardCharsets.UTF_8)); c.getValue
+    TempDirs.withTempDir("wds_spec_") { tmp =>
+      val dir = Paths.get(tmp)
+      val p = dir.resolve("shard-000000.tar")
+      val samples = Seq(
+        (7L, "hello world", "en"),
+        (9L, "x" * 600, "de"), // payload crosses one block boundary
+        (11L, "", "fr")) // empty member: header only
+      val (payload, written) = WdsShards.writeShard(p, samples)
+      assert(payload == samples.map(s => s._2.length + s._3.length).sum)
+      val formula = samples.map(s =>
+        WdsShards.sampleCost(s._2.length, s._3.length)).sum + 1024L
+      assert(written == formula && Files.size(p) == formula)
+      val members = WdsShards.parseShard(p)
+      assert(members.map(_.name) ==
+        Vector("7.txt", "7.cls", "9.txt", "9.cls", "11.txt", "11.cls"))
+      assert(members.map(_.size) == Vector(11L, 2L, 600L, 2L, 0L, 2L))
+      val crc = (s: String) => {
+        val c = new java.util.zip.CRC32
+        c.update(s.getBytes(StandardCharsets.UTF_8)); c.getValue
+      }
+      assert(members(0).crc == crc("hello world") && members(3).crc == crc("de"))
     }
-    assert(members(0).crc == crc("hello world") && members(3).crc == crc("de"))
-    Files.list(dir).forEach(f => Files.delete(f)); Files.delete(dir)
   }
 
   test("written shards are valid archives to GNU tar (independent reader)") {
-    val dir = Files.createTempDirectory("wds_spec_gnu_")
-    val p = dir.resolve("shard-000000.tar")
-    WdsShards.writeShard(p, Seq((1L, "alpha beta", "en"), (2L, "gamma", "el")))
-    import scala.sys.process._
-    val listing = Seq("tar", "-tf", p.toString).!!.trim.split("\n").toSeq
-    assert(listing == Seq("1.txt", "1.cls", "2.txt", "2.cls"))
-    val body = Seq("tar", "-xOf", p.toString, "2.txt").!! // !! appends \n
-    assert(body.stripLineEnd == "gamma")
-    Files.list(dir).forEach(f => Files.delete(f)); Files.delete(dir)
+    TempDirs.withTempDir("wds_spec_gnu_") { tmp =>
+      val dir = Paths.get(tmp)
+      val p = dir.resolve("shard-000000.tar")
+      WdsShards.writeShard(p, Seq((1L, "alpha beta", "en"), (2L, "gamma", "el")))
+      import scala.sys.process._
+      val listing = Seq("tar", "-tf", p.toString).!!.trim.split("\n").toSeq
+      assert(listing == Seq("1.txt", "1.cls", "2.txt", "2.cls"))
+      val body = Seq("tar", "-xOf", p.toString, "2.txt").!! // !! appends \n
+      assert(body.stripLineEnd == "gamma")
+    }
   }
 
   test("parseShard rejects a corrupted header checksum") {
-    val dir = Files.createTempDirectory("wds_spec_bad_")
-    val p = dir.resolve("shard-000000.tar")
-    WdsShards.writeShard(p, Seq((1L, "abc", "en")))
-    val bytes = Files.readAllBytes(p)
-    bytes(0) = 'z'.toByte // name byte no longer matches the checksum
-    Files.write(p, bytes)
-    intercept[IllegalArgumentException](WdsShards.parseShard(p))
-    Files.list(dir).forEach(f => Files.delete(f)); Files.delete(dir)
+    TempDirs.withTempDir("wds_spec_bad_") { tmp =>
+      val dir = Paths.get(tmp)
+      val p = dir.resolve("shard-000000.tar")
+      WdsShards.writeShard(p, Seq((1L, "abc", "en")))
+      val bytes = Files.readAllBytes(p)
+      bytes(0) = 'z'.toByte // name byte no longer matches the checksum
+      Files.write(p, bytes)
+      intercept[IllegalArgumentException](WdsShards.parseShard(p))
+    }
   }
 
   test("exportStats: division packing, parsed-byte stats, payload fidelity on real docs") {
