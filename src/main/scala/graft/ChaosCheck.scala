@@ -175,9 +175,12 @@ object ChaosCheck {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastBound)
 
     // 6. k-means: seeds-from-smallest-keys determinism through 3 Lloyd
-    // rounds of broadcast + re-aggregate under dying tasks
-    check("kmeans_codebook")(wrap =>
-      Similarity.kmeansCodebook(wrap(embs), "vec_id", "embedding", k = 8, iterations = 3))
+    // rounds of exact VectorMean M-steps under dying tasks, bit for bit
+    check("kmeans_codebook") { wrap =>
+      val cb = Similarity.kmeansCodebook(wrap(embs), "vec_id", "embedding", k = 8, iterations = 3).collect()
+      bitsFrame(cb.toSeq.flatMap { r =>
+        r.getSeq[Double](1).zipWithIndex.map { case (v, c) => (r.getInt(0), c, v) } })
+    }
 
     // 7. PCA moments: the exact fixed-point aggregate's partial buffers
     // serialized, re-run and merged under dying scan tasks; (μ, W) must

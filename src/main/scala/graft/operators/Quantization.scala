@@ -626,11 +626,11 @@ object Quantization {
     * plain PQ). Every x must have `dims` elements and no null element
     * ([[pcaWhitening]]'s contract). LAPACK SVD has no cross-engine bit
     * contract, so the emb_opq_knn oracle does not re-derive R in SQL —
-    * Verify computes R once and embeds it as literals in the generated
-    * oracle (graft.surface.EmbeddingQueries.opqKnnOracle). A is exact,
-    * but the PQ codebooks it is measured against are double M-step means
-    * whose merge order is not fixed, so R is only stable within one
-    * schedule.
+    * it fits R and embeds it as literals in the generated oracle
+    * (graft.surface.EmbeddingQueries.opqKnnOracle). A and the PQ
+    * codebooks it is measured against are exact sums, so R does not
+    * depend on partitioning: every fit of the same input gives the same
+    * R bit for bit.
     */
   def opqRotation(
       space: DataFrame,

@@ -363,7 +363,8 @@ object Similarity {
     * slice sizes). One map-side combined group-by carries both slices'
     * [[graft.plans.VectorMean]]s and counts; the shift sums
     * round((mo - mn)², 12) as decimals over the positions both means
-    * have, so it is partition-order exact. A null group and a group with
+    * have. The means and the shift are exact sums, so the result does
+    * not depend on partitioning. A null group and a group with
     * no position on both sides (a slice with no non-empty vector) are
     * omitted (no drift defined).
     */
@@ -692,8 +693,12 @@ object Similarity {
     * is one integer division, and d2 is an exact integer in micro² —
     * reproducible under any partitioning. The cutoff is an exact rank
     * over (d2, key) from the distributed prefix-sum numbering, not an
-    * approximate percentile. Scale shape: one posexplode + per-dim
-    * aggregate (64 rows), broadcast means back, one numbering pass.
+    * approximate percentile. Scale shape: no row per element — the
+    * longest vector's length and then the per-dim long sums and counts
+    * are each one global aggregate collected to the driver, d2 is a
+    * narrow projection against the collected integer means, then one
+    * numbering pass. One row per non-empty vector, so keys are expected
+    * to be unique.
     */
   def oodScores(
       space: DataFrame,
@@ -702,24 +707,40 @@ object Similarity {
       pctOod: Int = 1
   ): DataFrame = {
     require(pctOod >= 1 && pctOod <= 50, s"pctOod out of range: $pctOod")
-    val comp = space.select(
-      col(keyCol).as("vec_id"),
-      posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .withColumn(
-        "vm", floor(col("v").cast("double") * 1000000.0).cast("long") + 1000000L)
-    val perDim = comp
-      .groupBy(col("pos"))
-      .agg(sum(col("vm")).as("s"), count(lit(1)).as("n"))
-      .select(col("pos"), expr("s div n").as("mm"))
-    val d2 = comp
-      .join(broadcast(perDim), "pos")
-      .withColumn("dd", (col("vm") - col("mm")) * (col("vm") - col("mm")))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("dd")).as("d2"))
     val (numbered, total) =
-      FeatureStore.globalRowNumbersWithTotal(d2, Seq("d2", "vec_id"))
+      FeatureStore.globalRowNumbersWithTotal(oodDistances(space, keyCol, vecCol), Seq("d2", "vec_id"))
     val cutoff = total - total * pctOod / 100
     numbered.select(
       col("vec_id"), col("d2"), (col("row_number") > cutoff).as("is_ood"))
+  }
+
+  /** (vec_id, d2) of [[oodScores]]. A position's mean is the sum of its
+    * non-null micro-units `div` the number of vectors long enough to
+    * have it (a null element counts, as an exploded row would); a
+    * position with no non-null element has a null mean and, like a
+    * null element, adds nothing to d2; d2 is null when nothing adds.
+    */
+  private[graft] def oodDistances(space: DataFrame, keyCol: String, vecCol: String): DataFrame = {
+    val micro = space
+      .select(
+        col(keyCol).as("vec_id"),
+        transform(col(vecCol), x => floor(x.cast("double") * 1000000.0).cast("long") + 1000000L).as("vm"))
+      .where(size(col("vm")) > 0)
+    val dims = micro.agg(max(size(col("vm")))).head() match {
+      case r if r.isNullAt(0) => 0
+      case r => r.getInt(0)
+    }
+    val means = if (dims == 0) Seq.empty[Column] else {
+      val sums = (1 to dims).flatMap(i => Seq(
+        sum(try_element_at(col("vm"), lit(i))), count(when(size(col("vm")) >= i, lit(1)))))
+      val r = micro.agg(sums.head, sums.tail: _*).head()
+      (0 until dims).map(i =>
+        if (r.isNullAt(2 * i)) lit(null).cast("long") else lit(r.getLong(2 * i) / r.getLong(2 * i + 1)))
+    }
+    val dd = zip_with(col("vm"), array(means: _*).cast("array<bigint>"), (v, m) => (v - m) * (v - m))
+    micro.select(
+      col("vec_id"),
+      aggregate(dd, lit(null).cast("long"),
+        (acc, x) => when(x.isNull, acc).when(acc.isNull, x).otherwise(acc + x)).as("d2"))
   }
 }

@@ -197,9 +197,10 @@ object WdsShards {
 
   /** Export `docs` (doc_id, textCol, clsCol) as WebDataset tar shards
     * and return the per-shard manifest with every stat re-derived from
-    * the parsed artifact bytes. Shard files land under a
-    * per-invocation temp dir (a real deployment points this at shared
-    * storage) and are deleted after the parse unless `keepDir`.
+    * the parsed artifact bytes. With `keepDir` (a real deployment
+    * points it at shared storage) the shard files land there and stay;
+    * without it each shard is a task-local temp file, deleted after its
+    * parse.
     */
   def exportStats(
       docs: DataFrame,
@@ -222,9 +223,7 @@ object WdsShards {
       .withColumn("shard_id",
         ((col("running_sum") - col("tar_bytes")) / lit(targetBytes)).cast("long"))
       .select("doc_id", "txt", "cls", "shard_id")
-    val dir = keepDir.getOrElse(Files.createTempDirectory("graft_wds_"))
-    val dirStr = dir.toString
-    val keep = keepDir.isDefined
+    val keepStr = keepDir.map(_.toString)
     val rows = cum
       .repartition(col("shard_id"))
       .sortWithinPartitions("shard_id", "doc_id")
@@ -235,10 +234,13 @@ object WdsShards {
         var cur = Long.MinValue
         val outRows = scala.collection.mutable.ArrayBuffer.empty[Row]
         def flush(): Unit = if (buf.nonEmpty) {
-          val path = Paths.get(dirStr, f"shard-$cur%06d.tar")
-          val (payload, written) = writeShard(path, buf.toSeq)
-          val parsed = parseShard(path)
-          val fileBytes = Files.size(path)
+          val path = keepStr.fold(Files.createTempFile("graft_wds_", ".tar"))(
+            Paths.get(_, f"shard-$cur%06d.tar"))
+          val (written, parsed, fileBytes) =
+            try {
+              val (_, written) = writeShard(path, buf.toSeq)
+              (written, parseShard(path), Files.size(path))
+            } finally if (keepStr.isEmpty) Files.deleteIfExists(path)
           // artifact-vs-source fidelity, checked in-task where the
           // source strings are still at hand: member order, names and
           // payload CRCs must match what we intended to archive
@@ -254,7 +256,6 @@ object WdsShards {
           val parsedPayload = parsed.map(_.size).sum
           outRows += Row(cur, buf.size.toLong, parsedPayload, fileBytes,
             buf.head._1, buf.last._1, buf.map(_._1).sum, ok)
-          if (!keep) Files.deleteIfExists(path)
           buf.clear()
         }
         it.foreach { ir =>

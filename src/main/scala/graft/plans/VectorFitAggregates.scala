@@ -12,10 +12,11 @@ import org.apache.spark.sql.graft.DecimalErrors
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** Exact per-cell sums of `round(v, 12).cast("decimal(38,12)")` — the
-  * buffer of [[VectorMoments]]. Each cell holds the running sum of the
-  * unscaled decimal(38,12) terms as a 128-bit two's-complement integer
-  * (`hi`, `lo`), so a sum is exact and independent of the order rows and
+/** Exact per-cell sums of `round(v, 12).cast("decimal(38,12)")` and
+  * the count of those terms — the buffer of [[VectorMoments]] and
+  * [[VectorMean]]. Each cell holds the running sum of the unscaled
+  * decimal(38,12) terms as a 128-bit two's-complement integer (`hi`,
+  * `lo`), so a sum is exact and independent of the order rows and
   * partial buffers are added in.
   *
   * The replaced `sum` over that cast is reproduced rule for rule:
@@ -26,20 +27,34 @@ import org.apache.spark.sql.types._
   *    Spark's own BigDecimal steps;
   *  - a NaN or infinite term casts to null and is skipped, as is a term
   *    past decimal(38,12) without ANSI mode (with it, the cast throws);
+  *    a skipped term is not counted;
   *  - a running sum that reaches 10^38 unscaled (the decimal(38,12)
   *    limit of the grouped sum's buffer, checked after every add) stays
   *    null: the result is null, or the ANSI overflow error;
   *  - a cell that saw no non-null term is null.
+  *
+  * Cells are added on demand ([[ensure]]), so a buffer can sum vectors
+  * of different lengths.
   */
-final class FixedSums(val cells: Int) {
+final class FixedSums(initialCells: Int) {
   import FixedSums._
 
-  val hi = new Array[Long](cells)
-  val lo = new Array[Long](cells)
-  /** Per cell, the terms skipped as null (null until one is). */
-  var skipped: Array[Long] = _
+  var cells: Int = initialCells
+  var hi = new Array[Long](cells)
+  var lo = new Array[Long](cells)
+  /** Per cell, the non-null terms added. */
+  var counts = new Array[Long](cells)
   /** Per cell, whether the running sum overflowed (null until one does). */
   var overflow: Array[Boolean] = _
+
+  /** Grow to at least `len` cells; a new cell has no term. */
+  def ensure(len: Int): Unit = if (len > cells) {
+    hi = java.util.Arrays.copyOf(hi, len)
+    lo = java.util.Arrays.copyOf(lo, len)
+    counts = java.util.Arrays.copyOf(counts, len)
+    if (overflow != null) overflow = java.util.Arrays.copyOf(overflow, len)
+    cells = len
+  }
 
   /** Add the term of `v` to cell `c`. */
   def add(c: Int, v: Double, failOnOverflow: Boolean): Unit = {
@@ -52,16 +67,19 @@ final class FixedSums(val cells: Int) {
       val f = x - fl
       if (math.abs(f - 0.5) > math.abs(x) * 1e-15 + 1e-9) {
         addLong(c, (if (f > 0.5) fl + 1 else fl).toLong)
+        counts(c) += 1
         return
       }
     }
-    if (v.isNaN || v.isInfinite) { skip(c); return }
+    if (v.isNaN || v.isInfinite) return
     val rounded = JBigDecimal.valueOf(v).setScale(Scale, RoundingMode.HALF_UP).doubleValue
     val u = JBigDecimal.valueOf(rounded).setScale(Scale, RoundingMode.HALF_UP).unscaledValue
     if (u.abs.compareTo(Limit) >= 0) {
       if (failOnOverflow) throw DecimalErrors.termOutOfRange(rounded, Precision, Scale)
-      skip(c)
-    } else setChecked(c, value(c).add(u))
+    } else {
+      setChecked(c, value(c).add(u))
+      counts(c) += 1
+    }
   }
 
   private def addLong(c: Int, u: Long): Unit = {
@@ -70,11 +88,6 @@ final class FixedSums(val cells: Int) {
     lo(c) = l
     hi(c) = h
     if (h >= LimitHi || h < -LimitHi) setChecked(c, value(c))
-  }
-
-  private def skip(c: Int): Unit = {
-    if (skipped == null) skipped = new Array[Long](cells)
-    skipped(c) += 1
   }
 
   private def markOverflow(c: Int): Unit = {
@@ -95,8 +108,10 @@ final class FixedSums(val cells: Int) {
     else { lo(c) = s.longValue; hi(c) = s.shiftRight(64).longValue }
 
   def merge(other: FixedSums): Unit = {
+    ensure(other.cells)
     var c = 0
-    while (c < cells) {
+    while (c < other.cells) {
+      counts(c) += other.counts(c)
       if (other.overflowed(c)) markOverflow(c)
       else if (!overflowed(c)) {
         val l = lo(c) + other.lo(c)
@@ -112,35 +127,26 @@ final class FixedSums(val cells: Int) {
       }
       c += 1
     }
-    if (other.skipped != null) {
-      if (skipped == null) skipped = new Array[Long](cells)
-      c = 0
-      while (c < cells) { skipped(c) += other.skipped(c); c += 1 }
-    }
   }
 
-  /** Cell `c` as the replaced `sum(...).cast("double")` reads it after
-    * `terms` added terms: null when empty or overflowed (ANSI: throws).
+  /** Cell `c` as the replaced `sum(...).cast("double")` reads it: null
+    * when empty or overflowed (ANSI: throws).
     */
-  def result(c: Int, terms: Long, failOnOverflow: Boolean): java.lang.Double =
+  def result(c: Int, failOnOverflow: Boolean): java.lang.Double =
     if (overflowed(c)) {
       if (failOnOverflow) throw DecimalErrors.sumOverflow()
       null
-    } else if (terms - (if (skipped == null) 0L else skipped(c)) <= 0) null
+    } else if (counts(c) == 0) null
     else if ((hi(c) == 0L && lo(c) >= 0L) || (hi(c) == -1L && lo(c) < 0L))
       JBigDecimal.valueOf(lo(c), Scale).doubleValue
     else new JBigDecimal(value(c), Scale).doubleValue
 
-  def serializedSize: Int =
-    4 + 16 * cells + 1 + (if (skipped == null) 0 else 8 * cells) +
-      1 + (if (overflow == null) 0 else cells)
+  def serializedSize: Int = 4 + 24 * cells + 1 + (if (overflow == null) 0 else cells)
 
   def write(bb: ByteBuffer): Unit = {
     bb.putInt(cells)
-    bb.asLongBuffer().put(hi).put(lo)
-    bb.position(bb.position() + 16 * cells)
-    bb.put((if (skipped == null) 0 else 1).toByte)
-    if (skipped != null) { bb.asLongBuffer().put(skipped); bb.position(bb.position() + 8 * cells) }
+    bb.asLongBuffer().put(hi).put(lo).put(counts)
+    bb.position(bb.position() + 24 * cells)
     bb.put((if (overflow == null) 0 else 1).toByte)
     if (overflow != null) overflow.foreach(o => bb.put((if (o) 1 else 0).toByte))
   }
@@ -157,13 +163,8 @@ object FixedSums {
 
   def read(bb: ByteBuffer): FixedSums = {
     val s = new FixedSums(bb.getInt)
-    bb.asLongBuffer().get(s.hi).get(s.lo)
-    bb.position(bb.position() + 16 * s.cells)
-    if (bb.get() == 1) {
-      s.skipped = new Array[Long](s.cells)
-      bb.asLongBuffer().get(s.skipped)
-      bb.position(bb.position() + 8 * s.cells)
-    }
+    bb.asLongBuffer().get(s.hi).get(s.lo).get(s.counts)
+    bb.position(bb.position() + 24 * s.cells)
     if (bb.get() == 1) s.overflow = Array.fill(s.cells)(bb.get() == 1)
     s
   }
@@ -272,7 +273,7 @@ case class VectorMoments(
 
   override def eval(buffer: MomentsBuffer): Any = {
     val s = buffer.sums
-    def cell(c: Int) = s.result(c, buffer.n, failOnOverflow)
+    def cell(c: Int) = s.result(c, failOnOverflow)
     val sumX = Array.tabulate(dims)(cell)
     val sumXY = Array.tabulate(dims * dims) { c =>
       val (i, j) = (c / dims, c % dims)
@@ -318,95 +319,64 @@ case class VectorMoments(
     copy(x = newChildren(0), y = newChildren(1))
 }
 
-/** Buffer of [[VectorMean]]: per position, the double sum and the count
-  * of non-null elements, as long as the longest vector seen.
-  */
-final class MeanBuffer {
-  var sums: Array[Double] = Array.emptyDoubleArray
-  var counts: Array[Long] = Array.emptyLongArray
-
-  def ensure(len: Int): Unit = if (len > sums.length) {
-    sums = java.util.Arrays.copyOf(sums, len)
-    counts = java.util.Arrays.copyOf(counts, len)
-  }
-}
-
 /** Elementwise mean of the vectors in a group — the k-means and PQ
-  * M-step — without a row per element: it is `avg` per (group, position)
-  * over the posexploded vectors, re-collected in position order, folded
-  * into one double sum and one count per position. Null vectors and null
-  * elements are skipped as `avg` skips them; a position where every
-  * element is null is null; a group with no element at all is null (the
-  * exploded form has no row for it). The sums are doubles, added in row
-  * order within a partition and merged in arrival order, as `avg` adds
-  * them, so on one partition the result is bit-identical to `avg`.
+  * M-step — without a row per element: per position, the exact
+  * [[FixedSums]] sum of its elements' terms over their count, which is
+  * `sum(t).cast("double") / count(t)` with `t = round(x, 12)
+  * .cast("decimal(38,12)")` per (group, position) over the posexploded
+  * vectors, re-collected in position order. Null vectors and null, NaN
+  * or infinite elements add no term; a position with no term is null;
+  * the result is as long as the longest vector seen, and null for a
+  * group with no element at all. Overflow and ANSI errors follow
+  * [[FixedSums]]. The sums are exact, so the mean does not depend on
+  * partitioning or merge order.
   */
 case class VectorMean(
     child: Expression,
+    failOnOverflow: Boolean = SQLConf.get.ansiEnabled,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MeanBuffer] {
+    extends TypedImperativeAggregate[FixedSums] {
 
   private lazy val isFloat = CentroidTable.elemIsFloat(child, prettyName)
 
   override def checkInputDataTypes(): TypeCheckResult = VectorFit.checkVectors(prettyName, children)
 
-  override def createAggregationBuffer(): MeanBuffer = new MeanBuffer
+  override def createAggregationBuffer(): FixedSums = new FixedSums(0)
 
-  override def update(buffer: MeanBuffer, input: InternalRow): MeanBuffer = {
+  override def update(buffer: FixedSums, input: InternalRow): FixedSums = {
     val v = child.eval(input).asInstanceOf[ArrayData]
     if (v != null) {
       val len = v.numElements()
       buffer.ensure(len)
       var i = 0
       while (i < len) {
-        if (!v.isNullAt(i)) {
-          buffer.sums(i) += CentroidTable.get(v, i, isFloat)
-          buffer.counts(i) += 1
-        }
+        if (!v.isNullAt(i)) buffer.add(i, CentroidTable.get(v, i, isFloat), failOnOverflow)
         i += 1
       }
     }
     buffer
   }
 
-  override def merge(buffer: MeanBuffer, other: MeanBuffer): MeanBuffer = {
-    buffer.ensure(other.sums.length)
-    var i = 0
-    while (i < other.sums.length) {
-      buffer.sums(i) += other.sums(i)
-      buffer.counts(i) += other.counts(i)
-      i += 1
-    }
+  override def merge(buffer: FixedSums, other: FixedSums): FixedSums = {
+    buffer.merge(other)
     buffer
   }
 
-  override def eval(buffer: MeanBuffer): Any =
-    if (buffer.sums.isEmpty) null
-    else VectorFit.doubles(Array.tabulate(buffer.sums.length) { i =>
-      if (buffer.counts(i) == 0) null
-      else java.lang.Double.valueOf(buffer.sums(i) / buffer.counts(i).toDouble)
+  override def eval(buffer: FixedSums): Any =
+    if (buffer.cells == 0) null
+    else VectorFit.doubles(Array.tabulate(buffer.cells) { i =>
+      val sum = buffer.result(i, failOnOverflow)
+      if (sum == null) null else java.lang.Double.valueOf(sum / buffer.counts(i).toDouble)
     })
 
-  override def serialize(buffer: MeanBuffer): Array[Byte] = {
-    val len = buffer.sums.length
-    val bb = ByteBuffer.allocate(4 + 16 * len)
-    bb.putInt(len)
-    bb.asDoubleBuffer().put(buffer.sums)
-    bb.position(4 + 8 * len)
-    bb.asLongBuffer().put(buffer.counts)
+  override def serialize(buffer: FixedSums): Array[Byte] = {
+    val bb = ByteBuffer.allocate(buffer.serializedSize)
+    buffer.write(bb)
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): MeanBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buffer = new MeanBuffer
-    buffer.ensure(bb.getInt)
-    bb.asDoubleBuffer().get(buffer.sums)
-    bb.position(4 + 8 * buffer.sums.length)
-    bb.asLongBuffer().get(buffer.counts)
-    buffer
-  }
+  override def deserialize(bytes: Array[Byte]): FixedSums = FixedSums.read(ByteBuffer.wrap(bytes))
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true

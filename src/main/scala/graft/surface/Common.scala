@@ -14,6 +14,14 @@ private[surface] object Common {
 
   def decSum6D(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
 
+  /** The exact mean graft.plans.VectorMean takes per position, in SQL:
+    * the decimal(38,12) sum of `round(x, 12)` over the count of its terms.
+    */
+  def exactMeanSql(x: String): String = {
+    val t = s"CAST(round($x, 12) AS DECIMAL(38,12))"
+    s"CAST(sum($t) AS DOUBLE) / count($t)"
+  }
+
   /** WITH-clause body for the deterministic 3-iteration k=8 Lloyd
     * schedule (s0 seeds -> a1/c1 -> a2/c2 -> a3/c3) — shared by the
     * emb_kmeans oracle and the corpus-cluster-profile oracle, which
@@ -49,7 +57,7 @@ private[surface] object Common {
   def kmeansMstepCte(assignName: String, name: String): String = s"""
       $name AS (
         SELECT cell AS centroid_id, list(c ORDER BY pos) AS centroid FROM (
-          SELECT a.cell, u.pos, avg(u.x) AS c
+          SELECT a.cell, u.pos, ${exactMeanSql("u.x")} AS c
           FROM (
             SELECT vec_id, unnest(embedding)::DOUBLE AS x,
                    generate_subscripts(embedding, 1) AS pos

@@ -526,9 +526,9 @@ object EmbeddingQueries {
   private lazy val pageRankBipartiteOracleSql: String =
     pageRankBodySql(bipartiteEdgeCtes)
 
-  private val centroidCte = """
+  private val centroidCte = s"""
       cd AS (
-        SELECT label, pos, avg(x) AS c FROM (
+        SELECT label, pos, ${exactMeanSql("x")} AS c FROM (
           SELECT label, unnest(embedding)::DOUBLE AS x,
                  generate_subscripts(embedding, 1) AS pos
           FROM embeddings) GROUP BY label, pos),
@@ -579,21 +579,15 @@ object EmbeddingQueries {
   private val PqKsub = 32
   private val PqDsub = 64 / PqM
 
-  /** Learned OPQ rotation per sf dir, memoized so the emb_opq_knn query
-    * and its generated oracle share the SAME matrix within one JVM run.
-    * Recomputation is not bit-stable: the cross-covariance is exact, but
-    * the PQ codebooks inside each OPQ iteration are double M-step means
-    * whose partial-sum merge order is not fixed, and a last-bit change in
-    * a sub-centroid can move codes and so R (see Quantization.opqRotation).
+  /** Learned OPQ rotation of an sf dir. Not memoized: every fit in it
+    * (the PQ M-step means, the cross-covariance) is an exact sum that
+    * does not depend on partitioning, so the emb_opq_knn query and its
+    * generated oracle each fit and get the same R bit for bit.
     */
-  private val opqRotCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]
   private def opqRot(s: SparkSession, dir: String): Seq[Seq[Double]] =
-    opqRotCache.computeIfAbsent(
-      dir,
-      _ => Quantization.opqRotation(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        m = PqM, dims = 64, ksub = PqKsub, pqIterations = 2, opqIterations = 2))
+    Quantization.opqRotation(
+      t(s, dir, "embeddings"), "vec_id", "embedding",
+      m = PqM, dims = 64, ksub = PqKsub, pqIterations = 2, opqIterations = 2)
 
   private val PcaK = 8
 
@@ -668,7 +662,7 @@ object EmbeddingQueries {
     def mstep(a: String, name: String) = s"""
       $name AS (
         SELECT subspace, cell AS centroid_id, list(c ORDER BY pos) AS centroid FROM (
-          SELECT a.subspace AS subspace, a.cell AS cell, u.pos, avg(u.x) AS c
+          SELECT a.subspace AS subspace, a.cell AS cell, u.pos, ${exactMeanSql("u.x")} AS c
           FROM (SELECT subspace, vec_id, unnest(subvec) AS x,
                        generate_subscripts(subvec, 1) AS pos FROM sub) u
           JOIN $a a ON u.vec_id = a.vec_id AND u.subspace = a.subspace
@@ -792,7 +786,7 @@ object EmbeddingQueries {
     def kmstep(assignName: String, name: String) = s"""
       $name AS (
         SELECT cell AS centroid_id, list(c ORDER BY pos) AS centroid FROM (
-          SELECT a.cell, u.pos, avg(u.x) AS c
+          SELECT a.cell, u.pos, ${exactMeanSql("u.x")} AS c
           FROM (
             SELECT vec_id, unnest(embedding)::DOUBLE AS x,
                    generate_subscripts(embedding, 1) AS pos
@@ -925,7 +919,7 @@ object EmbeddingQueries {
     def kmstep(assignName: String, name: String) = s"""
       $name AS (
         SELECT cell AS centroid_id, list(c ORDER BY pos) AS centroid FROM (
-          SELECT a.cell, u.pos, avg(u.x) AS c
+          SELECT a.cell, u.pos, ${exactMeanSql("u.x")} AS c
           FROM (
             SELECT vec_id, unnest(embedding)::DOUBLE AS x,
                    generate_subscripts(embedding, 1) AS pos
@@ -945,7 +939,7 @@ object EmbeddingQueries {
     def pmstep(a: String, name: String) = s"""
       $name AS (
         SELECT subspace, cell AS centroid_id, list(c ORDER BY pos) AS centroid FROM (
-          SELECT a.subspace AS subspace, a.cell AS cell, u.pos, avg(u.x) AS c
+          SELECT a.subspace AS subspace, a.cell AS cell, u.pos, ${exactMeanSql("u.x")} AS c
           FROM (SELECT subspace, vec_id, unnest(subvec) AS x,
                        generate_subscripts(subvec, 1) AS pos FROM subt) u
           JOIN $a a ON u.vec_id = a.vec_id AND u.subspace = a.subspace
@@ -1506,8 +1500,8 @@ object EmbeddingQueries {
     // OPQ end-to-end (Ge et al. CVPR'13): learned orthogonal rotation
     // (alternating PQ / Procrustes-SVD) -> PQ -> ADC in the rotated
     // space. The oracle embeds the per-SF rotation as literals
-    // (opqKnnOracle), fitted from the build's session and sf dir;
-    // opqRotCache keeps the query and its oracle on one R.
+    // (opqKnnOracle), fitted from the build's session and sf dir; the
+    // query and its oracle each refit and get the same R.
     "emb_opq_knn" -> Query((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val rotated = Quantization.rotate(emb, "vec_id", "embedding", opqRot(s, dir))
@@ -1811,13 +1805,13 @@ object EmbeddingQueries {
       Similarity.centroidDrift(
         t(s, dir, "embeddings"), "vec_id", "embedding", "label",
         col("vec_id") % 2 === 0),
-      """
+      s"""
       WITH b AS (
         SELECT label, vec_id % 2 = 0 AS is_old,
                generate_subscripts(embedding, 1) AS pos,
                unnest(embedding)::DOUBLE AS x
         FROM embeddings),
-      m AS (SELECT label, is_old, pos, avg(x) AS m FROM b GROUP BY 1, 2, 3),
+      m AS (SELECT label, is_old, pos, ${exactMeanSql("x")} AS m FROM b GROUP BY 1, 2, 3),
       d AS (
         SELECT o.label,
                CAST(round((o.m - n.m) * (o.m - n.m), 12) AS DECIMAL(28,12)) AS d2

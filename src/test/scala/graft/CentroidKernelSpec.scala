@@ -256,13 +256,13 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   // --- the five sites that kept a declarative copy of these kernels ---
 
-  /** [[rows]] on one partition: random vectors plus every edge, so a
-    * mean folds rows in the same order on both sides.
+  /** [[rows]] on seven partitions: random vectors plus every edge. The
+    * means are exact sums, so the layout does not change them.
     */
   private def grouped(seed: Int, elem: DataType): DataFrame =
-    frame(rows(seed, 200, Nil), elem).coalesce(1)
+    frame(rows(seed, 200, Nil), elem).repartition(7)
 
-  test("centroids == posexplode + avg per (group, pos) + collect_list, one partition") {
+  test("centroids == posexplode + exact mean per (group, pos) + collect_list, seven partitions") {
     for (elem <- ElemTypes) {
       // group 9: only the null and the empty vector; null key: three rows
       val space = grouped(15, elem).withColumn("g",
@@ -285,9 +285,7 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       vecRow(20008L, boxed(1.0, 1.0)), vecRow(20007L, boxed(2.0, 2.0)), // null label
       vecRow(20010L, boxed(9.0)), vecRow(20012L, boxed(8.0))) // label 14: old slice only
     for (elem <- ElemTypes) {
-      val space = grouped(16, elem).where(col("vec_id") =!= 10001L) // NaN: the decimal cast throws
-        .unionByName(frame(extra, elem))
-        .coalesce(1)
+      val space = grouped(16, elem).unionByName(frame(extra, elem)).repartition(7)
         .withColumn("label",
           when(col("vec_id") < 20000L, pmod(col("vec_id"), lit(3L)))
             .when(col("vec_id") < 20002L, lit(11L)).when(col("vec_id") < 20005L, lit(12L))
@@ -438,11 +436,19 @@ class CentroidKernelSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   */
 object DeclarativeCentroids {
 
+  /** The exact mean of graft.plans.VectorMean: `sum(t).cast("double") /
+    * count(t)`, t = `round(x, 12).cast("decimal(38,12)")`.
+    */
+  def exactMean(x: Column): Column = {
+    val t = round(x.cast("double"), 12).cast("decimal(38,12)")
+    sum(t).cast("double") / count(t)
+  }
+
   def centroids(space: DataFrame, groupCol: String, vecCol: String): DataFrame =
     space
       .select(col(groupCol).as("centroid_id"), posexplode(col(vecCol)).as(Seq("pos", "v")))
       .groupBy(col("centroid_id"), col("pos"))
-      .agg(avg(col("v")).as("c"))
+      .agg(exactMean(col("v")).as("c"))
       .groupBy(col("centroid_id"))
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
       .select(col("centroid_id"), transform(col("pc"), _.getField("c")).as("centroid"))
@@ -451,7 +457,7 @@ object DeclarativeCentroids {
     val base = space
       .select(col(groupCol).as("label"), oldSide.as("is_old"), posexplode(col(vecCol)).as(Seq("pos", "xf")))
       .select(col("label"), col("is_old"), col("pos"), col("xf").cast("double").as("x"))
-    val means = base.groupBy(col("label"), col("is_old"), col("pos")).agg(avg(col("x")).as("m"))
+    val means = base.groupBy(col("label"), col("is_old"), col("pos")).agg(exactMean(col("x")).as("m"))
     val o = means.where(col("is_old")).select(col("label"), col("pos"), col("m").as("mo"))
     val n = means.where(!col("is_old")).select(col("label"), col("pos"), col("m").as("mn"))
     val counts = space.groupBy(col(groupCol).as("label")).agg(

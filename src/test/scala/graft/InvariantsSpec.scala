@@ -58,6 +58,22 @@ class InvariantsSpec extends AnyFunSuite {
       .foreach(name => assert(!fresh.catalog.functionExists(name), name))
   }
 
+  test("no JVM-wide memo in the main sources: nothing timed outlives drain()") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: no $root")
+    val memo = """ConcurrentHashMap|computeIfAbsent|TrieMap|@volatile\s+var""".r
+    val walk = Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.flatMap { (p: Path) =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if memo.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      } finally walk.close()
+    assert(hits.isEmpty, s"JVM-wide memo state in main sources:\n${hits.mkString("\n")}")
+  }
+
   test("seqPack invariant: random corpora always pack into a gapless stream cover") {
     val rnd = new Random(42)
     for (trial <- 1 to 5) {

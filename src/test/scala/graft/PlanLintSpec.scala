@@ -93,7 +93,8 @@ class PlanLintSpec extends AnyFunSuite
     val fits = Map(
       "pcaWhitening" -> Quantization.momentsPlan(emb, "embedding", "embedding", 64),
       "kmeansCodebook M-step" -> Similarity.kmeansStep(emb, "vec_id", "embedding", cents),
-      "pqCodebooks M-step" -> Quantization.pqStep(emb, "embedding", codebook, 8))
+      "pqCodebooks M-step" -> Quantization.pqStep(emb, "embedding", codebook, 8),
+      "oodScores distances" -> Similarity.oodDistances(emb, "vec_id", "embedding"))
     for ((name, df) <- fits)
       assert(vectorGenerates(df).isEmpty, s"$name explodes vector elements:\n${df.queryExecution.optimizedPlan}")
   }

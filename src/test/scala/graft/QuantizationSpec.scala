@@ -576,6 +576,27 @@ class QuantizationSpec extends AnyFunSuite {
     assert(bits(one) == bits(seven))
   }
 
+  test("kmeans, PQ, OPQ, drift and OOD fits are bit-identical however the rows are partitioned") {
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case s: scala.collection.Seq[_] => s.map(bits)
+      case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
+      case other => other
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(bits).toSet
+    def fits(space: org.apache.spark.sql.DataFrame): Map[String, Any] = Map(
+      "kmeansCodebook" -> rows(Similarity.kmeansCodebook(space, "vec_id", "embedding", k = 8, iterations = 3)),
+      "pqCodebooks" -> rows(Quantization.pqCodebooks(space, "vec_id", "embedding",
+        m = 16, dims = 64, ksub = 8, iterations = 2)),
+      "opqRotation" -> bits(Quantization.opqRotation(space, "vec_id", "embedding",
+        m = 16, dims = 64, ksub = 8, pqIterations = 2, opqIterations = 2)),
+      "centroidDrift" -> rows(Similarity.centroidDrift(space, "vec_id", "embedding", "label",
+        col("vec_id") % 3 === 0)),
+      "oodScores" -> rows(Similarity.oodScores(space, "vec_id", "embedding", pctOod = 5)))
+    val (one, seven) = (fits(emb.repartition(1)), fits(emb.repartition(7)))
+    for (name <- one.keys) assert(one(name) == seven(name), s"$name differs")
+  }
+
   private def pcaInput(vectors: Seq[Seq[java.lang.Double]]) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -355,6 +355,44 @@ class SimilaritySpec extends AnyFunSuite {
     assert(out.values.forall(_._1 > 0L))
   }
 
+  test("oodScores == the posexplode + broadcast-join form it replaced, ragged, on 1 and 7 partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(11)
+    def f(x: Double): java.lang.Float = java.lang.Float.valueOf(x.toFloat)
+    val rows = (1L to 60L).map { i =>
+      val v = Seq.fill(1 + rnd.nextInt(6))(f(rnd.nextGaussian() * 2 - 0.5))
+      Row(i, if (i % 13 == 0) null else if (i % 7 == 0) v.updated(0, null) else v)
+    } ++ Seq(
+      Row(100L, Seq.empty[java.lang.Float]),
+      Row(101L, Seq[java.lang.Float](null, null)),
+      // position 7 has no non-null element: a null mean
+      Row(102L, Seq(f(1), f(2), f(3), f(4), f(5), f(6), null)))
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    val space = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    // the replaced form: a row per element, the per-dim means broadcast
+    // back, a shuffle per vector
+    val comp = space.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("vm", floor(col("v").cast("double") * 1000000.0).cast("long") + 1000000L)
+    val perDim = comp.groupBy(col("pos")).agg(sum(col("vm")).as("s"), count(lit(1)).as("n"))
+      .select(col("pos"), expr("s div n").as("mm"))
+    val d2 = comp.join(broadcast(perDim), "pos")
+      .withColumn("dd", (col("vm") - col("mm")) * (col("vm") - col("mm")))
+      .groupBy(col("vec_id")).agg(sum(col("dd")).as("d2"))
+    val (numbered, total) =
+      graft.operators.FeatureStore.globalRowNumbersWithTotal(d2, Seq("d2", "vec_id"))
+    val want = numbered
+      .select(col("vec_id"), col("d2"), (col("row_number") > total - total * 10 / 100).as("is_ood"))
+      .collect().toSet
+    assert(want.exists(_.isNullAt(1)) && want.count(_.getBoolean(2)) == 5)
+    for (n <- Seq(1, 7)) {
+      val got = graft.operators.Similarity.oodScores(space.repartition(n), "vec_id", "embedding", pctOod = 10)
+      assert(got.collect().toSet == want, s"$n partitions")
+    }
+  }
+
   test("rangeSearch: exactly the vectors inside the radius, boundary-exact at 6dp") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

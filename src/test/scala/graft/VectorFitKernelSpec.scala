@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.DeclarativeCentroids.exactMean
 import graft.functions.VectorFunctions
 import graft.operators.{Quantization, Similarity}
 import graft.plans.{CentroidTable, PqCodebook}
@@ -21,12 +22,15 @@ import graft.plans.{CentroidTable, PqCodebook}
   *    negative values, rounding ties at the 12th decimal, zeros, NaN and
   *    infinite terms, magnitudes past the 64-bit range of the
   *    fixed-point sum, and the two overflows, with and without ANSI mode;
-  *  - VectorMean against `avg` per (group, position) re-collected in
-  *    position order, on one partition (both then fold rows in the same
-  *    order);
+  *  - VectorMean against the exact mean `sum(t).cast("double") /
+  *    count(t)`, t = `round(x, 12).cast("decimal(38,12)")`, per (group,
+  *    position) re-collected in position order, on ragged input, and
+  *    its overflows, with and without ANSI mode;
   *  - kmeansCodebook and pqCodebooks — driver-side seeds, VectorMean
   *    M-steps, driver-side re-densify — against the window / explode
-  *    Lloyd schedules they replaced, on one partition.
+  *    Lloyd schedules they replaced, with that exact mean as M-step.
+  * The means are exact sums, so every mean and fit is checked on one
+  * partition and on seven.
   */
 class VectorFitKernelSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
@@ -62,6 +66,16 @@ class VectorFitKernelSpec extends AnyFunSuite {
   }
 
   private val ElemTypes = Seq(FloatType, DoubleType)
+
+  private val Layouts: Seq[(String, DataFrame => DataFrame)] =
+    Seq("coalesce(1)" -> (_.coalesce(1)), "repartition(7)" -> (_.repartition(7)))
+
+  /** Per (group, position) exact means, re-collected in position order. */
+  private def referenceMean(df: DataFrame, g: String): DataFrame = df
+    .select(col(g), posexplode(col("v")).as(Seq("pos", "x")))
+    .groupBy(col(g), col("pos")).agg(exactMean(col("x")).as("c"))
+    .groupBy(col(g)).agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
+    .select(col(g), transform(col("pc"), _.getField("c")).as("mean"))
 
   /** Well-formed moments inputs, each kept to one magnitude so that a
     * one-unit (1e-12) difference in a cell still shows in its double:
@@ -187,19 +201,42 @@ class VectorFitKernelSpec extends AnyFunSuite {
     random ++ edges
   }
 
-  test("VectorMean == avg per (group, position) + array_sort(collect_list), one partition") {
-    for (elem <- ElemTypes) {
-      val df = frame(meanRows(2), elem).coalesce(1).withColumn("g", pmod(col("vec_id"), lit(5)))
-      val reference = df
-        .select(col("g"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("g"), col("pos")).agg(avg(col("x")).as("c"))
-        .groupBy(col("g")).agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(col("g"), transform(col("pc"), _.getField("c")).as("mean"))
+  test("VectorMean == exact decimal mean per (group, position), one partition and seven") {
+    for (elem <- ElemTypes; (layout, lay) <- Layouts) {
+      val df = lay(frame(meanRows(2), elem)).withColumn("g", pmod(col("vec_id"), lit(5)))
       val kernel = df.groupBy(col("g")).agg(VectorFunctions.vectorMean(col("v")).as("mean"))
         .where(col("mean").isNotNull)
-      assertSame(keyed(kernel), keyed(reference), s"mean $elem")
+      assertSame(keyed(kernel), keyed(referenceMean(df, "g")), s"mean $elem $layout")
       assert(!keyed(kernel).contains(3L), "an all-null group has no row")
     }
+  }
+
+  test("VectorMean overflows where the decimal sum does: ANSI error, else null or skipped") {
+    def rows(vs: Seq[Double]*) =
+      frame(vs.zipWithIndex.map { case (v, i) => (i.toLong, boxed(v: _*)) }, DoubleType)
+        .withColumn("g", lit(0))
+    // position 0's running sum passes 10^26; 2e26 does not fit
+    // decimal(38,12) as one term
+    val cases = Seq(
+      (rows(Seq(6e25, 1.0), Seq(6e25, 2.0)), "ARITHMETIC_OVERFLOW"),
+      (rows(Seq(1.0, 2e26), Seq(3.0, 4.0)), "NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION"))
+    def kernel(df: DataFrame) = keyed(df.groupBy(col("g")).agg(VectorFunctions.vectorMean(col("v"))))
+    for ((df, want) <- cases) {
+      def condition(f: => Any) = intercept[ArithmeticException](f) match {
+        case e: SparkThrowable => e.getCondition
+        case e => fail(s"not a Spark error: $e")
+      }
+      val (k, r) = (condition(kernel(df)), condition(keyed(referenceMean(df, "g"))))
+      assert(k == want && r == want, s"kernel $k, reference $r")
+    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val Seq(sumOverflow, termSkipped) = cases.map(c => kernel(c._1))
+      for ((df, _) <- cases) assertSame(kernel(df), keyed(referenceMean(df, "g")), "without ANSI")
+      assert(sumOverflow == Map(0 -> List(List(null, 1.5).map(bits))))
+      assert(termSkipped == Map(0 -> List(List(2.0, 4.0).map(bits))))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   /** Lloyd input: random rows, an exact duplicate of the first seed (its
@@ -220,7 +257,7 @@ class VectorFitKernelSpec extends AnyFunSuite {
   }
 
   /** The replaced kmeansCodebook: window-numbered seeds, posexplode +
-    * avg per (cell, pos) + array_sort(collect_list) per iteration.
+    * exact mean per (cell, pos) + array_sort(collect_list) per iteration.
     */
   private def referenceKmeans(space: DataFrame, k: Int, iterations: Int): DataFrame = {
     val keyed = space.select(col("vec_id"), col("v"))
@@ -233,26 +270,26 @@ class VectorFitKernelSpec extends AnyFunSuite {
       val table = CentroidTable.collect(cents, "centroid_id", "centroid")
       cents = Similarity.nearestCentroidWithVec(keyed, "vec_id", "v", table)
         .select(col("assigned").as("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("centroid_id"), col("pos")).agg(avg(col("x")).as("c"))
+        .groupBy(col("centroid_id"), col("pos")).agg(exactMean(col("x")).as("c"))
         .groupBy(col("centroid_id")).agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
         .select(col("centroid_id"), transform(col("pc"), _.getField("c")).as("centroid"))
     }
     cents
   }
 
-  test("kmeansCodebook == window seeds + posexplode/avg Lloyd, one partition") {
-    for (elem <- ElemTypes; iterations <- Seq(0, 1, 3)) {
+  test("kmeansCodebook == window seeds + posexplode/exact-mean Lloyd, one partition and seven") {
+    for (elem <- ElemTypes; iterations <- Seq(0, 1, 3); (layout, lay) <- Layouts) {
       // null seeds: a null centroid scores null and never wins an argmax
-      val space = frame(lloydRows(3, (3L, 4L)), elem).coalesce(1)
+      val space = lay(frame(lloydRows(3, (3L, 4L)), elem))
       assertSame(
         keyed(Similarity.kmeansCodebook(space, "vec_id", "v", k = 5, iterations)),
-        keyed(referenceKmeans(space, 5, iterations)), s"kmeans $elem x$iterations")
+        keyed(referenceKmeans(space, 5, iterations)), s"kmeans $elem x$iterations $layout")
     }
   }
 
   /** The replaced pqCodebooks: seed keys joined to the posexploded
     * subvectors and numbered by a window per subspace, posexplode +
-    * avg per (subspace, cell, pos) per iteration, and a final
+    * exact mean per (subspace, cell, pos) per iteration, and a final
     * row_number re-densify per subspace.
     */
   private def referencePq(space: DataFrame, ksub: Int, iterations: Int): DataFrame = {
@@ -271,7 +308,7 @@ class VectorFitKernelSpec extends AnyFunSuite {
         .select(col("subspace"), col("cell"),
           posexplode(transform(slice(col("v"), col("subspace") * Dsub + 1, lit(Dsub)), _.cast("double")))
             .as(Seq("pos", "x")))
-        .groupBy(col("subspace"), col("cell"), col("pos")).agg(avg(col("x")).as("c"))
+        .groupBy(col("subspace"), col("cell"), col("pos")).agg(exactMean(col("x")).as("c"))
         .groupBy(col("subspace"), col("cell"))
         .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
         .select(col("subspace"), col("cell").as("centroid_id"), transform(col("pc"), _.getField("c")).as("centroid"))
@@ -283,14 +320,14 @@ class VectorFitKernelSpec extends AnyFunSuite {
   private def byCell(df: DataFrame): DataFrame =
     df.select(struct(col("subspace"), col("centroid_id")).as("key"), col("centroid"))
 
-  test("pqCodebooks == window seeds + posexplode/avg Lloyd + window re-densify, one partition") {
-    for (elem <- ElemTypes; iterations <- Seq(0, 1, 2)) {
+  test("pqCodebooks == window seeds + posexplode/exact-mean Lloyd + window re-densify, one partition and seven") {
+    for (elem <- ElemTypes; iterations <- Seq(0, 1, 2); (layout, lay) <- Layouts) {
       // null parts stay out of the seeds: a null sub-centroid would win
       // every L2 argmin, so every code would be the same
-      val space = frame(lloydRows(4, (10000L, 10001L)), elem).coalesce(1)
+      val space = lay(frame(lloydRows(4, (10000L, 10001L)), elem))
       val got = Quantization.pqCodebooks(space, "vec_id", "v", M, Dims, ksub = 6, iterations)
       assertSame(keyed(byCell(got)), keyed(byCell(referencePq(space, 6, iterations))),
-        s"pq $elem x$iterations")
+        s"pq $elem x$iterations $layout")
       if (iterations > 0) {
         // the duplicated seed's cell emptied: ids were re-densified
         val ids = got.where(col("subspace") === 0).collect().map(_.getInt(1)).sorted.toSeq

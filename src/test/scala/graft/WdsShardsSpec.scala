@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.WdsShards
@@ -75,8 +77,16 @@ class WdsShardsSpec extends AnyFunSuite {
   test("exportStats: division packing, parsed-byte stats, payload fidelity on real docs") {
     // small target so sf0.001's docs split into several shards
     val target = 64L * 1024
+    def wdsTemps() = {
+      val list = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try list.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("graft_wds_")).toSet
+      finally list.close()
+    }
+    val before = wdsTemps()
     val stats = WdsShards.exportStats(docs, "doc_id", "text", "lang", target)
       .collect().sortBy(_.getLong(0))
+    // without keepDir every shard file is task-local and deleted
+    assert(wdsTemps() -- before == Set.empty)
     assert(stats.nonEmpty && stats.forall(_.getBoolean(7)), "payload_ok must hold")
     // shard ids are the dense division-packing sequence 0..n-1
     assert(stats.map(_.getLong(0)).toSeq == stats.indices.map(_.toLong))
