@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries build → parquet,
   * plus every query's oracle in oracle_sql.json, for the driver's
@@ -12,11 +11,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(SparkEntry.requireKnown(args(2).split(",").toSeq).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val n = Bench.cpus
+    val spark = GraftSession.builder(Some(s"local[$n]"), n)
       // Per-process warehouse: bucketed-table queries DROP/recreate
       // their tables, so two concurrent JVMs (e.g. Verify + the test
       // suite) sharing one dir race each other's catalogs.
@@ -24,7 +20,6 @@ object Verify {
         "spark.sql.warehouse.dir",
         System.getProperty("java.io.tmpdir") +
           s"/graft_warehouse_${ProcessHandle.current().pid()}")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -31,12 +31,12 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** MinHash + LSH banding: signature of `bands*rowsPerBand` hashes,
-    * band hash = xxhash64 over its rows; docs sharing any band hash are
+    * band hash = md5 over its rows; docs sharing any band hash are
     * candidates. Returns distinct candidate pairs (a < b) with the
     * number of matching bands.
     *
     * Shape: explode shingles once, then ONE groupBy(doc) carrying all
-    * numHashes `min(xxhash64(seed, sh))` aggregates — each is a plain
+    * numHashes md5-lane `min` aggregates — each is a plain
     * codegen'd aggregate with map-side partial combine, and the
     * aggregation is a real pipeline boundary (a projected signature
     * array would be re-inlined into every consumer by CollapseProject
@@ -50,10 +50,10 @@ object Dedup {
       textCol: String,
       shingleWidth: Int = 3,
       bands: Int = 4,
-      rowsPerBand: Int = 4,
-      portableHashes: Boolean = false
+      rowsPerBand: Int = 4
   ): DataFrame = {
     val numHashes = bands * rowsPerBand
+    require(numHashes % 2 == 0, "minhashLsh needs an even bands*rowsPerBand")
     // NOTE on parallelism: a pre-explode repartition(doc_id) was
     // A/B-measured here and REVERTED — it broke AQE's runtime exchange
     // reuse of the banded self-join subtree and roughly doubled wall
@@ -63,28 +63,21 @@ object Dedup {
     val shing = docs.select(
       col(idCol).as("doc_id"),
       explode(array_distinct(shingles(col(textCol), shingleWidth))).as("sh"))
-    // portableHashes: seed-g hash = md5(g || ':' || shingle), SPLIT into
-    // its two 64-bit hex halves so one md5 evaluation feeds two
-    // signature lanes (halves the per-shingle hashing work). Fixed-width
-    // lowercase hex min-compares exactly like the underlying 64-bit
-    // value, and any engine with md5 (the DuckDB oracle included)
-    // rebuilds the identical signature. The xxhash64 default is the
-    // cheaper codegen'd prod path.
-    val sigAggs: Seq[Column] =
-      if (portableHashes) {
-        require(numHashes % 2 == 0, "portable mode needs an even bands*rowsPerBand")
-        (0 until numHashes / 2).flatMap { g =>
-          val full = md5(concat(lit(s"$g:"), col("sh")))
-          Seq(min(substring(full, 1, 16)), min(substring(full, 17, 16)))
-        }
-      } else (0 until numHashes).map(i => min(xxhash64(lit(i), col("sh"))))
+    // Seed-g hash = md5(g || ':' || shingle), SPLIT into its two 64-bit
+    // hex halves so one md5 evaluation feeds two signature lanes (halves
+    // the per-shingle hashing work). Fixed-width lowercase hex
+    // min-compares exactly like the underlying 64-bit value, and any
+    // engine with md5 (the DuckDB oracle included) rebuilds the
+    // identical signature.
+    val sigAggs: Seq[Column] = (0 until numHashes / 2).flatMap { g =>
+      val full = md5(concat(lit(s"$g:"), col("sh")))
+      Seq(min(substring(full, 1, 16)), min(substring(full, 17, 16)))
+    }
     val sig = shing
       .groupBy(col("doc_id"))
       .agg(array(sigAggs: _*).as("sig"))
-    val bandHash: Int => Column =
-      if (portableHashes)
-        b => md5(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-      else b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
+    def bandHash(b: Int): Column =
+      md5(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
     // Both self-join sides consume `banded`; the static plan shows two
     // copies of the scan->aggregate subtree, but AQE's runtime exchange
     // reuse dedupes them (verified: pinning with localCheckpoint does
@@ -109,12 +102,12 @@ object Dedup {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** Native-kernel variant of [[minhashLsh]]'s portable mode: the whole
+  /** Native-kernel variant of [[minhashLsh]]: the whole
     * md5 sketch (all lanes + band folding) is one projected
     * graft_minhash_bands column (graft.plans.MinHashBands) feeding
     * posexplode — no shingle explode, no 16-aggregate groupBy, no
     * sketch shuffle. Output is bit-identical to
-    * `minhashLsh(..., portableHashes = true)` (spec-checked), so the
+    * `minhashLsh` (spec-checked), so the
     * same external SQL oracle applies. The sketch pass is a pure scan —
     * the shape that matters at 100 TB, where the explode+aggregate
     * formulation pays a corpus-sized shuffle before the first bucket.
@@ -535,17 +528,15 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      maxHamming: Int = 3,
-      portableHashes: Boolean = false
+      maxHamming: Int = 3
   ): DataFrame = {
     // Band count is DERIVED from maxHamming: a pair within hamming
     // distance d differs in at most d bands, so d+1 bands guarantee at
     // least one exactly-matching band (pigeonhole) — exact candidate
     // recall for the requested radius, whatever the caller passes.
-    // portableHashes: 60-bit md5-derived token hashes (see md5Long60)
-    // so an external SQL oracle rebuilds the identical sketch; default
-    // is 64-bit xxhash64 (cheaper, Spark-only).
-    val nBits = if (portableHashes) 60 else 64
+    // 60-bit md5-derived token hashes (see md5Long60), so an external
+    // SQL oracle rebuilds the identical sketch.
+    val nBits = 60
     val nBands = maxHamming + 1
     require(nBands <= nBits, s"maxHamming=$maxHamming needs $nBands bands over $nBits bits")
     val base = nBits / nBands
@@ -554,11 +545,9 @@ object Dedup {
     val bandOffsets = widths.scanLeft(0)(_ + _).init
     // Same explode->aggregate shape as minhashLsh: one codegen'd pass,
     // nBits bit-counter sums with map-side combine.
-    val hashCol =
-      if (portableHashes) md5Long60(col("tok")) else xxhash64(col("tok"))
     val toks = docs
       .select(col(idCol).as("doc_id"), explode(distinctTokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), hashCol.as("h"))
+      .select(col("doc_id"), md5Long60(col("tok")).as("h"))
     val bitSums = (0 until nBits).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$i")
     }
@@ -570,17 +559,12 @@ object Dedup {
         (0 until nBits)
           .map(i => when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
           .reduce((a, b) => a.bitwiseOR(b)).as("sh"))
-    // Long shifts are mod 64, so a 64-wide band (maxHamming=0, non-
-    // portable) needs the explicit all-ones mask: (1L << 64) - 1 == 0
-    // would collapse every band hash to 0 and degenerate LSH to an
-    // all-pairs self-join.
-    def bandMask(width: Int): Long = if (width >= 64) -1L else (1L << width) - 1
     val banded = sh.select(
       col("doc_id"),
       col("sh"),
       posexplode(
         array((0 until nBands).map(b =>
-          shiftright(col("sh"), bandOffsets(b)).bitwiseAND(bandMask(widths(b)))): _*)
+          shiftright(col("sh"), bandOffsets(b)).bitwiseAND((1L << widths(b)) - 1)): _*)
       ).as(Seq("band", "bh")))
     val a = banded.select(col("band"), col("bh"), col("doc_id").as("a"), col("sh").as("sha"))
     val b = banded.select(col("band"), col("bh"), col("doc_id").as("b"), col("sh").as("shb"))

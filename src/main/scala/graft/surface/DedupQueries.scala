@@ -208,9 +208,8 @@ object DedupQueries {
       SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
       FROM documents GROUP BY md5(text)"""),
     // Native one-pass md5 sketch kernel (graft.plans.MinHashBands) —
-    // bit-identical to minhashLsh(portableHashes = true), so the DuckDB
-    // oracle rebuilds the full LSH pipeline hash-for-hash. (xxhash64
-    // stays the prod-default hash for Spark-only deployments.)
+    // bit-identical to minhashLsh, so the DuckDB oracle rebuilds the
+    // full LSH pipeline hash-for-hash.
     "dedup_minhash_lsh" -> Query((s, dir) =>
       Dedup.minhashLshNative(t(s, dir, "documents"), "doc_id", "text"), minhashOracleSql),
     // Filter+verify record linkage: LSH candidates verified by exact
@@ -239,7 +238,7 @@ object DedupQueries {
     // (pigeonhole); see Dedup.simhashNearDups.
     "dedup_simhash" -> Query((s, dir) =>
       Dedup.simhashNearDups(
-        t(s, dir, "documents"), "doc_id", "text", maxHamming = 3, portableHashes = true),
+        t(s, dir, "documents"), "doc_id", "text", maxHamming = 3),
       simhashOracleSql),
     // The pairwise verifies run with the candidate-budget circuit
     // breaker armed (Dedup.guardBudget): on a duplication-heavy corpus

@@ -291,19 +291,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("portable md5 sketch modes agree with the xxhash modes on verdicts") {
-    // Different hash families -> different buckets, but the semantic
-    // verdicts (exact dups pair up; unrelated docs don't) must hold in
-    // both modes, and simhash(identical docs) is hamming 0 in both.
-    val mh = Dedup.minhashLsh(docs, "doc_id", "text", portableHashes = true)
-      .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
-    assert(mh.contains((1L, 2L)) && !mh.exists(p => p._1 == 4L || p._2 == 4L))
-    val sh = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3, portableHashes = true)
-      .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("hamming"))
-      .toMap
-    assert(sh((1L, 2L)) == 0L)
-  }
-
   test("native one-pass simhash equals the declarative HOF sketch") {
     import org.apache.spark.sql.functions.col
     val corpus = sources.Tables.load(spark, GraftTestSession.Sf0001, "documents")
@@ -338,7 +325,7 @@ class DedupSpec extends AnyFunSuite {
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands")
     val declarative = Dedup
-      .minhashLsh(corpus, "doc_id", "text", portableHashes = true)
+      .minhashLsh(corpus, "doc_id", "text")
       .collect().map(key).toMap
     val native = Dedup
       .minhashLshNative(corpus, "doc_id", "text")
@@ -353,7 +340,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "z y x w v u"))
       .toDF("doc_id", "text")
     val declarative = Dedup
-      .minhashLsh(docs, "doc_id", "text", bands = 11, rowsPerBand = 2, portableHashes = true)
+      .minhashLsh(docs, "doc_id", "text", bands = 11, rowsPerBand = 2)
       .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")) -> r.getAs[Long]("n_bands"))
       .toMap
     val native = Dedup
@@ -412,14 +399,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash band derivation guarantees candidate recall up to maxHamming") {
-    // maxHamming = 7 must derive 8 bands (pigeonhole), in both bit widths.
-    for (portable <- Seq(true, false)) {
-      val out = Dedup.simhashNearDups(docs, "doc_id", "text",
-        maxHamming = 7, portableHashes = portable)
-      // (1,2) identical -> present regardless of banding
-      val pairs = out.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
-      assert(pairs.contains((1L, 2L)))
-    }
+    // maxHamming = 7 must derive 8 bands (pigeonhole) over the 60 bits
+    val out = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 7)
+    // (1,2) identical -> present regardless of banding
+    val pairs = out.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
+    assert(pairs.contains((1L, 2L)))
   }
 
   test("incremental CC: star edges from stored labels + delta pairs = full recompute") {
