@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.{Collections, IdentityHashMap}
 
 import scala.reflect.ClassTag
 
@@ -9,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{FileSourceScanLike, FormattedMode, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.execution.window.WindowExec
@@ -17,12 +19,13 @@ import org.apache.spark.sql.execution.window.WindowExec
   *
   *   runMain graft.Explain <sfDir> [<out> [<query>...]]
   *
-  * With no query names it writes the plan ledger (default `PLANS.tsv`):
-  * one `name<TAB>fingerprint` line per registered query, sorted by
-  * name. `PlanLedgerSpec` rebuilds it on the sf0.001 corpus and fails
-  * on any difference, so a plan change shows up as a one-line diff in
-  * the change that caused it. With query names it writes those
-  * queries' full `explain(formatted)` text instead.
+  * With no query names it writes the plan ledger (default
+  * `LedgerFile`, PLANS.tsv): one `name<TAB>fingerprint` line per
+  * registered query, sorted by name. `PlanLedgerSpec` rebuilds it on
+  * the sf0.001 corpus and fails on any difference, so a plan change
+  * shows up as a one-line diff in the change that caused it. With
+  * query names it writes those queries' full `explain(formatted)` text
+  * instead.
   */
 object Explain {
 
@@ -32,8 +35,12 @@ object Explain {
     */
   val Cores = 4
 
+  /** The committed ledger, relative to the repo root. */
+  val LedgerFile = "PLANS.tsv"
+
   /** An id-free structural summary of one query's unexecuted physical
-    * plan, read from AQE's initial plan with its subqueries.
+    * plan, read from AQE's initial plan with its subqueries and, under
+    * each persisted frame's `InMemoryTableScan`, the cached plan.
     * `windowGlobal` counts windows with an empty partition spec;
     * `aggPartial` counts map-side aggregates (no required child
     * distribution), `aggFinal` the rest; `pushedScans` counts scans
@@ -51,9 +58,18 @@ object Explain {
         s"pushed_scans=$pushedScans native=${natives.mkString(",")}"
   }
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.initialPlan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+  /** The plan's nodes. A persisted frame's cached plan is walked at its
+    * first scan only: its work runs once however many scans read it.
+    */
+  private def nodes(root: SparkPlan): Seq[SparkPlan] = {
+    val cached = Collections.newSetFromMap(new IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case m: InMemoryTableScanExec if cached.add(m.relation.cachedPlan) =>
+        m +: walk(m.relation.cachedPlan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(walk)
+    }
+    walk(root)
   }
 
   def fingerprint(df: DataFrame): Fingerprint = {
@@ -95,7 +111,7 @@ object Explain {
     require(args.nonEmpty, "usage: graft.Explain <sfDir> [<out> [<query>...]]")
     val sfDir = args(0)
     val named = SparkEntry.requireKnown(args.drop(2).toSeq)
-    val out = if (args.length > 1) args(1) else "PLANS.tsv"
+    val out = if (args.length > 1) args(1) else LedgerFile
     val spark = Bench.session(Cores)
     val text =
       if (named.isEmpty)

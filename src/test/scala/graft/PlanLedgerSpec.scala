@@ -22,14 +22,15 @@ class PlanLedgerSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
 
   private lazy val ledger = {
-    // pins and cached tables left by earlier suites would change plans
-    Bench.drain(spark)
+    // a frame that an earlier suite left cached would plan as a cache
+    // scan; pins (LogicalRDD leaves) are built per query, so they stay
+    spark.catalog.clearCache()
     Explain.ledger(spark, GraftTestSession.Sf0001)
   }
 
   test("PLANS.tsv holds every query's current plan fingerprint") {
     val fresh = Explain.render(ledger)
-    val committed = Files.readAllLines(Paths.get("PLANS.tsv")).asScala.toSeq
+    val committed = Files.readAllLines(Paths.get(Explain.LedgerFile)).asScala.toSeq
     def byName(lines: Seq[String]) = lines.map(l => l.takeWhile(_ != '\t') -> l).toMap
     val (was, now) = (byName(committed), byName(fresh))
     val diff = (was.keySet ++ now.keySet).toSeq.sorted.filter(n => was.get(n) != now.get(n))
@@ -37,7 +38,7 @@ class PlanLedgerSpec extends AnyFunSuite {
         s"+ ${now.getOrElse(n, s"$n (not a registered query)")}"))
     // fail, not assert: the message is the changed lines, not both files
     if (committed != fresh)
-      fail(s"PLANS.tsv is stale (or unsorted):\n${diff.mkString("\n")}\n" +
+      fail(s"${Explain.LedgerFile} is stale (or unsorted):\n${diff.mkString("\n")}\n" +
         s"regenerate: sbt \"runMain graft.Explain ${GraftTestSession.Sf0001}\"")
   }
 
@@ -49,5 +50,14 @@ class PlanLedgerSpec extends AnyFunSuite {
         "ScalaUDF" -> fp.scalaUdf).collect { case (what, n) if n > 0 => s"$name: $n $what" }
     }
     assert(offenders.isEmpty, s"scale-unsafe plans:\n${offenders.mkString("\n")}")
+  }
+
+  test("the fingerprint sees through a persisted frame") {
+    // a persisted subtree plans as one InMemoryTableScan leaf; the
+    // guard above must still count a cartesian product planned inside
+    val cross = spark.range(4).hint("shuffle_replicate_nl")
+      .crossJoin(spark.range(4).toDF("j")).persist()
+    try assert(Explain.fingerprint(cross.where("id < j")).cartesian == 1)
+    finally cross.unpersist(blocking = true)
   }
 }
